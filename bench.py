@@ -1,12 +1,13 @@
 """Benchmark harness (driver contract): runs the headline queries at
 
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line
+``local[$SPARK_GRAFT_CPUS]`` (default: the usable host cores) and prints
+ONE JSON line
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
 — where ``queries`` holds the 30 slowest headline timings so the line
 always fits the driver's 2,000-char stdout tail intact; the FULL registry
 (every ``queries()`` entry, headline best-of-2 + the rest timed once) is
-written to ``BENCH_DETAIL_r{N}.json`` in the repo.  Set
+written to ``BENCH_DETAIL_r{N}_c{cores}.json`` in the repo.  Set
 ``SPARK_GRAFT_BENCH_FULL=0`` to skip the non-headline tier.
 
 Each query executes to completion via the no-op sink (full compute, no
@@ -460,13 +461,12 @@ def main() -> None:
             n = (max(bench_rounds) if bench_rounds else 0) + 1
         detail_payload["round_inferred"] = n
     # non-default scale runs (e.g. the sf1 10x sweep) get their own file
-    # so they never clobber the driver-scale detail; same for non-default
-    # core counts (VERDICT r11 item 5: the driver's 8-core scaling run
-    # keyed to the same filename and overwrote the 32-core artifact)
+    # so they never clobber the driver-scale detail; every run is tagged
+    # with the cores the live context really has (VERDICT r11 item 5: an
+    # 8-core scaling run keyed to the same filename and overwrote another
+    # core count's artifact)
     tag = "" if abs(sf - 0.1) < 1e-9 else f"_sf{sf:g}"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if cpus != "32":
-        tag += f"_c{cpus}"
+    tag += f"_c{spark.sparkContext.defaultParallelism}"
     detail = os.path.join(repo, f"BENCH_DETAIL_r{n:02d}{tag}.json")
     try:
         with open(detail, "w") as fh:

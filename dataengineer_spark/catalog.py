@@ -17,7 +17,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from dataengineer_spark.tuning import lineage_cut
+from dataengineer_spark.tuning import lineage_cut, sql_literal
 
 
 from dataengineer_spark import schemas as S
@@ -609,11 +609,9 @@ class Catalog:
         # manifest as one parsed VALUES literal: createDataFrame routes a
         # 5-row local frame through parallelize + Python serialization
         # (~0.3 s per call); the SQL literal is a single parser trip.
-        # Names are caller strings — escape the one character ('') that
-        # a SQL single-quoted literal interprets.
+        # Names are caller strings — sql_literal escapes them.
         vals = ", ".join(
-            "('{}', CAST({} AS BIGINT))".format(str(r).replace("'", "''"), int(v))
-            for r, v in rows
+            f"({sql_literal(str(r))}, CAST({int(v)} AS BIGINT))" for r, v in rows
         )
         return self.spark.sql(f"SELECT col1 AS rule, col2 AS n FROM (VALUES {vals})")
 

@@ -5,6 +5,15 @@ task (reference Dockerfile:14-16, SURVEY.md §6); here one SparkSession hosts
 the whole pipeline graph. Defaults are tuned so the same code is correct on
 ``local[N]`` for tests and sane on a multi-executor cluster:
 
+- Shuffle width = cores: a ``local[N]`` session gets
+  ``spark.sql.shuffle.partitions`` = N, and ``local[*]`` (or the default
+  master when ``SPARK_GRAFT_CPUS`` is unset) gets the usable host cores
+  (the process's CPU affinity).  Every shuffle stage is then one wave of
+  tasks; on a small host a wider conf schedules several waves of
+  near-empty tasks per stage, and iterative operators (PageRank rounds,
+  BPE merges, MinHash banding) pay that per round.  A caller's
+  ``extra_conf`` wins; a non-local master keeps the launcher's (or
+  Spark's) width.
 - AQE on (runtime partition coalescing + skew-join splitting) so the static
   ``spark.sql.shuffle.partitions`` choice is a ceiling, not a bet.
 - Arrow on: every pandas UDF / ``toPandas`` boundary is columnar-batched.
@@ -15,11 +24,11 @@ the whole pipeline graph. Defaults are tuned so the same code is correct on
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 _DEFAULTS: dict[str, str] = {
-    "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -51,6 +60,27 @@ _DEFAULTS: dict[str, str] = {
     # (SPARK_GRAFT_DRIVER_MEM is resolved in build_session, at call time —
     # an env var set after import must not be silently ignored.)
 }
+
+
+def host_cores() -> int:
+    """Cores this process may run on (its CPU affinity, not the machine's
+    core count — a container or ``taskset`` narrows it)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def local_cores(master: str) -> int | None:
+    """Task slots of a local master — N for ``local[N]`` /
+    ``local[N,F]``, :func:`host_cores` for ``local[*]``, 1 for ``local``
+    — or None for any other master (cluster sizing is the launcher's)."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?", master.strip())
+    if m is None:
+        return None
+    n = m.group(1)
+    if n is None:
+        return 1
+    return host_cores() if n == "*" else int(n)
 
 
 def _cluster_master_configured() -> bool:
@@ -96,19 +126,28 @@ def build_session(
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    ONLY when no cluster master is configured — on a real cluster the
-    launcher sets ``--master`` (visible as the ``spark.master`` system
-    property) and this argument is left None; forcing local there would
-    silently run the whole job single-node on the driver.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default the
+    usable host cores, :func:`host_cores`) ONLY when no cluster master is
+    configured — on a real cluster the launcher sets ``--master`` (visible
+    as the ``spark.master`` system property) and this argument is left
+    None; forcing local there would silently run the whole job single-node
+    on the driver.
+
+    ``spark.sql.shuffle.partitions`` is the local master's core count
+    (:func:`local_cores`), so each shuffle stage runs as one wave of
+    tasks.  ``extra_conf`` overrides it like any other default; a
+    non-local master (or a live context whose master this call does not
+    choose) is left at its existing width.
     """
     builder = SparkSession.builder.appName(app_name)
+    if master is None and not _cluster_master_configured():
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or host_cores()}]"
+    conf = dict(_DEFAULTS)
     if master is not None:
         builder = builder.master(master)
-    elif not _cluster_master_configured():
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        builder = builder.master(f"local[{cpus}]")
-    conf = dict(_DEFAULTS)
+        cores = local_cores(master)
+        if cores is not None:
+            conf["spark.sql.shuffle.partitions"] = str(cores)
     conf["spark.driver.memory"] = os.environ.get(
         "SPARK_GRAFT_DRIVER_MEM", "8g"
     )

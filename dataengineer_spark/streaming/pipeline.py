@@ -36,15 +36,17 @@ def stream_runtime_session(
       frozen into the checkpoint): stateful operators allocate one state
       store per partition and every micro-batch pays a per-store commit
       (HDFS-backed: delta write + fsync + rename) whatever the store
-      holds — at local bench scale the static session width (32) made
+      holds — at local bench scale a static 32-wide session made
       the stream-stream join's addBatch ~3× slower than an input-sized
       width (measured sf0.1: 2.8 s → 0.9 s).  The width is derived from
-      the SOURCE size — ``clamp(total_bytes / (SPARK_GRAFT_STREAM_STATE_MB
-      =16 MB), floor, session shuffle width)`` — so a corpus-scale lake
-      keeps the launcher-configured width and a small one stops paying
-      32 empty store commits per batch.  Values are partition-count
-      invariant for every operator in this engine (exact aggs, HLL
-      register merges, per-key pandas state), so results are unchanged.
+      the SOURCE size — ``min(session shuffle width, max(floor,
+      total_bytes / (SPARK_GRAFT_STREAM_STATE_MB=16 MB)))`` — so a
+      corpus-scale lake keeps the launcher-configured width, a small one
+      stops paying empty store commits per batch, and the child is never
+      wider than its caller (the floor yields to a narrower session).
+      Values are partition-count invariant for every operator in this
+      engine (exact aggs, HLL register merges, per-key pandas state), so
+      results are unchanged.
     - **no-data micro-batches** (``no_data_batches=False`` skips them):
       availableNow appends a rows=0 finalizing batch whose state
       eviction pass costs like a data batch (measured 2.3 s on the
@@ -80,7 +82,7 @@ def stream_runtime_session(
                 )
     width = session_width
     if sizable and paths:
-        width = max(floor, min(session_width, -(-total // (per_part_mb << 20))))
+        width = min(session_width, max(floor, -(-total // (per_part_mb << 20))))
     child.conf.set("spark.sql.shuffle.partitions", str(int(width)))
     if not no_data_batches:
         child.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataengineer_spark.session import local_cores
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -30,19 +32,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # session's zone — pin UTC, matching the TZ-naive DuckDB oracle and
     # session.build_session's own default.  Runtime-settable, idempotent.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Size shuffle parallelism to the test scale when the session still has
-    # Spark's out-of-the-box 200 (a tuned session is left alone).  Batch
-    # plans mostly coalesce under AQE, but STREAMING state stores don't:
-    # every stateful operator materializes one state store per shuffle
-    # partition, and 200 of them made each gate streaming query ~4× slower.
-    # DELIBERATE session-global seam for the conf-less driver contract; a
-    # session that was intentionally tuned TO 200 is indistinguishable
-    # from the default and gets re-sized — pick any other value (or set
-    # SPARK_GRAFT_CPUS=200) to opt out.
+    # Size shuffle parallelism to the session's cores when it still has
+    # Spark's out-of-the-box 200 (a tuned session is left alone) — the
+    # same rule as session.build_session: a local master's core count, a
+    # non-local master untouched.  Batch plans mostly coalesce under AQE,
+    # but STREAMING state stores don't: every stateful operator
+    # materializes one state store per shuffle partition, and 200 of them
+    # made each gate streaming query ~4× slower.  DELIBERATE
+    # session-global seam for the conf-less driver contract; a session
+    # that was intentionally tuned TO 200 is indistinguishable from the
+    # default and gets re-sized — pick any other value to opt out.
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
+        cores = local_cores(spark.conf.get("spark.master"))
+        if cores is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", str(cores))
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.ts precision varies across testdata generations: µs with

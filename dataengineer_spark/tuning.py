@@ -340,7 +340,7 @@ def array_lit(values) -> "Column":
 
 
 def sql_literal(v) -> str:
-    """Render a Python scalar / (nested) list as a SQL literal string —
+    """Render a Python scalar / string / (nested) list as a SQL literal —
     the parser-side twin of ``F.lit`` / ``F.array``: one JVM parse of the
     returned text builds the identical literal tree that per-element
     ``F.lit`` calls would, minus the py4j round trip per element.  Shared
@@ -357,6 +357,10 @@ def sql_literal(v) -> str:
         # bare integral literal: the parser picks INT when it fits,
         # BIGINT otherwise — same typing as F.lit on a Python int
         return str(v)
+    if isinstance(v, str):
+        # Spark string literals read backslash escapes (\t, \u0041, \'),
+        # so the backslash is escaped FIRST, then the quote
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     f = float(v)
     if f != f:  # NaN: repr 'nan' is not a SQL literal
         return "CAST('NaN' AS DOUBLE)"

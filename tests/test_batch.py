@@ -437,6 +437,26 @@ class TestQuarantineWrite:
         }
         assert manifest["_valid"] == 2  # second append counted cumulatively
 
+    def test_manifest_keeps_rule_names_verbatim(self, spark, catalog):
+        """Rule names reach the VALUES manifest as SQL string literals,
+        where a backslash is an escape: an unescaped ``\\t`` would read
+        back as a tab and a trailing ``\\`` would swallow the closing
+        quote."""
+        from pyspark.sql import functions as F
+
+        from dataengineer_spark.tuning import sql_literal
+
+        names = ["tab\\tname", "trailing\\", "it's", "real\ttab", "\\'"]
+        for n in names:
+            assert spark.sql(f"SELECT {sql_literal(n)} AS s").first()["s"] == n
+        df = spark.createDataFrame([(1, 1.0), (2, -1.0)], "id long, price double")
+        checks = {n: F.col("price") > 0 for n in names}
+        manifest = {
+            r["rule"]: r["n"]
+            for r in catalog.quarantine_write(df, "t3", checks).collect()
+        }
+        assert manifest == {"_valid": 1, "_quarantined": 1, **{n: 1 for n in names}}
+
 
 class TestMergedSchemaScan:
     def test_old_files_null_fill_new_column(self, spark, tmp_path):

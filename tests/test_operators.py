@@ -1011,6 +1011,7 @@ class TestFanOut:
         # fall through to the probe, not trust the buried wide node
         from dataengineer_spark.tuning import fan_out
 
+        prior = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "2")
         try:
             target = spark.sparkContext.defaultParallelism
@@ -1026,7 +1027,7 @@ class TestFanOut:
             out = fan_out(df)
             assert out.rdd.getNumPartitions() >= target
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
+            spark.conf.set("spark.sql.shuffle.partitions", prior)
 
     def test_narrow_below_wide_keeps_fast_path(self, spark):
         # a coalesce BELOW the wide repartition (re-widened afterwards)

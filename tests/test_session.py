@@ -1,0 +1,109 @@
+"""The session's shuffle width is its core count (session.py's width rule).
+
+The build_session checks run in a subprocess: inside pytest's JVM,
+builder.getOrCreate() would reuse the engine-configured session fixture.
+"""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+from dataengineer_spark.session import host_cores, local_cores
+
+ROOT = Path(__file__).resolve().parents[1]
+if str(ROOT) not in sys.path:
+    sys.path.insert(0, str(ROOT))
+
+#: one fresh JVM per case: a stopped context leaves its master and confs
+#: behind in the JVM, and the next getOrCreate would inherit them
+_CASES = {
+    "local_master": (
+        "from dataengineer_spark.session import build_session\n"
+        "s = build_session('w', master='local[2]')",
+        "2",
+    ),
+    "extra_conf_wins": (
+        "from dataengineer_spark.session import build_session\n"
+        "s = build_session('w', master='local[2]',"
+        " extra_conf={'spark.sql.shuffle.partitions': '5'})",
+        "5",
+    ),
+    "default_master": (
+        "from dataengineer_spark.session import build_session\n"
+        "s = build_session('w')",
+        str(host_cores()),
+    ),
+    # a conf-less session gets the same rule from the loaders' 200 rewrite
+    "conf_less_session": (
+        "from pyspark.sql import SparkSession\n"
+        "from dataengineer_spark.testdata import load_table\n"
+        "s = SparkSession.builder.master('local[3]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "load_table(s, sys.argv[1], 'region')",
+        "3",
+    ),
+}
+
+
+def test_local_cores_parses_local_masters():
+    assert local_cores("local") == 1
+    assert local_cores("local[3]") == 3
+    assert local_cores("local[2, 4]") == 2
+    assert local_cores("local[*]") == host_cores()
+    assert local_cores("local[*,2]") == host_cores()
+    for master in ("yarn", "spark://h:7077", "k8s://h", "local-cluster[2,1,1024]"):
+        assert local_cores(master) is None
+
+
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_build_session_width_is_core_count(sf_dir, case):
+    code, want = _CASES[case]
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+        "PYTHONPATH": os.pathsep.join(
+            filter(None, [str(ROOT), os.environ.get("PYTHONPATH")])
+        ),
+    }
+    env.pop("SPARK_GRAFT_CPUS", None)
+    probe = (
+        f"import sys\n{code}\n"
+        "print(s.conf.get('spark.sql.shuffle.partitions'))\ns.stop()"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", probe, sf_dir],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+        cwd=ROOT,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip().splitlines()[-1] == want
+
+
+@pytest.mark.parametrize(
+    "name", ["q_graph_pagerank", "q_f9_bpe_train", "q_e2_minhash_portable"]
+)
+def test_results_invariant_under_width(spark, sf_dir, name):
+    """The operators that size or store partitions by the width (PageRank's
+    pre-partition, the BPE histogram cache, MinHash banding) return the
+    same rows at any width."""
+    import __spark_entry__ as entry
+
+    fn = entry.queries()[name]
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    rows = {}
+    try:
+        for width in ("2", "8"):
+            spark.conf.set("spark.sql.shuffle.partitions", width)
+            rows[width] = sorted(fn(spark, sf_dir).collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert rows["2"], name
+    assert rows["2"] == rows["8"]

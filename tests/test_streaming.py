@@ -766,8 +766,10 @@ class TestStreamRuntimeSession:
 
         main_width = spark.conf.get("spark.sql.shuffle.partitions")
         child = stream_runtime_session(spark, sf_dir + "/events.parquet")
-        # local bench-scale source: width clamps to the floor
-        assert child.conf.get("spark.sql.shuffle.partitions") == "8"
+        # local bench-scale source: the width is the floor (8), clamped
+        # to the caller's narrower session — never wider than the caller
+        assert int(main_width) < 8
+        assert child.conf.get("spark.sql.shuffle.partitions") == main_width
         assert (
             child.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
             == "false"
@@ -782,6 +784,17 @@ class TestStreamRuntimeSession:
         )
         # builder defaults must flow into the child (ns events read)
         assert child.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+    def test_floor_applies_under_a_wide_session(self, spark, sf_dir):
+        from dataengineer_spark.streaming import stream_runtime_session
+
+        prior = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "16")
+        try:
+            child = stream_runtime_session(spark, sf_dir + "/events.parquet")
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prior)
+        assert child.conf.get("spark.sql.shuffle.partitions") == "8"
 
     def test_remote_path_keeps_session_width(self, spark):
         from dataengineer_spark.streaming import stream_runtime_session
