@@ -1299,7 +1299,7 @@ def _cooccurrence_edges(
     collapsed; NULL items drop on both paths), so every downstream rank/
     census/BFS value — and the pinned oracle hashes — are unchanged.
     Measured sf0.1: edge build 2.06 → 1.55 s; pagerank(5) 6.25 → 4.88 s
-    (tools/profile_r11_pr2.py, eqcheck 0 differing rows)."""
+    (5a920ce:tools/profile_r11_pr2.py, eqcheck 0 differing rows)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", item_col)
     pairs = (
         li.groupBy("l_orderkey")
@@ -11049,16 +11049,13 @@ FROM agg ORDER BY key
 # ---------------------------------------------------------------------------
 
 
-# Round-7 rotation for the driver's ~50-query correctness budget.
-# The registry holds 279 queries (268 oracled, 11 rows-only by
-# contract); after round 7 every query has appeared in at least one
-# driver sample except this round's new q_e9_fuzzy_join_topk.  Front =
-# (a) never-driver-covered oracled queries, then (b) greens
-# stalest-first by last-sampled round (recomputed from the
-# CORRECTNESS_r0{1..7}.json artifacts, not remembered counts).  All 11
-# rows-only twins are ordered LAST (VERDICT r6 item 2) so no driver
-# sample slot can land on an err:"no_oracle" row.
-_ROUND8_FIRST = [
+#: Every registered query, in the order ``queries()`` returns them: the
+#: driver's ~50-query correctness sample is taken from the front, so
+#: never-sampled and stalest-sampled oracled queries lead.  The
+#: rows-only queries (no ``oracle_sql()`` entry: engine twins of an
+#: oracled portable sibling) form the tail, so no sample slot lands on an
+#: err:"no_oracle" row (tests/test_entry.py checks both rules).
+QUERY_ORDER = (
     # round-11 addition leads the rotation: never driver-sampled yet
     "q_graph_pagerank_dangling", "q_graph_bfs_level",
     # round-10 additions
@@ -11142,314 +11139,17 @@ _ROUND8_FIRST = [
     "q_pipeline_curation", "q_tpch_q6", "q_tpch_q18", "q_tpch_q17",
     "q_tpch_q12", "q_tpch_q14", "q_tpch_q3", "q_tpch_q5", "q_tpch_q10",
     "q_tpch_q1", "q_tpch_q4", "q_tpch_q7", "q_tpch_q8",
-]
-
-# All 11 rows-only-by-contract queries (no oracle_sql entry: engine
-# twins of oracled portable siblings) ordered LAST so driver sample
-# slots never land on err:"no_oracle" rows (VERDICT r6 item 2).
-_ROWS_ONLY_LAST = [
+    # rows-only tail
     "q_prep_semantic_decontaminate_arrow",
     "q_e2_incremental_neardup_arrow", "q_e11_stream_neardup_arrow",
     "q_e4_fingerprint", "q_e2_neardup_dedup", "q_prep_decontaminate",
     "q_prep_decontaminate_arrow", "q_e2_dup_spans_hashed",
     "q_prep_dsir_hashed", "q_e2_minhash_neardup", "q_e2_simhash_neardup",
-]
+)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q = _all_queries()
-    front = {k: q[k] for k in _ROUND8_FIRST}
-    tail = {k: q[k] for k in _ROWS_ONLY_LAST}
-    mid = {k: v for k, v in q.items() if k not in front and k not in tail}
-    return front | mid | tail
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "q_e9_asof_join": q_e9_asof_join,
-        "q_e9_asof_tolerance": q_e9_asof_tolerance,
-        "q_e10_tumbling": q_e10_tumbling,
-        "q_e10_sliding": q_e10_sliding,
-        "q_e10_funnel": q_e10_funnel,
-        "q_e10_session": q_e10_session,
-        "q_e10_anomaly": q_e10_anomaly,
-        "q_graph_bfs": q_graph_bfs,
-        "q_e3_ivfpq_topk": q_e3_ivfpq_topk,
-        "q_e3_ivfpq_trained": q_e3_ivfpq_trained,
-        "q_e3_ivfpq_stored": q_e3_ivfpq_stored,
-        "q_k7_incremental_agg": q_k7_incremental_agg,
-        "q_k8_shard_export": q_k8_shard_export,
-        "q_f11_zipf": q_f11_zipf,
-        "q_e11_stream_anomaly": q_e11_stream_anomaly,
-        "q_dq_skew": q_dq_skew,
-        "q_e10_wow": q_e10_wow,
-        "q_e9_linkage": q_e9_linkage,
-        "q_e2_setsim_join": q_e2_setsim_join,
-        "q_a5_confusion": q_a5_confusion,
-        "q_a3_kappa": q_a3_kappa,
-        "q_a4_calibration": q_a4_calibration,
-        "q_graph_triangles": q_graph_triangles,
-        "q_e5_regression": q_e5_regression,
-        "q_e5_rfm": q_e5_rfm,
-        "q_rank_rrf": q_rank_rrf,
-        "q_e3_dim_stats": q_e3_dim_stats,
-        "q_e4_oov": q_e4_oov,
-        "q_e10_retention": q_e10_retention,
-        "q_e10_resample": q_e10_resample,
-        "q_e10_attribution": q_e10_attribution,
-        "q_a2_auc": q_a2_auc,
-        "q_graph_pagerank": q_graph_pagerank,
-        "q_graph_pagerank3": q_graph_pagerank3,
-        "q_graph_pagerank_dangling": q_graph_pagerank_dangling,
-        "q_graph_bfs_level": q_graph_bfs_level,
-        "q_e9_fuzzy_join": q_e9_fuzzy_join,
-        "q_e9_fuzzy_join_topk": q_e9_fuzzy_join_topk,
-        "q_f10_pmi": q_f10_pmi,
-        "q_f9_bpe_train": q_f9_bpe_train,
-        "q_f12_bpe_tokenize": q_f12_bpe_tokenize,
-        "q_f13_normalize": q_f13_normalize,
-        "q_prep_upsample": q_prep_upsample,
-        "q_prep_semantic_decontaminate": q_prep_semantic_decontaminate,
-        "q_prep_semantic_decontaminate_arrow": q_prep_semantic_decontaminate_arrow,
-        "q_dq_dup_rate": q_dq_dup_rate,
-        "q_k9_quarantine": q_k9_quarantine,
-        "q_s9_schema_evolution": q_s9_schema_evolution,
-        "q_prep_budget": q_prep_budget,
-        "q_prep_temperature_mixture": q_prep_temperature_mixture,
-        "q_scrub_boilerplate": q_scrub_boilerplate,
-        "q_e2_incremental_neardup": q_e2_incremental_neardup,
-        "q_e2_incremental_neardup_arrow": q_e2_incremental_neardup_arrow,
-        "q_k10_cdc_apply": q_k10_cdc_apply,
-        "q_e11_stream_neardup": q_e11_stream_neardup,
-        "q_e11_stream_neardup_live": q_e11_stream_neardup_live,
-        "q_e11_stream_neardup_arrow": q_e11_stream_neardup_arrow,
-        "q_e1_dedup_by": q_e1_dedup_by,
-        "q_s10_corrupt_json": q_s10_corrupt_json,
-        "q_a6_abtest": q_a6_abtest,
-        "q_prep_kfold": q_prep_kfold,
-        "q_a7_pr_curve": q_a7_pr_curve,
-        "q_e3_ann_recall": q_e3_ann_recall,
-        "q_e4_fertility": q_e4_fertility,
-        "q_f14_vocab_coverage": q_f14_vocab_coverage,
-        "q_e6_range_frame": q_e6_range_frame,
-        "q_e10_transitions": q_e10_transitions,
-        "q_prep_length_buckets": q_prep_length_buckets,
-        "q_e3_pq_error": q_e3_pq_error,
-        "q_a8_bootstrap": q_a8_bootstrap,
-        "q_e9_interval_join": q_e9_interval_join,
-        "q_e2_neardup_recall": q_e2_neardup_recall,
-        "q_e4_novelty": q_e4_novelty,
-        "q_dq_cross_source": q_dq_cross_source,
-        "q_e10_conversation": q_e10_conversation,
-        "q_e10_decay": q_e10_decay,
-        "q_a9_wilson": q_a9_wilson,
-        "q_e9_blocking_quality": q_e9_blocking_quality,
-        "q_rank_fair_trim": q_rank_fair_trim,
-        "q_rank_ndcg": q_rank_ndcg,
-        "q_rank_rbo": q_rank_rbo,
-        "q_prep_preference_pairs": q_prep_preference_pairs,
-        "q_e10_cusum": q_e10_cusum,
-        "q_dq_benford": q_dq_benford,
-        "q_a10_bradley_terry": q_a10_bradley_terry,
-        "q_e6_ewma": q_e6_ewma,
-        "q_prep_curriculum": q_prep_curriculum,
-        "q_dq_label_noise": q_dq_label_noise,
-        "q_a11_paired_t": q_a11_paired_t,
-        "q_e3_pca_power": q_e3_pca_power,
-        "q_e3_pca_power1": q_e3_pca_power1,
-        "q_e9_proration": q_e9_proration,
-        "q_rank_calibrate": q_rank_calibrate,
-        "q_dq_lang_mismatch": q_dq_lang_mismatch,
-        "q_prep_churn_labels": q_prep_churn_labels,
-        "q_dq_gini": q_dq_gini,
-        "q_a12_sliced_auc": q_a12_sliced_auc,
-        "q_e9_sorted_blocking": q_e9_sorted_blocking,
-        "q_e3_embed_outliers": q_e3_embed_outliers,
-        "q_e10_seasonal": q_e10_seasonal,
-        "q_dq_fd": q_dq_fd,
-        "q_e10_conversion_lag": q_e10_conversion_lag,
-        "q_dq_psi": q_dq_psi,
-        "q_dq_kanon": q_dq_kanon,
-        "q_e10_burstiness": q_e10_burstiness,
-        "q_pipeline_curation2": q_pipeline_curation2,
-        "q_dq_datacard": q_dq_datacard,
-        "q_e2_containment": q_e2_containment,
-        "q_dq_mad_outliers": q_dq_mad_outliers,
-        "q_e9_interval_coverage": q_e9_interval_coverage,
-        "q_e4_fingerprint": q_e4_fingerprint,
-        "q_pipeline_dx_group": q_pipeline_dx_group,
-        "q_pipeline_prostate": q_pipeline_prostate,
-        "q_pipeline_curation": q_pipeline_curation,
-        "q_tpch_q6": q_tpch_q6,
-        "q_tpch_q18": q_tpch_q18,
-        "q_tpch_q17": q_tpch_q17,
-        "q_tpch_q12": q_tpch_q12,
-        "q_tpch_q14": q_tpch_q14,
-        "q_tpch_q3": q_tpch_q3,
-        "q_tpch_q5": q_tpch_q5,
-        "q_tpch_q10": q_tpch_q10,
-        "q_tpch_q1": q_tpch_q1,
-        "q_tpch_q4": q_tpch_q4,
-        "q_tpch_q7": q_tpch_q7,
-        "q_tpch_q8": q_tpch_q8,
-        "q_tpch_q9": q_tpch_q9,
-        "q_tpch_q13": q_tpch_q13,
-        "q_tpch_q15": q_tpch_q15,
-        "q_tpch_q16": q_tpch_q16,
-        "q_tpch_q19": q_tpch_q19,
-        "q_tpch_q22": q_tpch_q22,
-        "q_tpch_q2": q_tpch_q2,
-        "q_tpch_q11": q_tpch_q11,
-        "q_tpch_q20": q_tpch_q20,
-        "q_tpch_q21": q_tpch_q21,
-        "q_e12_udf": q_e12_udf,
-        "q_e12_grouped_map": q_e12_grouped_map,
-        "q_e12_iter_udf": q_e12_iter_udf,
-        "q_e12_grouped_agg": q_e12_grouped_agg,
-        "q_e12_hof": q_e12_hof,
-        "q_k3_csv_roundtrip": q_k3_csv_roundtrip,
-        "q_k3_json_roundtrip": q_k3_json_roundtrip,
-        "q_k3_orc_roundtrip": q_k3_orc_roundtrip,
-        "q_s7_bucketed_join": q_s7_bucketed_join,
-        "q_s8_zorder_scan": q_s8_zorder_scan,
-        "q_j5_salted_join": q_j5_salted_join,
-        "q_dq_constraints": q_dq_constraints,
-        "q_dq_null_rates": q_dq_null_rates,
-        "q_dq_orphans": q_dq_orphans,
-        "q_prep_sample_n": q_prep_sample_n,
-        "q_e5_percentile_dist": q_e5_percentile_dist,
-        "q_e4_edit_distance": q_e4_edit_distance,
-        "q_o6_batch_lifecycle": q_o6_batch_lifecycle,
-        "q_e1_incremental_dedup": q_e1_incremental_dedup,
-        "q_e4_pii_redact": q_e4_pii_redact,
-        "q_rank_bm25": q_rank_bm25,
-        "q_e4_c4_filter": q_e4_c4_filter,
-        "q_e4_gopher_filter": q_e4_gopher_filter,
-        "q_rank_tfidf": q_rank_tfidf,
-        "q_e2_dup_spans": q_e2_dup_spans,
-        "q_prep_dsir": q_prep_dsir,
-        "q_dq_funnel": q_dq_funnel,
-        "q_dq_snapshot_diff": q_dq_snapshot_diff,
-        "q_dq_drift": q_dq_drift,
-        "q_dq_profile": q_dq_profile,
-        "q_k5_merge_upsert": q_k5_merge_upsert,
-        "q_k6_scd2": q_k6_scd2,
-        "q_k6_scd2_lookup": q_k6_scd2_lookup,
-        "q_e3_topk_arrow": q_e3_topk_arrow,
-        "q_e11_stream_dedup": q_e11_stream_dedup,
-        "q_e11_stream_hll": q_e11_stream_hll,
-        "q_e11_stream_decontaminate": q_e11_stream_decontaminate,
-        "q_prep_bloom_decontaminate": q_prep_bloom_decontaminate,
-        "q_prep_pps_sample": q_prep_pps_sample,
-        "q_e2_cluster_dedup": q_e2_cluster_dedup,
-        "q_e4_repetition": q_e4_repetition,
-        "q_prep_pack": q_prep_pack,
-        "q_prep_mixture": q_prep_mixture,
-        "q_prep_contamination": q_prep_contamination,
-        "q_e2_embed_neardup": q_e2_embed_neardup,
-        "q_e4_quality": q_e4_quality,
-        "q_e4_tokens": q_e4_tokens,
-        "q_e5_groupingsets": q_e5_groupingsets,
-        "q_e11_stream_lake": q_e11_stream_lake,
-        "q_e11_stream_join": q_e11_stream_join,
-        "q_e11_stateful": q_e11_stateful,
-        "q_e11_stream_session": q_e11_stream_session,
-        "q_json_extract": q_json_extract,
-        "q_e5_pivot": q_e5_pivot,
-        "q_e5_unpivot": q_e5_unpivot,
-        "q_e5_distinct_agg": q_e5_distinct_agg,
-        "q_e5_percentile": q_e5_percentile,
-        "q_e7_grouptopk_salted": q_e7_grouptopk_salted,
-        "q_prep_split": q_prep_split,
-        "q_prep_stratified": q_prep_stratified,
-        "q_sql_api": q_sql_api,
-        "q_prep_wordcount": q_prep_wordcount,
-        "q_prep_chunk": q_prep_chunk,
-        "q_mm_stats": q_mm_stats,
-        "q_e2_neardup_dedup": q_e2_neardup_dedup,
-        "q_e2_embed_lsh_neardup": q_e2_embed_lsh_neardup,
-        "q_e2_semantic_dedup": q_e2_semantic_dedup,
-        "q_e2_semantic_dedup_trained": q_e2_semantic_dedup_trained,
-        "q_prep_decontaminate": q_prep_decontaminate,
-        "q_e5_corr_stats": q_e5_corr_stats,
-        "q_e1_dup_weights": q_e1_dup_weights,
-        "q_e4_perplexity": q_e4_perplexity,
-        "q_e4_perplexity_ref": q_e4_perplexity_ref,
-        "q_e14_partitioned_scan": q_e14_partitioned_scan,
-        "q_e12_udtf": q_e12_udtf,
-        "q_e12_apply_arrow": q_e12_apply_arrow,
-        "q_e2_minhash_portable": q_e2_minhash_portable,
-        "q_e4_fingerprint_portable": q_e4_fingerprint_portable,
-        "q_e2_neardup_dedup_portable": q_e2_neardup_dedup_portable,
-        "q_e2_simhash_portable": q_e2_simhash_portable,
-        "q_prep_decontaminate_portable": q_prep_decontaminate_portable,
-        "q_prep_split_leakage": q_prep_split_leakage,
-        "q_prep_decontaminate_arrow": q_prep_decontaminate_arrow,
-        "q_json_variant": q_json_variant,
-        "q_e2_dup_spans_hashed": q_e2_dup_spans_hashed,
-        "q_prep_dsir_hashed": q_prep_dsir_hashed,
-        "q_e5_approx_percentile": q_e5_approx_percentile,
-        "q_e5_approx_distinct": q_e5_approx_distinct,
-        "q_e5_hll_rollup": q_e5_hll_rollup,
-        "q_e5_cms_topk": q_e5_cms_topk,
-        "q_e5_histogram": q_e5_histogram,
-        "q_e5_winsorize": q_e5_winsorize,
-        "q_m1_classifier": q_m1_classifier,
-        "q_m2_qa_sectionize": q_m2_qa_sectionize,
-        "q_mm_features": q_mm_features,
-        "q_mm_frame_sample": q_mm_frame_sample,
-        "q_mm_resize": q_mm_resize,
-        "q_s1_csv_scan": q_s1_csv_scan,
-        "q_s2_table_scan": q_s2_table_scan,
-        "q_s4_daterange_scan": q_s4_daterange_scan,
-        "q_s5_rest_source": q_s5_rest_source,
-        "q_s6_inline_table": q_s6_inline_table,
-        "q_k2_batch_audit": q_k2_batch_audit,
-        "q_p1_project": q_p1_project,
-        "q_p2_select_where": q_p2_select_where,
-        "q_p3_conj_filter": q_p3_conj_filter,
-        "q_p5_lit_columns": q_p5_lit_columns,
-        "q_p6_rename": q_p6_rename,
-        "q_p7_cast": q_p7_cast,
-        "q_p8_dropna": q_p8_dropna,
-        "q_p9_struct_expand": q_p9_struct_expand,
-        "q_f1_clean_msg": q_f1_clean_msg,
-        "q_f4_sectionize": q_f4_sectionize,
-        "q_f5_truncate": q_f5_truncate,
-        "q_f5_truncate_tokens": q_f5_truncate_tokens,
-        "q_f6_format_date": q_f6_format_date,
-        "q_f7_split_label": q_f7_split_label,
-        "q_j1_label_join": q_j1_label_join,
-        "q_j2_point_lookup": q_j2_point_lookup,
-        "q_j4_fanin_merge": q_j4_fanin_merge,
-        "q_a1_accuracy": q_a1_accuracy,
-        "q_e1_dedup": q_e1_dedup,
-        "q_e1_distinct": q_e1_distinct,
-        "q_e2_minhash_neardup": q_e2_minhash_neardup,
-        "q_e2_simhash_neardup": q_e2_simhash_neardup,
-        "q_e2_ngram_jaccard": q_e2_ngram_jaccard,
-        "q_e3_topk_sim": q_e3_topk_sim,
-        "q_e3_pairwise_topk": q_e3_pairwise_topk,
-        "q_e3_lsh_topk": q_e3_lsh_topk,
-        "q_e3_hard_negatives": q_e3_hard_negatives,
-        "q_e3_knn_classify": q_e3_knn_classify,
-        "q_e3_ivf_topk": q_e3_ivf_topk,
-        "q_e3_pq_topk": q_e3_pq_topk,
-        "q_e3_jl_topk": q_e3_jl_topk,
-        "q_e3_kmeans": q_e3_kmeans,
-        "q_e4_text_stats": q_e4_text_stats,
-        "q_e4_langid": q_e4_langid,
-        "q_e5_groupagg": q_e5_groupagg,
-        "q_e5_rollup": q_e5_rollup,
-        "q_e5_cube": q_e5_cube,
-        "q_e6_window": q_e6_window,
-        "q_e6_frames": q_e6_frames,
-        "q_e7_topk": q_e7_topk,
-        "q_e8_setops": q_e8_setops,
-        "q_e9_semi_anti": q_e9_semi_anti,
-        "q_e9_range_join": q_e9_range_join,
-        "q_e11_stream_tumbling": q_e11_stream_tumbling,
-    }
+    return {name: globals()[name] for name in QUERY_ORDER}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -264,6 +264,36 @@ def _emit_summary(
     print(line, flush=True)
 
 
+def drop_blocks(spark) -> None:
+    """Per-query block hygiene: ``clearCache`` only empties the SQL
+    CacheManager — localCheckpoint blocks are raw persisted RDDs that free
+    on (Python) frame GC, which lags the loop, so across ~280 queries they
+    accumulate until executor storage is full and later queries measure
+    eviction thrash instead of their plan (r8: q_e4_fingerprint_portable
+    benched 24.9 s vs 2.2 s isolated).  Collect the dead frames, then
+    unpersist whatever blocks remain.  The block listing is a private py4j
+    surface: if it is gone the run fails rather than silently timing
+    eviction thrash."""
+    import gc
+
+    from py4j.protocol import Py4JError
+
+    gc.collect()
+    spark.catalog.clearCache()
+    # memory-sink temp views from finished streaming queries pin their
+    # results (and sink bookkeeping) for the session lifetime; ~30
+    # accumulate over a full run — drop the uuid-named ones
+    for t in spark.catalog.listTables():
+        if t.isTemporary and t.name.startswith(("stream_", "stateful_", "anomaly_")):
+            spark.catalog.dropTempView(t.name)
+    try:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    except (AttributeError, Py4JError) as exc:
+        raise RuntimeError("block hygiene: _jsc.getPersistentRDDs is unavailable") from exc
+    for rdd in list(rdds.values()):
+        rdd.unpersist()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
@@ -292,47 +322,6 @@ def main() -> None:
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
-    def drop_blocks() -> None:
-        """Per-query block hygiene: ``clearCache`` only empties the SQL
-        CacheManager — localCheckpoint blocks are raw persisted RDDs
-        that free on (Python) frame GC, which lags the loop, so across
-        ~280 queries they accumulate until executor storage is full and
-        later queries measure eviction thrash instead of their plan
-        (r8: q_e4_fingerprint_portable benched 24.9 s vs 2.2 s
-        isolated).  Collect the dead frames, then unpersist whatever
-        blocks remain."""
-        import gc
-
-        gc.collect()
-        spark.catalog.clearCache()
-        # memory-sink temp views from finished streaming queries pin
-        # their results (and sink bookkeeping) for the session lifetime;
-        # ~30 accumulate over a full run — drop the uuid-named ones
-        try:
-            for t in spark.catalog.listTables():
-                if t.isTemporary and t.name.startswith(
-                    ("stream_", "stateful_", "anomaly_")
-                ):
-                    spark.catalog.dropTempView(t.name)
-        except Exception:  # noqa: BLE001 — hygiene must never fail a run
-            pass
-        try:
-            for rdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()
-            ):
-                rdd.unpersist()
-        except Exception as exc:  # noqa: BLE001 — private py4j surface
-            # warn ONCE: silently losing this hygiene would quietly
-            # reintroduce the cross-query eviction thrash it exists to
-            # prevent (q_e4_fingerprint_portable 24.9 s vs 2.2 s)
-            if not getattr(drop_blocks, "_warned", False):
-                drop_blocks._warned = True
-                print(
-                    f"bench: RDD block hygiene unavailable ({exc!r}); "
-                    "full-tier timings may include cache-eviction thrash",
-                    file=sys.stderr,
-                )
-
     def calibrate() -> dict[str, float]:
         """Best-of-3 walls for the CALIBRATION probes — host-speed
         yardstick recorded at tier start and end (block hygiene between
@@ -350,7 +339,7 @@ def main() -> None:
                     errors[f"calibration:{name}"] = repr(exc)[:200]
                     break
                 best = dt if best is None else min(best, dt)
-                drop_blocks()
+                drop_blocks(spark)
             if best is not None:
                 probes[name] = round(best, 3)
         return probes
@@ -368,7 +357,7 @@ def main() -> None:
             timings[name] = round(min(run_once(fn), run_once(fn)), 3)
         except Exception as exc:  # noqa: BLE001 — one bad query must not
             errors[name] = repr(exc)[:200]  # sink the whole artifact
-        drop_blocks()
+        drop_blocks(spark)
 
     # crash insurance: if the (longer) full tier below is ever cut short
     # by a driver timeout, stdout already ends with a parseable headline
@@ -390,12 +379,12 @@ def main() -> None:
                 if name.startswith(FULL_BEST_OF_2_PREFIX):
                     # stateful-streaming noise guard: min-of-2 (see
                     # FULL_BEST_OF_2_PREFIX), block hygiene between runs
-                    drop_blocks()
+                    drop_blocks(spark)
                     dt = min(dt, run_once(fn))
                 full_timings[name] = round(dt, 3)
             except Exception as exc:  # noqa: BLE001
                 errors[name] = repr(exc)[:200]
-            drop_blocks()
+            drop_blocks(spark)
 
     calib_end = calibrate()
 

@@ -1599,7 +1599,7 @@ def _setsim_candidates(arr: DataFrame, t: float, eps: float) -> DataFrame:
     prefix equi-join, and the size + positional filters — everything
     BEFORE the exact array verify.  Split out so the scale probes can
     measure the filter's real candidate counts through the exact code
-    the join runs (tools/vocab_probe_r9.py), not a reimplementation.
+    the join runs (5a920ce:tools/vocab_probe_r9.py), not a reimplementation.
 
     PPJoin candidate filters, all cheap integer/float predicates, all
     applied BEFORE the (much heavier) array-verify join:

@@ -83,7 +83,7 @@ def pagerank(
     (node-count-sized) rank vector moves; the width is max(session
     confs, lake file count) — both metadata-only reads, no plan-build
     job (the r10 form's ``.rdd`` partition probe executed the edge
-    build to size it; tools/profile_r10_pr.py measured where the edge
+    build to size it; 5a920ce:tools/profile_r10_pr.py measured where the edge
     frame's own width is load-bearing).  When the node count — an EXACT control-plane scalar, already
     paid for by the teleport term — is at most ``broadcast_node_limit``
     (~24 MB of (key, rank) rows at the 1 M default), the rank vector is

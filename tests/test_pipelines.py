@@ -138,9 +138,11 @@ class TestCuration2Composition:
         # same import convention as tests/test_entry.py (module is
         # cached after the first test-session import — no re-exec)
         import sys
+        from pathlib import Path
 
-        if "/root/repo" not in sys.path:
-            sys.path.insert(0, "/root/repo")
+        root = str(Path(__file__).resolve().parents[1])
+        if root not in sys.path:
+            sys.path.insert(0, root)
         import __spark_entry__ as m
 
         rows = m.q_pipeline_curation2(spark, sf_dir).collect()

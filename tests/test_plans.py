@@ -330,11 +330,6 @@ class TestPinnedPlanShapes:
         with open(path) as fh:
             return json.load(fh)
 
-    def test_pin_list_matches_tool(self, pins):
-        from tools.pin_plans import PINNED_QUERIES
-
-        assert sorted(pins) == sorted(PINNED_QUERIES)
-
     def test_pinned_queries_exist_and_are_pure(self, pins):
         qs = entrymod.queries()
         for name in pins:

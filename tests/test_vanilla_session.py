@@ -12,6 +12,9 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+CHECK_ORACLE = Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
 
 REPRESENTATIVE = [
     "q_e9_asof_join",    # events ns-parquet read (round-1 FAIL family)
@@ -90,7 +93,7 @@ def test_registry_slice_on_conf_less_session():
     proc = subprocess.run(
         [
             sys.executable,
-            "/root/repo/tools/check_oracle.py",
+            str(CHECK_ORACLE),
             "/root/testdata/sf0.001",
             *REPRESENTATIVE,
         ],

@@ -12,9 +12,17 @@ row-Python stage) then fails in minutes in pytest instead of surfacing as
 a bench mystery a round later (the round-9 benford 6-exchange fix was
 found by manually reading PLANS.md — this makes that reading automatic).
 
+The pinned set is the key set of tests/plan_pins.json itself:
+non-effectful headline queries (plan builds are pure) spanning the
+engine's main plan families — aggregation, windows, joins, LSH/ANN, text,
+ranking, TPC-H, pipelines, dedup probes.  Re-pinning keeps that set and
+adds any query named on the command line.
+
 Intentional plan changes: re-run `python tools/pin_plans.py`, eyeball the
 diff of tests/plan_pins.json (every changed number should be explainable
 by the code change), commit both together.
+
+Usage: python tools/pin_plans.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -23,62 +31,12 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.plan_report import plan_of, summarize  # noqa: E402
 
-#: plan-pinned headline queries — non-effectful (plan builds are pure),
-#: spanning the engine's main plan families: aggregation, windows, joins,
-#: LSH/ANN, text, ranking, TPC-H, pipelines, dedup probes
-PINNED_QUERIES = [
-    "q_e5_groupagg",
-    "q_e5_rollup",
-    "q_e5_percentile",
-    "q_e5_distinct_agg",
-    "q_e6_window",
-    "q_e6_frames",
-    "q_e7_topk",
-    "q_e7_grouptopk_salted",
-    "q_e9_range_join",
-    "q_e9_asof_join",
-    "q_e9_semi_anti",
-    "q_e9_fuzzy_join",
-    "q_e10_tumbling",
-    "q_e10_session",
-    "q_e10_funnel",
-    "q_e3_topk_sim",
-    "q_e3_lsh_topk",
-    "q_e3_ivfpq_topk",
-    "q_e2_minhash_neardup",
-    "q_e2_simhash_neardup",
-    "q_e2_incremental_neardup_arrow",
-    "q_e1_dedup",
-    "q_e1_incremental_dedup",
-    "q_e4_text_stats",
-    "q_e4_langid",
-    "q_e4_gopher_filter",
-    "q_rank_tfidf",
-    "q_rank_bm25",
-    "q_dq_benford",
-    "q_dq_funnel",
-    "q_tpch_q1",
-    "q_tpch_q3",
-    "q_tpch_q9",
-    "q_tpch_q17",
-    "q_pipeline_dx_group",
-    "q_f4_sectionize",
-    "q_f5_truncate_tokens",
-    "q_f12_bpe_tokenize",
-    "q_graph_triangles",
-    "q_graph_bfs_level",
-    "q_prep_wordcount",
-]
-
-PINS_PATH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tests",
-    "plan_pins.json",
-)
+PINS_PATH = os.path.join(ROOT, "tests", "plan_pins.json")
 
 
 def build_test_session():
@@ -97,15 +55,20 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = build_test_session()
+    with open(PINS_PATH) as fh:
+        names = sorted(set(json.load(fh)) | set(sys.argv[2:]))
     qs = entrymod.queries()
     effectful = entrymod.EFFECTFUL_QUERIES
-    pins: dict[str, dict] = {}
-    for name in PINNED_QUERIES:
+    for name in names:
+        if name not in qs:
+            raise SystemExit(f"pin_plans: {name} is not a registered query")
         if name in effectful:
             raise SystemExit(
                 f"pin_plans: {name} is effectful — pin only pure plan builds"
             )
+    spark = build_test_session()
+    pins: dict[str, dict] = {}
+    for name in names:
         s = summarize(plan_of(qs[name](spark, sf_dir)))
         pins[name] = {
             "exchanges": s["exchanges"],

@@ -13,8 +13,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import re
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def plan_of(df) -> str:
@@ -142,7 +145,7 @@ def summarize(p: str) -> dict[str, object]:
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
     from dataengineer_spark.session import build_session
 
@@ -236,7 +239,7 @@ def main() -> int:
         "| --- | --- | --- | --- | --- | --- |",
     ] + rows
     out = "\n".join(lines) + "\n"
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write(out)
     print(f"wrote PLANS.md ({len(qs)} queries)")
     print(f"raw BNL queries: {raw_bnl_queries or 'none'}")
