@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from dataengineer_spark.operators.preparation import _POLY_MOD
 from dataengineer_spark.tuning import lineage_cut, tie_lifetime, transient_persist
 
 
@@ -242,153 +243,31 @@ def _affine_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def char_shingle_hashes(
-    text: Column | str, n: int = 5, portable: bool = False
-) -> Column:
-    """array<bigint> of DISTINCT hash values of ``text``'s char n-grams,
-    computed positionally — the shingle strings are never materialized.
+def _shingle_hashes_sql(text_sql: str, n: int) -> str:
+    """SQL text of the xxhash64-family shingle hashes: array<bigint> of
+    the DISTINCT ``pmod(xxhash64(shingle), 2^31-1)`` values of
+    ``text_sql``'s char n-grams, computed positionally — the shingle
+    strings are never materialized.
 
     This is the signature-stage fast path: ``char_shingles`` +
-    per-shingle hashing walks a per-char array fold inside the Catalyst
-    interpreter (higher-order functions don't codegen), ~7× the cost of
-    this form, which unrolls the portable polynomial
-    ``fold (acc*31 + codepoint) % 1_000_003`` over exactly ``n`` chars
-    of ``substr`` (one ``mod`` at the end — exact: 128·31⁴ ≪ 2⁶³) and
-    skips both the shingle-string allocation and the distinct-on-strings
-    pass.  MinHash folds a min over hash VALUES, so deduping the hash
-    longs instead of the shingle strings yields bit-identical signatures
-    (equal strings hash equal; a colliding pair can only drop a
-    duplicate value the min ignores) — pinned by
-    ``tests/test_operators.py`` signature-parity tests.
-
-    Texts shorter than ``n`` chars have ONE shingle — the whole text —
-    exactly as ``char_shingles`` emits it (``greatest(L-n+1, 1)``), so
-    that case falls back to ``portable_word_hash`` / ``xxhash64`` of the
-    full string.
-
-    ``text`` MUST be a plain column reference: the positional walk reads
-    it ~n× per position and Catalyst inlines expression arguments, so a
-    computed string here would re-evaluate per read — select the
-    expression into a column first (every in-repo caller does).
-    """
-    from dataengineer_spark.operators.preparation import (
-        poly_unrolled, portable_word_hash,
-    )
-
-    c = F.col(text) if isinstance(text, str) else text
-    length = F.length(c)
-
-    if portable:
-        def hash_at(i: Column) -> Column:
-            # shared unrolled polynomial — mod cadence proof lives in
-            # preparation.poly_unrolled
-            return poly_unrolled(
-                lambda j: F.ascii(c.substr(i + F.lit(j), F.lit(1))), n
-            )
-
-        short = F.array(portable_word_hash(c))
-    else:
-        def hash_at(i: Column) -> Column:
-            return F.pmod(F.xxhash64(c.substr(i, F.lit(n))), F.lit(_MERSENNE))
-
-        short = F.array(F.pmod(F.xxhash64(c), F.lit(_MERSENNE)))
-
-    full = F.transform(F.sequence(F.lit(1), length - F.lit(n - 1)), hash_at)
-    return F.array_distinct(F.when(length >= n, full).otherwise(short))
-
-
-def minhash_from_hashes(
-    hashes: Column, num_hashes: int = 32, seed: int = 42
-) -> Column:
-    """array<bigint> MinHash signature from PRE-HASHED shingle values.
-
-    Each component is min over values of ``(a·h + b) mod p``.  SINGLE
-    pass: one ``aggregate`` folds the running ``num_hashes``-wide
-    minimum vector, the (a, b) families applied via literal arrays —
-    all JVM-side, no UDF.
-    """
-    from dataengineer_spark.tuning import array_lit
-
-    params = _affine_params(num_hashes, seed)
-    a_arr = array_lit([a for a, _ in params])
-    b_arr = array_lit([b for _, b in params])
-    idx = F.sequence(F.lit(1), F.lit(num_hashes))
-
-    def fold_value(acc: Column, hv: Column) -> Column:
-        hs = F.transform(
-            idx,
-            lambda j: F.pmod(
-                F.element_at(a_arr, j) * hv + F.element_at(b_arr, j), F.lit(_MERSENNE)
-            ),
-        )
-        return F.zip_with(acc, hs, lambda x, y: F.least(x, y))
-
-    return F.aggregate(
-        hashes, F.array_repeat(F.lit(_MERSENNE).cast("bigint"), num_hashes), fold_value
-    )
-
-
-def minhash_signature(
-    shingles: Column, num_hashes: int = 32, seed: int = 42,
-    portable: bool = False,
-) -> Column:
-    """array<bigint> MinHash signature of a shingle array.
-
-    Generic form for caller-built shingle columns (word shingles, custom
-    tokenizations): hashes each shingle then folds via
-    ``minhash_from_hashes``.  The char-shingle pipelines use
-    ``char_shingle_hashes`` instead, which produces identical values
-    without materializing the shingle strings.
-
-    ``h`` is ``xxhash64`` by default (the scale path); ``portable=True``
-    swaps the polynomial char hash the DuckDB oracle can replicate
-    bit-for-bit (preparation.portable_word_hash) — same plan shape,
-    per-char array walk instead of one JVM hash call.
-    """
-    from dataengineer_spark.operators.preparation import portable_word_hash
-
-    if portable:
-        hashed = F.transform(shingles, portable_word_hash)
-    else:
-        hashed = F.transform(
-            shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE))
-        )
-    return minhash_from_hashes(hashed, num_hashes, seed)
-
-
-def _shingle_hashes_sql(text_sql: str, n: int, portable: bool) -> str:
-    """SQL text of ``char_shingle_hashes`` — value-identical by
-    construction (same functions, same operand order; parity pinned in
-    tests/test_operators.py).  Exists because the Column-API builder
-    costs ~200 py4j round trips per use (~0.25 s of DRIVER time at
-    1.2 ms/trip on a loaded JVM) while one ``F.expr`` parse is a single
-    trip — and query callables rebuild their plan on every invocation.
+    per-shingle hashing allocates every shingle string and runs a
+    distinct-on-strings pass; this form hashes ``substr`` windows
+    directly.  MinHash folds a min over hash VALUES, so deduping the
+    hash longs instead of the shingle strings yields bit-identical
+    signatures (equal strings hash equal; a colliding pair can only drop
+    a duplicate value the min ignores).  Texts shorter than ``n`` chars
+    have ONE shingle — the whole text — exactly as ``char_shingles``
+    emits it (``greatest(L-n+1, 1)``).  Built as one parsed string
+    because Column-API construction costs ~200 py4j round trips per use
+    while one ``F.expr`` parse is a single trip — and query callables
+    rebuild their plan on every invocation.
 
     ``text_sql`` must be a plain (quoted) column reference: the
     positional walk reads it per position and the parser inlines it
     verbatim.
     """
-    from dataengineer_spark.operators.preparation import _POLY_MOD
-
-    if portable:
-        acc = f"CAST(ascii(substr({text_sql}, i, 1)) AS BIGINT)"
-        since_mod = 0
-        for j in range(1, n):
-            acc = f"({acc} * 31 + ascii(substr({text_sql}, i + {j}, 1)))"
-            since_mod += 1
-            if since_mod == 8:
-                acc = f"({acc} % {_POLY_MOD})"
-                since_mod = 0
-        per_pos = f"({acc} % {_POLY_MOD})"
-        short = (
-            f"array(aggregate("
-            f"transform(filter(split({text_sql}, ''), x -> x != ''), "
-            f"x -> ascii(x)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> (acc * 31 + x) % {_POLY_MOD}))"
-        )
-    else:
-        per_pos = f"pmod(xxhash64(substr({text_sql}, i, {n})), {_MERSENNE})"
-        short = f"array(pmod(xxhash64({text_sql}), {_MERSENNE}))"
+    per_pos = f"pmod(xxhash64(substr({text_sql}, i, {n})), {_MERSENNE})"
+    short = f"array(pmod(xxhash64({text_sql}), {_MERSENNE}))"
     full = (
         f"transform(sequence(1, length({text_sql}) - {n - 1}), i -> {per_pos})"
     )
@@ -398,16 +277,27 @@ def _shingle_hashes_sql(text_sql: str, n: int, portable: bool) -> str:
     )
 
 
-def _shingle_hashes_from_cps_sql(text_sql: str, cps_sql: str, n: int) -> str:
-    """Portable-family shingle hashes reading a PRECOMPUTED codepoint
-    array column instead of ``ascii(substr(text, ...))`` per char (see
-    ``_expr_signatures`` — the array is built once per row in a prior
-    projection; positions align with ``substr`` 1:1, so the polynomial
-    folds the identical BIGINT operands and the values are bit-identical
-    to ``_shingle_hashes_sql(text, n, portable=True)``).  The short-text
-    branch keeps the original string-based fold verbatim."""
-    from dataengineer_spark.operators.preparation import _POLY_MOD
+def _poly_hash_sql(s_sql: str) -> str:
+    """SQL text of ``preparation.portable_word_hash`` over ``s_sql``: the
+    ``(acc*31 + codepoint) % 1_000_003`` fold over its characters."""
+    return (
+        f"aggregate(transform(filter(split({s_sql}, ''), x -> x != ''), "
+        f"x -> ascii(x)), CAST(0 AS BIGINT), "
+        f"(acc, x) -> (acc * 31 + x) % {_POLY_MOD})"
+    )
 
+
+def _shingle_hashes_from_cps_sql(text_sql: str, cps_sql: str, n: int) -> str:
+    """Portable-family shingle hashes: array<bigint> of the DISTINCT
+    ``portable_word_hash`` values of ``text_sql``'s char n-grams, read
+    positionally from a PRECOMPUTED codepoint array column ``cps_sql``
+    (see ``_expr_signatures`` — the array is built once per row in a
+    prior projection; positions align with ``substr`` 1:1).  The
+    polynomial ``(acc*31 + cp) % 1_000_003`` is unrolled over exactly
+    ``n`` codepoints and reduced mod p every 8 steps (an unreduced
+    prefix stays < p·31⁸ ≈ 8.6e17, inside int64 under ANSI, and
+    ``(x mod p)·31 + c ≡ x·31 + c (mod p)``).  Texts shorter than ``n``
+    keep ONE shingle, the whole text, hashed by the string-based fold."""
     acc = f"element_at({cps_sql}, i)"
     since_mod = 0
     for j in range(1, n):
@@ -417,12 +307,7 @@ def _shingle_hashes_from_cps_sql(text_sql: str, cps_sql: str, n: int) -> str:
             acc = f"({acc} % {_POLY_MOD})"
             since_mod = 0
     per_pos = f"({acc} % {_POLY_MOD})"
-    short = (
-        f"array(aggregate("
-        f"transform(filter(split({text_sql}, ''), x -> x != ''), "
-        f"x -> ascii(x)), CAST(0 AS BIGINT), "
-        f"(acc, x) -> (acc * 31 + x) % {_POLY_MOD}))"
-    )
+    short = f"array({_poly_hash_sql(text_sql)})"
     full = (
         f"transform(sequence(1, length({text_sql}) - {n - 1}), i -> {per_pos})"
     )
@@ -432,35 +317,18 @@ def _shingle_hashes_from_cps_sql(text_sql: str, cps_sql: str, n: int) -> str:
     )
 
 
-def _minhash_sql(hashes_sql: str, num_hashes: int, seed: int = 42) -> str:
-    """SQL text of ``minhash_from_hashes`` (same single-pass fold, same
-    affine family) — one parser trip instead of ~100 py4j calls."""
-    params = _affine_params(num_hashes, seed)
-    a_arr = "array(" + ",".join(str(a) for a, _ in params) + ")"
-    b_arr = "array(" + ",".join(str(b) for _, b in params) + ")"
-    return (
-        f"aggregate({hashes_sql}, "
-        f"array_repeat(CAST({_MERSENNE} AS BIGINT), {num_hashes}), "
-        f"(acc, hv) -> zip_with(acc, "
-        f"transform(sequence(1, {num_hashes}), "
-        f"j -> pmod(element_at({a_arr}, j) * hv + element_at({b_arr}, j), "
-        f"{_MERSENNE})), (x, y) -> least(x, y)))"
-    )
-
-
 def _minhash_min_sql(hashes_sql: str, num_hashes: int, seed: int = 42) -> str:
-    """SQL text of the MinHash fold as ``num_hashes`` independent
-    ``array_min(transform(...))`` passes over a PRE-STAGED hash-array
-    column — value-identical to ``_minhash_sql``/``minhash_from_hashes``
-    (same affine family, same pmod per (j, h), and ``min`` over the same
-    values commutes with how the passes are grouped; parity pinned in
-    tests/test_operators.py).
+    """SQL text of the MinHash signature over a PRE-STAGED hash-array
+    column: component j is ``min over h of (a_j·h + b_j) mod p`` for the
+    affine family ``_affine_params(num_hashes, seed)``, one
+    ``array_min(transform(...))`` pass per component (values pinned
+    against a pure-Python reference in tests/test_operators.py).
 
-    Why this shape (round-12): the ``aggregate`` fold allocates TWO
-    ``num_hashes``-wide arrays per shingle value (the transform batch and
-    the zip_with minimum) inside the Catalyst interpreter — 2·|shingles|
-    array allocations per row; this form allocates ``num_hashes`` arrays
-    of |shingles| width per row instead (one per pass), measured −20% on
+    Why this shape (round-12): a single ``aggregate`` fold carrying the
+    running minimum vector allocates TWO ``num_hashes``-wide arrays per
+    shingle value inside the Catalyst interpreter — 2·|shingles| array
+    allocations per row; this form allocates ``num_hashes`` arrays of
+    |shingles| width per row instead (one per pass), measured −20% on
     the signature stage at sf0.1 for both hash families.
 
     ``hashes_sql`` MUST be a plain (quoted) column reference to a
@@ -469,11 +337,10 @@ def _minhash_min_sql(hashes_sql: str, num_hashes: int, seed: int = 42) -> str:
     times.
     """
     params = _affine_params(num_hashes, seed)
-    # coalesce to the aggregate form's init: a NULL hash value (NULL
-    # input text) folds to the untouched {_MERSENNE} accumulator there
-    # (``least`` skips NULLs), while array_min over all-NULL returns
-    # NULL; every non-NULL pmod value is < {_MERSENNE}, so the two
-    # agree bit-for-bit on mixed arrays too
+    # a NULL hash value (NULL input text) yields {_MERSENNE} per
+    # component — the fold's initial value — not NULL: array_min over
+    # all-NULL returns NULL, and every non-NULL pmod value is
+    # < {_MERSENNE}, so the coalesce changes nothing else
     passes = ",".join(
         f"coalesce(array_min(transform({hashes_sql}, "
         f"h -> pmod({a} * h + {b}, {_MERSENNE}))), "
@@ -503,10 +370,10 @@ def _expr_signatures(
     ``.rdd`` on a streaming plan); their parallelism comes from the
     source.
 
-    The signature expression is built as ONE parsed SQL string
-    (``_minhash_sql`` ∘ ``_shingle_hashes_sql``) — value-identical to
-    the Column-API builders (parity pinned in tests) at ~1/200th the
-    driver-side build cost.
+    The signature expression is built as parsed SQL strings (the
+    shingle-hash stage, then ``_minhash_min_sql``) at ~1/200th the
+    driver-side build cost of Column-API construction; values are
+    pinned against a pure-Python reference in tests.
 
     Portable family (round-11 opt): the per-position polynomial read
     ``ascii(substr(text, i+j, 1))`` — two interpreted nodes per char per
@@ -515,8 +382,8 @@ def _expr_signatures(
     (``transform(split(text, ''), ascii)``; ``split`` on the empty
     pattern yields exactly the characters in order, no empty elements,
     so positions align with ``substr`` 1:1 and every fold sees the same
-    BIGINT operands → bit-identical signatures, pinned by the existing
-    parity tests and measured −47% on the signature stage at sf0.1).
+    BIGINT operands → bit-identical signatures; measured −47% on the
+    signature stage at sf0.1).
     Texts shorter than the shingle width keep the original string-based
     fold verbatim (the CASE branches evaluate lazily per row).
     """
@@ -537,7 +404,7 @@ def _expr_signatures(
         )
     else:
         staged = fanned
-        hs_sql = _shingle_hashes_sql(f"`{text_col}`", shingle_size, portable)
+        hs_sql = _shingle_hashes_sql(f"`{text_col}`", shingle_size)
     # stage the shingle-hash array in its OWN projection (non-cheap and
     # referenced num_hashes times by the fold below — CollapseProject
     # keeps it un-inlined, so the shingle stage runs once per row), then
@@ -743,10 +610,8 @@ def _bucketed_gram_pairs(
 # -- SimHash ----------------------------------------------------------------
 
 
-def simhash64(
-    text: Column | str, n_bits: int = 64, portable: bool = False
-) -> Column:
-    """64-bit SimHash of the word set, as bigint.
+def simhash64(text: str, n_bits: int = 64, portable: bool = False) -> Column:
+    """64-bit SimHash of the word set of column ``text``, as bigint.
 
     Per token hash h, bit j contributes +1 if set else −1; the sign of each
     bit-sum forms the fingerprint. SINGLE pass over the token-hash array:
@@ -754,7 +619,9 @@ def simhash64(
     ``bit_get``), then a second fold over the 64 counters packs the sign
     bits into the int64 — 2.2× faster than one aggregate pass per bit,
     still all JVM-side, no UDF. Near-dups share most bits; callers bucket
-    on a bit-prefix and verify by Hamming distance.
+    on a bit-prefix and verify by Hamming distance.  Built as one parsed
+    SQL expression (round-11: Column-API construction cost ~0.36 s of
+    py4j build time per call for the portable family).
 
     ``portable=True`` derives bit j from the affine family
     ``((a_j·h + b_j) mod p) mod 2`` over the polynomial word hash instead
@@ -762,102 +629,41 @@ def simhash64(
     SQL oracle can replicate exactly (the poly hash's ~20 bits of range
     are too few to index directly).
     """
-    from dataengineer_spark.operators.preparation import (
-        _POLY_MOD, portable_word_hash,
-    )
-    from dataengineer_spark.operators.textops import trim_ws
-    from dataengineer_spark.tuning import array_lit, sql_literal
+    from dataengineer_spark.tuning import sql_literal
 
-    if isinstance(text, str):
-        # single-parse SQL twin (round-11, the similarity-§12 pattern):
-        # the Column builder below costs ~0.36 s of py4j build time per
-        # call for the portable family; one F.expr parse builds the
-        # identical tree.  Same fold shapes, same literals, same operand
-        # order — value parity pinned in tests.
-        words = (
-            f"split(regexp_replace(`{text}`, '^\\\\s+|\\\\s+$', ''), '\\\\s+')"
-        )
-        if portable:
-            params = _affine_params(n_bits, seed=7)
-            a_arr = sql_literal([a for a, _ in params])
-            b_arr = sql_literal([b for _, b in params])
-            word_hash = (
-                "aggregate(transform(filter(split(w, ''), x -> x != ''), "
-                "c -> ascii(c)), CAST(0 AS BIGINT), "
-                f"(acc, x) -> (acc * 31 + x) % {_POLY_MOD})"
-            )
-            hashes = f"transform({words}, w -> {word_hash})"
-            bits_of = (
-                f"transform(sequence(0, {n_bits - 1}), j -> "
-                f"CAST((pmod(element_at({a_arr}, j + 1) * h "
-                f"+ element_at({b_arr}, j + 1), {_MERSENNE}) "
-                "% 2 * 2 - 1) AS INT))"
-            )
-        else:
-            hashes = f"transform({words}, w -> xxhash64(w))"
-            bits_of = (
-                f"transform(sequence(0, {n_bits - 1}), "
-                "j -> bit_get(h, j) * 2 - 1)"
-            )
-        counts = (
-            f"aggregate({hashes}, array_repeat(0, {n_bits}), "
-            f"(acc, h) -> zip_with(acc, {bits_of}, (a, b) -> a + b))"
-        )
-        low = (
-            f"aggregate(reverse(slice({counts}, 1, {n_bits - 1})), "
-            "CAST(0 AS BIGINT), "
-            "(acc, cnt) -> acc * 2 + CASE WHEN cnt > 0 THEN 1 ELSE 0 END)"
-        )
-        return F.expr(
-            f"CASE WHEN element_at({counts}, {n_bits}) > 0 "
-            f"THEN {low} + (-9223372036854775807L - 1L) ELSE {low} END"
-        )
-
-    c = text
-    words = F.split(trim_ws(c), r"\s+")
-    idx = F.sequence(F.lit(0), F.lit(n_bits - 1))
+    words = f"split(regexp_replace(`{text}`, '^\\\\s+|\\\\s+$', ''), '\\\\s+')"
     if portable:
         params = _affine_params(n_bits, seed=7)
-        a_arr = array_lit([a for a, _ in params])
-        b_arr = array_lit([b for _, b in params])
-        hashes = F.transform(words, portable_word_hash)
-
-        def bits_of(h: Column) -> Column:
-            return F.transform(
-                idx,
-                lambda j: (
-                    F.pmod(
-                        F.element_at(a_arr, j + 1) * h
-                        + F.element_at(b_arr, j + 1),
-                        F.lit(_MERSENNE),
-                    )
-                    % 2
-                    * 2
-                    - 1
-                ).cast("int"),
-            )
-
+        a_arr = sql_literal([a for a, _ in params])
+        b_arr = sql_literal([b for _, b in params])
+        hashes = f"transform({words}, w -> {_poly_hash_sql('w')})"
+        bits_of = (
+            f"transform(sequence(0, {n_bits - 1}), j -> "
+            f"CAST((pmod(element_at({a_arr}, j + 1) * h "
+            f"+ element_at({b_arr}, j + 1), {_MERSENNE}) "
+            "% 2 * 2 - 1) AS INT))"
+        )
     else:
-        hashes = F.transform(words, lambda w: F.xxhash64(w))
-
-        def bits_of(h: Column) -> Column:
-            return F.transform(idx, lambda j: F.bit_get(h, j) * 2 - 1)
-
-    counts = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), n_bits),
-        lambda acc, h: F.zip_with(acc, bits_of(h), lambda a, b: a + b),
+        hashes = f"transform({words}, w -> xxhash64(w))"
+        bits_of = (
+            f"transform(sequence(0, {n_bits - 1}), "
+            "j -> bit_get(h, j) * 2 - 1)"
+        )
+    counts = (
+        f"aggregate({hashes}, array_repeat(0, {n_bits}), "
+        f"(acc, h) -> zip_with(acc, {bits_of}, (a, b) -> a + b))"
     )
     # pack bits 62..0 by Horner's rule (acc stays < 2^63, ANSI-safe) …
-    low = F.aggregate(
-        F.reverse(F.slice(counts, 1, n_bits - 1)),
-        F.lit(0).cast("bigint"),
-        lambda acc, cnt: acc * 2 + F.when(cnt > 0, 1).otherwise(0),
+    low = (
+        f"aggregate(reverse(slice({counts}, 1, {n_bits - 1})), "
+        "CAST(0 AS BIGINT), "
+        "(acc, cnt) -> acc * 2 + CASE WHEN cnt > 0 THEN 1 ELSE 0 END)"
     )
-    # … and add bit 63 as its two's-complement value (lit(2^63) would overflow)
-    return F.when(
-        F.element_at(counts, n_bits) > 0, low + F.lit(-(1 << 63)).cast("bigint")
-    ).otherwise(low)
+    # … and add bit 63 as its two's-complement value (2^63 overflows)
+    return F.expr(
+        f"CASE WHEN element_at({counts}, {n_bits}) > 0 "
+        f"THEN {low} + (-9223372036854775807L - 1L) ELSE {low} END"
+    )
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -30,14 +30,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataengineer_spark.operators.preparation import _POLY_MOD
+
 IMAGE_FEATURE_DIM = 16
 
 _FEATURE_SCHEMA = (
     "media_id long, kind string, feature array<float>, feat_norm double"
 )
-
-
-_POLY_MOD = 1_000_003  # preparation.portable_word_hash's modulus
 
 
 def _fake_feature(payload: bytes | None, dim: int) -> np.ndarray:

@@ -507,7 +507,9 @@ def portable_hash_fixed(s: Column, n: int) -> Column:
     ANSI), and ``(x mod p)·31 + c ≡ x·31 + c (mod p)``.  The CALLER
     guarantees length — on shorter input the ``ascii('') = 0`` padding
     silently changes the value, so guard with ``length(s) == n`` and
-    fall back to :func:`portable_word_hash`.
+    fall back to :func:`portable_word_hash`.  The MinHash shingle stage
+    unrolls the same cadence in SQL text
+    (``dedup._shingle_hashes_from_cps_sql``).
 
     ``s`` MUST be a cheap reference (a lambda variable or plain column):
     the unrolled form reads ``s`` once per character, and Catalyst
@@ -515,23 +517,9 @@ def portable_hash_fixed(s: Column, n: int) -> Column:
     re-run per char (see portable_word_hash's docstring for the
     incident this rule comes from).
     """
-    return poly_unrolled(
-        lambda j: F.ascii(s.substr(F.lit(j + 1), F.lit(1))), n
-    )
+    def code_at(j: int) -> Column:
+        return F.ascii(s.substr(F.lit(j + 1), F.lit(1)))
 
-
-def poly_unrolled(code_at, n: int) -> Column:
-    """The unrolled ``(acc*31 + code) % 1_000_003`` polynomial, shared by
-    every fixed-length fast path (``portable_hash_fixed``,
-    ``dedup.char_shingle_hashes``) so the mod cadence — the thing the
-    int64-overflow proof depends on — lives in exactly one place.
-
-    ``code_at(j)`` returns the codepoint Column of the 0-based j-th
-    character and MUST be built from cheap references (lambda variables
-    or plain columns; Catalyst inlines captures).  Reduced mod p every
-    8 steps: an unreduced prefix stays < p·31⁸ ≈ 8.6e17, inside int64
-    under ANSI, and ``(x mod p)·31 + c ≡ x·31 + c (mod p)``.
-    """
     acc = code_at(0).cast("long")
     since_mod = 0
     for j in range(1, n):

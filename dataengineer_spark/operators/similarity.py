@@ -15,6 +15,8 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataengineer_spark.tuning import sql_literal
+
 
 # -- single-parse SQL expression builders ------------------------------------
 #
@@ -22,17 +24,17 @@ from pyspark.sql import functions as F
 # round trip per F.* call, and the higher-order-function lambdas cost
 # several each; a pq_encode + reconstruction plan measured 4,048 round
 # trips ≈ 2.8 s of DRIVER time per query BUILD (round-11 profile) — more
-# than the queries' execution.  Each ``*_s`` helper renders the identical
-# expression as ONE SQL string, parsed JVM-side in a single call
-# (``F.expr``): same functions, same lambda shapes, same literals → the
-# same Catalyst tree and bit-identical values (oracle-verified).  Helpers
-# take/return SQL fragments; public wrappers accept ``Column | str`` and
-# keep the old Column path for callers whose inputs are not expressible
-# as SQL text.
+# than the queries' execution.  So every hot fold has ONE implementation:
+# a ``*_s`` helper that renders it as a SQL string, parsed JVM-side in a
+# single call (``F.expr``).  Helpers take and return SQL fragments (a
+# quoted column name, ``_vec_s(col)``, a ``slice(...)`` of one); the
+# public builders take the same fragments and return the parsed Column.
+# Values are pinned against left-fold pure-Python references in
+# tests/test_operators.py::TestSqlExprTwins.
 
 
 def _dot_s(a: str, b: str) -> str:
-    """SQL twin of :func:`dot` (same zip_with/aggregate left fold)."""
+    """``a · b`` as a zip_with/aggregate left fold."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
         "(acc, v) -> acc + v)"
@@ -40,7 +42,7 @@ def _dot_s(a: str, b: str) -> str:
 
 
 def _l2_s(a: str) -> str:
-    """SQL twin of :func:`l2_norm`."""
+    """``‖a‖₂``: sqrt of a left-fold sum of squares."""
     return (
         f"sqrt(aggregate(transform({a}, x -> x * x), 0.0D, "
         "(acc, v) -> acc + v))"
@@ -48,7 +50,7 @@ def _l2_s(a: str) -> str:
 
 
 def _sqdist_s(a: str, b: str) -> str:
-    """SQL twin of :func:`sqdist` (same left fold)."""
+    """``‖a − b‖²`` as a left fold."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), 0.0D, "
         "(acc, v) -> acc + v)"
@@ -60,30 +62,30 @@ def _vec_s(col_name: str) -> str:
     return f"CAST(`{col_name}` AS ARRAY<DOUBLE>)"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two array<numeric> columns (JVM-side).  String
-    args (column names / SQL fragments) build via one parsed expression."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_s(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _matvec_s(vec: str, mat: list[list[float]]) -> str:
+    """``vec @ matᵀ`` as ONE fold over ``vec``: the accumulator is the
+    width-``len(mat)`` partial-sum array and ``mat`` ships transposed
+    (element j holds ``[mat[0][j], ..., mat[-1][j]]``) as a single parsed
+    literal, so the interpreter makes one pass regardless of the output
+    width.  Shared by :func:`project`, :func:`lsh_bucket` and
+    :func:`pq_encode`."""
+    pmat = sql_literal([[row[j] for row in mat] for j in range(len(mat[0]))])
+    return (
+        f"aggregate(zip_with({vec}, {pmat}, "
+        "(x, row) -> transform(row, pv -> x * pv)), "
+        f"array_repeat(0.0D, {len(mat)}), "
+        "(acc, contrib) -> zip_with(acc, contrib, (a, c) -> a + c))"
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(_l2_s(a))
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
+def dot(a: str, b: str) -> Column:
+    """Dot product of two array<numeric> SQL fragments (JVM-side)."""
+    return F.expr(_dot_s(a, b))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL when either norm is 0."""
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom > 0, dot(a, b) / denom)
+def l2_norm(a: str) -> Column:
+    """L2 norm of an array<numeric> SQL fragment."""
+    return F.expr(_l2_s(a))
 
 
 def brute_force_top_k(
@@ -99,12 +101,12 @@ def brute_force_top_k(
     orderBy+limit executes as per-partition top-k + driver merge of k·p
     rows, so no shuffle of the scored table.
     """
-    from dataengineer_spark.tuning import array_lit
-
-    q = array_lit([float(x) for x in query_vec])
-    scored = df.select(
-        F.col(id_col), cosine(F.col(vec_col).cast("array<double>"), q).alias("cos_sim")
-    )
+    v = _vec_s(vec_col)
+    q = sql_literal([float(x) for x in query_vec])
+    denom = f"({_l2_s(v)} * {_l2_s(q)})"
+    # NULL when either norm is 0
+    cos = F.expr(f"CASE WHEN {denom} > 0 THEN {_dot_s(v, q)} / {denom} END")
+    scored = df.select(F.col(id_col), cos.alias("cos_sim"))
     return scored.orderBy(F.col("cos_sim").desc_nulls_last(), F.col(id_col)).limit(k)
 
 
@@ -157,12 +159,12 @@ def pairwise_top_k(
     q = queries.select(
         F.col(q_id).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("_qv"),
-        l2_norm(F.col(vec_col).cast("array<double>")).alias("_qn"),
+        l2_norm(_vec_s(vec_col)).alias("_qn"),
     )
     c = corpus.select(
         F.col(c_id).alias("corpus_id"),
         F.col(vec_col).cast("array<double>").alias("_cv"),
-        l2_norm(F.col(vec_col).cast("array<double>")).alias("_cn"),
+        l2_norm(_vec_s(vec_col)).alias("_cn"),
     )
     denom = F.col("_qn") * F.col("_cn")
     cos = F.when(denom > 0, dot("_qv", "_cv") / denom)
@@ -224,58 +226,19 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def _lsh_bucket_s(vec: str, planes: list[list[float]]) -> str:
-    """SQL twin of :func:`lsh_bucket` — identical fold structure."""
-    from dataengineer_spark.tuning import sql_literal
-
-    n_planes = len(planes)
-    pmat = sql_literal([[p[j] for p in planes] for j in range(len(planes[0]))])
-    bits = sql_literal([1 << i for i in range(n_planes)])
-    sums = (
-        f"aggregate(zip_with({vec}, {pmat}, "
-        "(x, row) -> transform(row, pv -> x * pv)), "
-        f"array_repeat(0.0D, {n_planes}), "
-        "(acc, contrib) -> zip_with(acc, contrib, (a, c) -> a + c))"
-    )
-    return (
-        f"aggregate(zip_with({sums}, {bits}, "
-        "(s, bit) -> CASE WHEN s > 0 THEN bit ELSE 0 END), 0, "
-        "(acc, v) -> acc + v)"
-    )
-
-
-def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
     """Random-hyperplane signature: bit i = sign(vec·plane_i) → int bucket.
 
     ONE fold over the vector carries all plane partial sums as an array
-    accumulator (the minhash_signature pattern): per-element work is a
+    accumulator (:func:`_matvec_s`): per-element work is a
     width-``n_planes`` zip instead of ``n_planes`` separate interpreted
-    folds — measured ~4× faster in the expression interpreter.  String
-    ``vec`` builds the whole signature as one parsed SQL expression
-    (round-11: the Column path cost ~100 py4j round trips per call).
+    folds — measured ~4× faster in the expression interpreter.
     """
-    if isinstance(vec, str):
-        return F.expr(_lsh_bucket_s(vec, planes))
-    from dataengineer_spark.tuning import array_lit
-
-    n_planes = len(planes)
-    # planes transposed to per-dimension rows (element j holds
-    # [plane_0[j], ..., plane_{n-1}[j]]), shipped as ONE parsed literal —
-    # per-element F.lit construction costs ~0.5 s of driver time per call
-    pmat = array_lit([[p[j] for p in planes] for j in range(len(planes[0]))])
-    sums = F.aggregate(
-        F.zip_with(vec, pmat, lambda x, row: F.transform(row, lambda pv: x * pv)),
-        F.array_repeat(F.lit(0.0), n_planes),
-        lambda acc, contrib: F.zip_with(acc, contrib, lambda a, c: a + c),
-    )
-    return F.aggregate(
-        F.zip_with(
-            sums,
-            array_lit([1 << i for i in range(n_planes)]),
-            lambda s, bit: F.when(s > 0, bit).otherwise(F.lit(0)),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
+    bits = sql_literal([1 << i for i in range(len(planes))])
+    return F.expr(
+        f"aggregate(zip_with({_matvec_s(vec, planes)}, {bits}, "
+        "(s, bit) -> CASE WHEN s > 0 THEN bit ELSE 0 END), 0, "
+        "(acc, v) -> acc + v)"
     )
 
 
@@ -539,9 +502,12 @@ def _centroids(dim: int, n_centroids: int, seed: int = 7) -> list[list[float]]:
 
 
 def _cell_scores_s(vec: str, cents: list[list[float]]) -> str:
-    """SQL twin of :func:`_cell_scores`."""
-    from dataengineer_spark.tuning import sql_literal
+    """array<struct<score,cell>> of centroid-affinity scores.
 
+    score = vec·centroid — cosine-ORDER-equivalent for one vec (the
+    1/|vec| factor is a shared positive divisor), so the norm fold per
+    centroid the cosine form paid is dropped; the codebook ships as one
+    parsed literal."""
     cmat = sql_literal(cents)
     return (
         f"transform({cmat}, (c, i) -> "
@@ -549,33 +515,16 @@ def _cell_scores_s(vec: str, cents: list[list[float]]) -> str:
     )
 
 
-def _cell_scores(vec: Column | str, cents: list[list[float]]) -> Column:
-    """array<struct<score,cell>> of centroid-affinity scores.
+def nearest_cell(vec: str, cents: list[list[float]]) -> Column:
+    """Index of the nearest (max cosine) centroid — the IVF assignment.
 
-    score = vec·centroid — cosine-ORDER-equivalent for one vec (the
-    1/|vec| factor is a shared positive divisor), so the norm fold per
-    centroid the cosine form paid is dropped; the codebook ships as one
-    parsed literal (see tuning.array_lit); a string ``vec`` parses the
-    whole scores array in one call."""
-    if isinstance(vec, str):
-        return F.expr(_cell_scores_s(vec, cents))
-    from dataengineer_spark.tuning import array_lit
-
-    cmat = array_lit(cents)
-    return F.transform(
-        cmat,
-        lambda c, i: F.struct(dot(vec, c).alias("score"), i.alias("cell")),
-    )
-
-
-def nearest_cell(vec: Column | str, cents: list[list[float]]) -> Column:
-    """Index of the nearest (max cosine) centroid — the IVF assignment."""
-    if isinstance(vec, str):
-        # struct compare: score first, then cell (same as array_max below)
-        return F.expr(f"array_max({_cell_scores_s(vec, cents)}).cell")
-    scores = _cell_scores(vec, cents)
-    best = F.array_max(scores)  # struct compare: score first, then cell
-    return best.getField("cell")
+    A NULL ``vec`` gets the HIGHEST cell id, not NULL: every score is
+    NULL, so the struct max falls to the cell tie-break.  Downstream
+    this is harmless (``ivf_top_k`` scores the row NULL and ranks it
+    last; ``kmeans_codebook``'s posexplode of a NULL vector adds no
+    component), and it is pinned in tests."""
+    # struct compare: score first, then cell
+    return F.expr(f"array_max({_cell_scores_s(vec, cents)}).cell")
 
 
 def ivf_top_k(
@@ -615,7 +564,7 @@ def ivf_top_k(
         l2_norm("_cv").alias("_cn"),
     )
     probe = F.slice(
-        F.reverse(F.array_sort(_cell_scores("_qv", cents))), 1, n_probe
+        F.reverse(F.array_sort(F.expr(_cell_scores_s("_qv", cents)))), 1, n_probe
     )
     q = (
         queries.select(
@@ -690,34 +639,21 @@ def brute_force_top_k_arrow(
 
 
 def nearest_cell_of(
-    vec: Column | str, pairs: list[tuple[int, list[float]]]
+    vec: str, pairs: list[tuple[int, list[float]]]
 ) -> Column:
     """IVF assignment against an EXPLICIT (cell_id, centroid) codebook —
     like ``nearest_cell`` but ids survive empty-cell drops during k-means
     training. Max dot product; ties go to the larger cell id (struct
-    max), mirrored in the SQL oracles as ORDER BY score DESC, cell DESC."""
-    if isinstance(vec, str):
-        from dataengineer_spark.tuning import sql_literal
-
-        cmat = sql_literal([c for _, c in pairs])
-        ids = sql_literal([cid for cid, _ in pairs])
-        return F.expr(
-            f"array_max(transform({cmat}, (c, i) -> "
-            f"struct({_dot_s(vec, 'c')} AS score, "
-            f"element_at({ids}, i + 1) AS cell))).cell"
-        )
-    from dataengineer_spark.tuning import array_lit
-
-    cmat = array_lit([c for _, c in pairs])
-    ids = array_lit([cid for cid, _ in pairs])
-    scores = F.transform(
-        cmat,
-        lambda c, i: F.struct(
-            dot(vec, c).alias("score"),
-            F.element_at(ids, i + F.lit(1)).alias("cell"),
-        ),
+    max), mirrored in the SQL oracles as ORDER BY score DESC, cell DESC.
+    As in ``nearest_cell``, a NULL ``vec`` ties every score at NULL and
+    gets the largest cell id."""
+    cmat = sql_literal([c for _, c in pairs])
+    ids = sql_literal([cid for cid, _ in pairs])
+    return F.expr(
+        f"array_max(transform({cmat}, (c, i) -> "
+        f"struct({_dot_s(vec, 'c')} AS score, "
+        f"element_at({ids}, i + 1) AS cell))).cell"
     )
-    return F.array_max(scores).getField("cell")
 
 
 def _exact_mean_col() -> Column:
@@ -1044,17 +980,11 @@ def semantic_dedup(
 # -- product quantization (PQ / ADC) ----------------------------------------
 
 
-def sqdist(a: Column | str, b: Column | str) -> Column:
-    """Squared L2 distance of two array<double> columns (left fold, so the
+def sqdist(a: str, b: str) -> Column:
+    """Squared L2 distance of two array<double> SQL fragments (left fold,
 
-    summation order is fixed — oracles replay it bit-for-bit)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_sqdist_s(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    so the summation order is fixed — oracles replay it bit-for-bit)."""
+    return F.expr(_sqdist_s(a, b))
 
 
 def pq_codebook(
@@ -1088,31 +1018,22 @@ def pq_encode(
     the raw vector: the representation that lets a 100 TB corpus's index
     fit in a fraction of the footprint and an ADC scan read 64× less.
     """
-    from dataengineer_spark.tuning import sql_literal
-
     dsub = len(codebook[0][0])
     # round-11: the whole m-code array parses as ONE SQL expression —
     # the per-subspace Column/lambda construction cost ~2 s of py4j
     # driver time per plan build (more than the encode's execution).
     # Expression structure is unchanged: argmin ||s-c||² ≡ argmax
     # s·c - ||c||²/2 (||s||² is constant per row), ONE fold carries all
-    # ksub dot partial sums (the lsh_bucket accumulator pattern), the
-    # half-norms fold in as literals computed driver-side with the same
-    # left-fold order the oracle repr's; max score wins with ties to the
+    # ksub dot partial sums (``_matvec_s``), the half-norms fold in as
+    # literals computed driver-side with the same left-fold order the
+    # oracle repr's; max score wins with ties to the
     # LOWER index via the negated-index struct field (mirrors the SQL
     # oracle's list_max over {'s','ni'}).
     v = _vec_s(vec_col)
     codes = []
     for j, cb in enumerate(codebook):
         sub = f"slice({v}, {j * dsub + 1}, {dsub})"
-        ksub = len(cb)
-        pmat = sql_literal([[c[t] for c in cb] for t in range(dsub)])
-        dots = (
-            f"aggregate(zip_with({sub}, {pmat}, "
-            "(x, row) -> transform(row, cv -> x * cv)), "
-            f"array_repeat(0.0D, {ksub}), "
-            "(acc, contrib) -> zip_with(acc, contrib, (a, c) -> a + c))"
-        )
+        dots = _matvec_s(sub, cb)
         halves = sql_literal([_half_sqnorm(c) for c in cb])
         scores = f"zip_with({dots}, {halves}, (d, h) -> d - h)"
         best = (
@@ -1196,31 +1117,11 @@ def random_projection_matrix(
     return [[rnd.gauss(0.0, 1.0) * s for _ in range(dim)] for _ in range(out_dim)]
 
 
-def project(vec: Column | str, mat: list[list[float]]) -> Column:
-    """``vec @ mat.T`` as ONE fold over the input vector: the accumulator
-
-    is the width-``out_dim`` partial-sum array and the matrix ships
-    transposed as a single parsed literal (the lsh_bucket pattern — one
-    interpreted pass regardless of out_dim).  Map-only; no UDF."""
-    out_dim = len(mat)
-    if isinstance(vec, str):
-        from dataengineer_spark.tuning import sql_literal
-
-        pmat = sql_literal([[m[j] for m in mat] for j in range(len(mat[0]))])
-        return F.expr(
-            f"aggregate(zip_with({vec}, {pmat}, "
-            "(x, row) -> transform(row, pv -> x * pv)), "
-            f"array_repeat(0.0D, {out_dim}), "
-            "(acc, contrib) -> zip_with(acc, contrib, (a, c) -> a + c))"
-        )
-    from dataengineer_spark.tuning import array_lit
-
-    pmat = array_lit([[m[j] for m in mat] for j in range(len(mat[0]))])
-    return F.aggregate(
-        F.zip_with(vec, pmat, lambda x, row: F.transform(row, lambda pv: x * pv)),
-        F.array_repeat(F.lit(0.0), out_dim),
-        lambda acc, contrib: F.zip_with(acc, contrib, lambda a, c: a + c),
-    )
+def project(vec: str, mat: list[list[float]]) -> Column:
+    """``vec @ mat.T`` for an array<double> SQL fragment, as ONE fold
+    over the input vector (:func:`_matvec_s` — one interpreted pass
+    regardless of out_dim).  Map-only; no UDF."""
+    return F.expr(_matvec_s(vec, mat))
 
 
 def project_py(vec: list[float], mat: list[list[float]]) -> list[float]:
@@ -1286,7 +1187,7 @@ def probe_cells_py(
     """Driver-side probe-cell selection for a LITERAL query vector: the
 
     same left-fold dot products and the same (score desc, cell desc)
-    tie order as the ``_cell_scores``/``reverse(array_sort(...))``
+    tie order as the ``_cell_scores_s``/``reverse(array_sort(...))``
     expression path, so the resulting cell list is a shared constant an
     oracle can inline verbatim."""
     scored = []
@@ -1394,8 +1295,6 @@ def semantic_decontaminate(
     re-folds the row norm once more, a ~2/|bench| overhead accepted for
     NULL-correct degenerate rows.
     """
-    from dataengineer_spark.tuning import sql_literal
-
     unit = _unit_bench(bench_vectors)
     if not unit:
         return corpus.select(
@@ -1572,8 +1471,6 @@ def pq_reconstruction_error(
 
     Output: (subspace, n_vecs, mse) ordered by subspace.
     """
-    from dataengineer_spark.tuning import sql_literal
-
     enc = pq_encode(df, codebook, vec_col=vec_col, out="_codes")
     dsub = len(codebook[0][0])
     # round-11: one parsed expression for the whole per-subspace error
@@ -1813,7 +1710,7 @@ def embedding_outlier_report(
         else _centroids(dim, n_centroids, seed)
     )
     base = _complete_vectors(df, vec_col, dim)
-    best = F.array_max(_cell_scores("_v", cents))
+    best = F.array_max(F.expr(_cell_scores_s("_v", cents)))
     nrm = l2_norm("_v")
     assigned = base.select(
         best.getField("cell").alias("cell"),

@@ -178,7 +178,7 @@ def winnowed_fingerprints(
         # every char n-shingle is exactly n chars except the single
         # short-text shingle — take the unrolled fixed-length poly on
         # the fast path, the generic fold on the rare short one.
-        # (positional hashing à la dedup.char_shingle_hashes is NOT
+        # (positional hashing à la dedup._shingle_hashes_sql is NOT
         # usable here: winnowing keeps the k smallest hash VALUES with
         # duplicates, so dedup must happen on the shingle STRINGS.)
         def hash_fn(s: Column) -> Column:

@@ -643,7 +643,7 @@ class TestRandomProjection:
         vecs = [(i, [rnd.gauss(0, 1) for _ in range(16)]) for i in range(20)]
         df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
         out = df.select(
-            "vec_id", sim_ops.project(F.col("embedding"), mat).alias("rv")
+            "vec_id", sim_ops.project("`embedding`", mat).alias("rv")
         )
         got = {r["vec_id"]: r["rv"] for r in out.collect()}
         m = np.array(mat)
@@ -1041,7 +1041,7 @@ class TestFanOut:
 
 class TestCharShingleHashes:
     def test_matches_hashed_char_shingles(self, spark):
-        # the positional fast path must produce the same hash SET as
+        # the positional SQL forms must produce the same hash SET as
         # hashing the materialized distinct shingles, for both families —
         # covers normal, shorter-than-n, empty, unicode, and NULL text
         df = spark.createDataFrame(
@@ -1052,12 +1052,22 @@ class TestCharShingleHashes:
         from pyspark.sql import functions as F
         from dataengineer_spark.operators.preparation import portable_word_hash
 
+        staged = df.select(
+            "doc_id",
+            "text",
+            F.expr(
+                "transform(split(`text`, ''), x -> CAST(ascii(x) AS BIGINT))"
+            ).alias("_cps"),
+        )
         for portable in (True, False):
-            fast = df.select(
-                "doc_id",
-                F.array_sort(
-                    dedup_ops.char_shingle_hashes(F.col("text"), 5, portable)
-                ).alias("h"),
+            if portable:
+                fast_sql = dedup_ops._shingle_hashes_from_cps_sql(
+                    "`text`", "`_cps`", 5
+                )
+            else:
+                fast_sql = dedup_ops._shingle_hashes_sql("`text`", 5)
+            fast = staged.select(
+                "doc_id", F.array_sort(F.expr(fast_sql)).alias("h")
             )
             if portable:
                 hash_fn = portable_word_hash
@@ -1111,103 +1121,78 @@ class TestCharShingleHashes:
             if r["fixed"] is not None:
                 assert r["fixed"] == r["ref"], r
 
-    def test_signature_parity_fast_vs_generic(self, spark):
-        # minhash_from_hashes(char_shingle_hashes(...)) ==
-        # minhash_signature(char_shingles(...)) bit-for-bit
-        from pyspark.sql import functions as F
+    _EDGE_ROWS = [
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumped over the lazy dog"),
+        (3, "ab"), (4, ""), (5, None), (6, "héllo wörld çæ"),
+        (7, "x" * 300),
+    ]
 
-        df = spark.createDataFrame(
-            [(i, t) for i, t in enumerate(
-                ["the quick brown fox jumps", "the quick brown fox jumped",
-                 "completely different text here", "ab", ""])],
-            "doc_id long, text string",
-        )
+    def test_expr_signatures_match_python_reference(self, spark):
+        # the PRODUCTION signature stage (staged shingle hashes, then the
+        # array_min MinHash fold) against min((a·h + b) mod p) in Python,
+        # both families, over short/empty/NULL/unicode/repetitive text
+        from functools import reduce
+
+        from dataengineer_spark.operators.preparation import _POLY_MOD
+
+        p = dedup_ops._MERSENNE
+        df = spark.createDataFrame(self._EDGE_ROWS, "doc_id long, _t string")
+
+        def poly(t):
+            return reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0)
+
+        def portable_hashes(t):
+            if t is None:
+                return set()  # NULL text: the hash array is [NULL]
+            if len(t) < 5:
+                return {poly(t)}
+            return {poly(t[i:i + 5]) for i in range(len(t) - 4)}
+
+        # xxhash64 family: the definitional char_shingles + xxhash64 set
+        xx = {
+            r["doc_id"]: set(r["h"])
+            for r in df.select(
+                "doc_id",
+                F.transform(
+                    dedup_ops.char_shingles(F.col("_t"), 5),
+                    lambda x: F.pmod(F.xxhash64(x), F.lit(p)),
+                ).alias("h"),
+            ).collect()
+        }
+        params = dedup_ops._affine_params(32)
+
+        def minhash(hashes):
+            return [
+                min(((a * h + b) % p for h in hashes), default=p)
+                for a, b in params
+            ]
+
         for portable in (True, False):
-            fast = df.select(
-                "doc_id",
-                dedup_ops.minhash_from_hashes(
-                    dedup_ops.char_shingle_hashes(F.col("text"), 5, portable)
-                ).alias("sig"),
-            )
-            slow = df.select(
-                "doc_id",
-                dedup_ops.minhash_signature(
-                    dedup_ops.char_shingles(F.col("text"), 5),
-                    portable=portable,
-                ).alias("sig"),
-            )
-            f = {r["doc_id"]: r["sig"] for r in fast.collect()}
-            s = {r["doc_id"]: r["sig"] for r in slow.collect()}
-            assert f == s, f"portable={portable}"
-
-    def test_expr_signatures_match_column_builders(self, spark):
-        # round-12 (and ADVICE r11 item 1): pins the PRODUCTION
-        # composition _expr_signatures actually ships — the staged
-        # codepoint-array shingle fold (portable) and the staged
-        # array_min MinHash fold (_minhash_min_sql, both families) —
-        # value-identical to the Column builders over the same
-        # short/empty/NULL/unicode edge frame as the SQL-string test
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame(
-            [(1, "the quick brown fox jumps over the lazy dog"),
-             (2, "the quick brown fox jumped over the lazy dog"),
-             (3, "ab"), (4, ""), (5, None), (6, "héllo wörld çæ"),
-             (7, "x" * 300)],
-            "doc_id long, _t string",
-        )
-        for portable in (True, False):
-            col_form = df.select(
-                "doc_id",
-                dedup_ops.minhash_from_hashes(
-                    dedup_ops.char_shingle_hashes(F.col("_t"), 5, portable),
-                    32,
-                ).alias("_sig"),
-            )
-            prod_form = dedup_ops._expr_signatures(
-                df, "doc_id", "_t", 5, 32, portable, assume_fanned=True
-            )
-            c = {r["doc_id"]: r["_sig"] for r in col_form.collect()}
-            p = {r["doc_id"]: r["_sig"] for r in prod_form.collect()}
-            assert c == p, f"portable={portable}"
+            got = {
+                r["doc_id"]: r["_sig"]
+                for r in dedup_ops._expr_signatures(
+                    df, "doc_id", "_t", 5, 32, portable, assume_fanned=True
+                ).collect()
+            }
+            want = {
+                i: minhash(portable_hashes(t) if portable else xx[i])
+                for i, t in self._EDGE_ROWS
+            }
+            assert got == want, f"portable={portable}"
 
     def test_sql_string_forms_match_column_builders(self, spark):
-        # round-9: _expr_signatures builds its signature expression as
-        # ONE parsed SQL string (~200x fewer py4j round trips at plan
-        # build); this pins the SQL text value-identical to the Column
-        # builders — both hash families, both band key forms, plus the
-        # short/empty/NULL/unicode edges the shingle CASE guards
+        # round-9: _band_buckets builds its bands×rows struct array as
+        # ONE parsed SQL string; pin it value-identical to the per-band
+        # Column construction it replaced — both band key forms, over
+        # the production signatures of the edge frame
         from pyspark.sql import functions as F
 
-        df = spark.createDataFrame(
-            [(1, "the quick brown fox jumps over the lazy dog"),
-             (2, "the quick brown fox jumped over the lazy dog"),
-             (3, "ab"), (4, ""), (5, None), (6, "héllo wörld çæ"),
-             (7, "x" * 300)],
-            "doc_id long, _t string",
-        )
+        df = spark.createDataFrame(self._EDGE_ROWS, "doc_id long, _t string")
         for portable in (True, False):
-            col_form = df.select(
-                "doc_id",
-                dedup_ops.minhash_from_hashes(
-                    dedup_ops.char_shingle_hashes(F.col("_t"), 5, portable),
-                    32,
-                ).alias("_sig"),
+            sig = dedup_ops._expr_signatures(
+                df, "doc_id", "_t", 5, 32, portable, assume_fanned=True
             )
-            sql_form = df.select(
-                "doc_id",
-                F.expr(
-                    dedup_ops._minhash_sql(
-                        dedup_ops._shingle_hashes_sql("`_t`", 5, portable),
-                        32,
-                    )
-                ).alias("_sig"),
-            )
-            c = {r["doc_id"]: r["_sig"] for r in col_form.collect()}
-            s = {r["doc_id"]: r["_sig"] for r in sql_form.collect()}
-            assert c == s, f"portable={portable}"
-            # band buckets: one-parsed-array form vs the per-band
-            # Column construction it replaced
             rows = 32 // 8
             def old_bucket(b):
                 joined = F.concat_ws(
@@ -1217,7 +1202,7 @@ class TestCharShingleHashes:
                 )
                 return joined if portable else F.xxhash64(joined)
 
-            old_b = col_form.select(
+            old_b = sig.select(
                 "doc_id",
                 F.explode(F.array(*[
                     F.struct(F.lit(b).alias("band"),
@@ -1225,7 +1210,7 @@ class TestCharShingleHashes:
                     for b in range(8)
                 ])).alias("_band"),
             ).select("doc_id", "_band.band", "_band.bucket")
-            new_b = dedup_ops._band_buckets(sql_form, "doc_id", 32, 8,
+            new_b = dedup_ops._band_buckets(sig, "doc_id", 32, 8,
                                             portable=portable)
             o = {(r["doc_id"], r["band"]): r["bucket"]
                  for r in old_b.collect()}
@@ -1421,7 +1406,7 @@ class TestStoredIvfPqIndex:
         idx = enc.select(
             "vec_id",
             sim_ops.nearest_cell(
-                F.col("embedding").cast("array<double>"), coarse
+                "CAST(`embedding` AS ARRAY<DOUBLE>)", coarse
             ).alias("cell"),
             "pq_code",
         )
@@ -3288,7 +3273,7 @@ class TestPqReconstructionError:
         # reconstruct manually from the codes and compare per-subspace
         # means (any off-by-one in the centroid lookup diverges here)
         from dataengineer_spark.testdata import load_table
-        from dataengineer_spark.tuning import array_lit
+        from dataengineer_spark.tuning import sql_literal
 
         emb = load_table(spark, sf_dir, "embeddings").limit(50)
         cb = sim_ops.pq_codebook(64, m=8, ksub=16, seed=11)
@@ -3299,12 +3284,13 @@ class TestPqReconstructionError:
         assert sorted(out) == list(range(8))
         enc = sim_ops.pq_encode(emb, cb, out="codes")
         dsub = len(cb[0][0])
-        v = F.col("embedding").cast("array<double>")
+        v = "CAST(`embedding` AS ARRAY<DOUBLE>)"
         for j in (0, 3, 7):
-            cent = F.element_at(
-                array_lit(cb[j]), F.element_at(F.col("codes"), j + 1) + 1
+            cent = (
+                f"element_at({sql_literal(cb[j])}, "
+                f"element_at(`codes`, {j + 1}) + 1)"
             )
-            se = sim_ops.sqdist(F.slice(v, j * dsub + 1, dsub), cent)
+            se = sim_ops.sqdist(f"slice({v}, {j * dsub + 1}, {dsub})", cent)
             manual = enc.agg(
                 F.round(
                     F.sum(se.cast("decimal(28,12)")).cast("double")
@@ -4738,10 +4724,10 @@ class TestBurstinessReport:
 
 class TestSqlExprTwins:
     """Round-11: the similarity vector folds build as ONE parsed SQL
-    expression when given string args (plan-BUILD py4j time was the
-    majority of several E3 query walls).  Pin value-identity of every
-    string twin against the Column-API formulation it replaced — null-
-    safe equality over a seeded 64-dim frame."""
+    expression (plan-BUILD py4j time was the majority of several E3
+    query walls).  Each builder is pinned value-for-value against a
+    pure-Python left fold over a seeded 64-dim frame, plus a zero
+    vector and a NULL vector."""
 
     def _frame(self, spark):
         import random
@@ -4754,41 +4740,85 @@ class TestSqlExprTwins:
             rows, "vec_id int, embedding array<double>"
         )
 
-    def test_string_twins_match_column_builders(self, spark):
-        from pyspark.sql import functions as F
+    @staticmethod
+    def _dot_py(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
 
-        from dataengineer_spark.operators import similarity as s
+    def _reference(self, v, cents, pairs, planes, mat):
+        """Python left folds with the builders' float-op order."""
+        s = sim_ops
+        if v is None:
+            return dict.fromkeys(
+                ["dot", "l2_norm", "sqdist", "lsh_bucket", "project"]
+            ) | {
+                # every score is NULL, so the struct max falls to the
+                # cell tie-break: the highest id
+                "nearest_cell": len(cents) - 1,
+                "nearest_cell_of": max(cid for cid, _ in pairs),
+            }
+        q = cents[0]
+        sq = 0.0
+        for x, y in zip(v, q):
+            sq = sq + (x - y) * (x - y)
+        bucket = sum(
+            1 << i for i, t in enumerate(s.project_py(v, planes)) if t > 0
+        )
+        return {
+            "dot": self._dot_py(v, q),
+            "l2_norm": math.sqrt(self._dot_py(v, v)),
+            "sqdist": sq,
+            "lsh_bucket": bucket,
+            "nearest_cell": max(
+                (self._dot_py(v, c), i) for i, c in enumerate(cents)
+            )[1],
+            "nearest_cell_of": max(
+                (self._dot_py(v, c), cid) for cid, c in pairs
+            )[1],
+            "project": s.project_py(v, mat),
+        }
 
-        df = self._frame(spark)
+    def _check(self, spark, rows):
+        from dataengineer_spark.tuning import sql_literal
+
+        s = sim_ops
+        df = self._frame(spark).unionByName(
+            spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+        )
         cents = s._centroids(64, 16, seed=7)
-        pairs = list(enumerate(cents))
+        # non-positional ids: the assignment must return the id, not the index
+        pairs = [(3 * i + 1, c) for i, c in enumerate(cents)]
         planes = s._hyperplanes(64, 8, seed=42)
         mat = s.random_projection_matrix(64, 16, seed=17)
-        v_col = F.col("embedding").cast("array<double>")
-        v_sql = "CAST(`embedding` AS ARRAY<DOUBLE>)"
-        twins = {
-            "dot": (s.dot(v_col, v_col), s.dot(v_sql, v_sql)),
-            "l2_norm": (s.l2_norm(v_col), s.l2_norm(v_sql)),
-            "sqdist": (s.sqdist(v_col, v_col), s.sqdist(v_sql, v_sql)),
-            "lsh_bucket": (
-                s.lsh_bucket(v_col, planes), s.lsh_bucket(v_sql, planes)
-            ),
-            "nearest_cell": (
-                s.nearest_cell(v_col, cents), s.nearest_cell(v_sql, cents)
-            ),
-            "nearest_cell_of": (
-                s.nearest_cell_of(v_col, pairs),
-                s.nearest_cell_of(v_sql, pairs),
-            ),
-            "project": (s.project(v_col, mat), s.project(v_sql, mat)),
-        }
-        for name, (col_form, sql_form) in twins.items():
-            diff = (
-                df.select(col_form.eqNullSafe(sql_form).alias("eq"))
-                .where("NOT eq")
-                .count()
-            )
-            assert diff == 0, f"{name}: string twin diverges in {diff} rows"
+        v = "CAST(`embedding` AS ARRAY<DOUBLE>)"
+        q = sql_literal(cents[0])
+        got = df.select(
+            "vec_id",
+            "embedding",
+            s.dot(v, q).alias("dot"),
+            s.l2_norm(v).alias("l2_norm"),
+            s.sqdist(v, q).alias("sqdist"),
+            s.lsh_bucket(v, planes).alias("lsh_bucket"),
+            s.nearest_cell(v, cents).alias("nearest_cell"),
+            s.nearest_cell_of(v, pairs).alias("nearest_cell_of"),
+            s.project(v, mat).alias("project"),
+        ).collect()
+        assert len(got) == 120 + len(rows)
+        for r in got:
+            want = self._reference(r["embedding"], cents, pairs, planes, mat)
+            for name, w in want.items():
+                assert r[name] == w, (name, r["vec_id"], r[name], w)
+
+    def test_builders_match_python_reference(self, spark):
+        # the zero vector ties every centroid score at 0.0 → highest cell
+        self._check(spark, [(120, [0.0] * 64)])
+
+    def test_null_vector_pins(self, spark):
+        # NULL in, NULL out — except the two cell assignments, which
+        # return the highest cell id (documented, harmless downstream)
+        self._check(spark, [(121, None)])
 
     def test_pq_encode_matches_column_builder(self, spark):
         from pyspark.sql import functions as F
@@ -4832,10 +4862,14 @@ class TestSqlExprTwins:
         new = s.pq_encode(df, cb, out="new").select("vec_id", "new")
         assert ref.join(new, "vec_id").where("old <> new").count() == 0
 
-    def test_simhash_string_twin_matches_column_builder(self, spark):
-        from pyspark.sql import functions as F
+    def test_simhash_matches_python_reference(self, spark):
+        import re
+        from functools import reduce
 
-        from dataengineer_spark.operators.dedup import simhash64
+        from dataengineer_spark.operators.dedup import (
+            _MERSENNE, _affine_params, simhash64,
+        )
+        from dataengineer_spark.operators.preparation import _POLY_MOD
 
         rows = [
             (i, f"the quick brown fox {i} jumps\tover  lazy dog {i * 7 % 13}")
@@ -4843,14 +4877,38 @@ class TestSqlExprTwins:
         ]
         rows += [(120, ""), (121, "   "), (122, "one"), (123, "a\n b \t")]
         df = spark.createDataFrame(rows, "id int, t string")
+        # Java regex \s: the split/trim the SQL form applies
+        ws = "[ \t\n\x0b\f\r]+"
+        tokens = {
+            i: re.split(ws, re.sub(f"^{ws}|{ws}$", "", t)) for i, t in rows
+        }
+        vocab = sorted({w for ts in tokens.values() for w in ts})
+        xx = dict(
+            spark.createDataFrame([(w,) for w in vocab], "w string")
+            .select("w", F.xxhash64("w"))
+            .collect()
+        )
+        params = _affine_params(64, seed=7)
+
+        def poly(w):
+            return reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, w, 0)
+
+        def bits(w, portable):
+            if portable:
+                h = poly(w)
+                return [((a * h + b) % _MERSENNE) % 2 * 2 - 1 for a, b in params]
+            return [((xx[w] >> j) & 1) * 2 - 1 for j in range(64)]
+
+        def simhash(ts, portable):
+            counts = [0] * 64
+            for w in ts:
+                counts = [c + b for c, b in zip(counts, bits(w, portable))]
+            low = sum(1 << j for j in range(63) if counts[j] > 0)
+            return low - (1 << 63) if counts[63] > 0 else low
+
         for portable in (True, False):
-            diff = (
-                df.select(
-                    simhash64("t", portable=portable)
-                    .eqNullSafe(simhash64(F.col("t"), portable=portable))
-                    .alias("eq")
-                )
-                .where("NOT eq")
-                .count()
+            got = dict(
+                df.select("id", simhash64("t", portable=portable)).collect()
             )
-            assert diff == 0, f"simhash64 string twin diverges (portable={portable})"
+            want = {i: simhash(ts, portable) for i, ts in tokens.items()}
+            assert got == want, f"portable={portable}"

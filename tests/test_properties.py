@@ -869,8 +869,8 @@ class TestPpsPythonParity:
 
 
 class TestPortablePolyParity:
-    """The unrolled mod-every-8 polynomial (preparation.poly_unrolled,
-    behind portable_hash_fixed and dedup.char_shingle_hashes) must equal
+    """The unrolled mod-every-8 polynomial (preparation.portable_hash_fixed;
+    dedup._shingle_hashes_from_cps_sql unrolls the same cadence) must equal
     the reference fold for EVERY length, not just the pinned n∈{8,25} —
     the int64-overflow proof depends on the mod cadence, and a cadence
     edit would silently break DuckDB-oracle bit-parity."""
