@@ -27,6 +27,37 @@ from dataengineer_spark.config import RunConfig
 AUDIT_TABLE = "batch"
 
 
+def _audit_row(
+    spark: SparkSession,
+    batch_id: int,
+    pipeline_name: str | None,
+    date_from: str | None,
+    date_to: str | None,
+    comment: str | None,
+) -> DataFrame:
+    """One ``S.BATCH`` audit row as an Arrow local relation.
+
+    ``createDataFrame`` over Python tuples goes through ``parallelize`` and
+    pickle, which costs a 4-task job with a Python worker (0.3–0.4 s) for
+    one row.  An Arrow table typed by ``S.BATCH`` becomes a
+    ``LocalRelation`` in the plan: the append's write job is the only job,
+    NULL dates stay NULL and int64 ids stay exact.  (``tuning.control_frame``
+    is no substitute: it sends any ``None`` down the pickle path.)
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    row = {
+        "batch_id": batch_id,
+        "pipeline_name": pipeline_name,
+        "date_from": date_from,
+        "date_to": date_to,
+        "comment": comment,
+    }
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(S.BATCH))
+    return spark.createDataFrame(table, S.BATCH)
+
+
 @dataclass(frozen=True)
 class BatchContext:
     batch_id: int
@@ -43,7 +74,7 @@ class BatchAllocator:
         if not self.catalog.exists(AUDIT_TABLE):
             return 1
         row = (
-            self.catalog.read(AUDIT_TABLE, S.BATCH)
+            self.catalog.read(AUDIT_TABLE)
             .agg(F.max("batch_id").alias("m"))
             .first()
         )
@@ -52,18 +83,13 @@ class BatchAllocator:
     def open_batch(self, config: RunConfig) -> BatchContext:
         """Allocate an id and persist the audit row (K2 + F8 comment)."""
         batch_id = self._next_id()
-        spark = self.catalog.spark
-        row_df = spark.createDataFrame(
-            [
-                (
-                    batch_id,
-                    config.pipeline_name,
-                    config.date_from,
-                    config.date_to,
-                    config.audit_comment,
-                )
-            ],
-            schema=S.BATCH,
+        row_df = _audit_row(
+            self.catalog.spark,
+            batch_id,
+            config.pipeline_name,
+            config.date_from,
+            config.date_to,
+            config.audit_comment,
         )
         self.catalog.write(row_df, AUDIT_TABLE, mode="append")
         return BatchContext(batch_id=batch_id, config=config)
@@ -73,7 +99,7 @@ class BatchAllocator:
 
         this way (reference prostate_dag.py:59-63).
         """
-        df = self.catalog.read(AUDIT_TABLE, S.BATCH)
+        df = self.catalog.read(AUDIT_TABLE)
         if pipeline_name is not None:
             df = df.where(F.col("pipeline_name") == pipeline_name)
         return df.orderBy(F.col("batch_id").desc()).limit(1)

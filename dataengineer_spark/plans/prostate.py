@@ -2,11 +2,11 @@
 
 The reference DAG (prostate_dag.py:314-319) fanned a cleaned batch into 6
 parallel prediction branches merged at the end (19-column output,
-:180-200). Spark mapping (O2): branches are lazy derivations of one
-upstream; the merge is either a single fused projection (branches are
-narrow derivations — zero joins, zero shuffles) or a keyed multi-join when
-branches are genuinely independent. Airflow's 6 worker processes disappear
-into one job graph.
+:180-200). Every branch here is a narrow derivation of the same upstream
+row, so the fan-in is ONE SQL projection: zero joins, zero shuffles, and
+one ``selectExpr`` call at plan build instead of ~1,100 py4j round trips
+for the same columns built with ``F.*``. Airflow's 6 worker processes
+disappear into one job graph.
 
 Branch bodies in the reference were mostly stubs; the engine implements the
 evidenced constant rule classifier (prostate_dag.py:167-177) and
@@ -16,87 +16,56 @@ oracle, SURVEY.md §5.2.2), keeping the dataflow shape exact.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from dataengineer_spark.operators.joins import fanin_merge
 from dataengineer_spark.schemas import PROSTATE_PRED_FIELDS
 
 from dataengineer_spark.ml.inference import STANDIN_MULT as _STANDIN_MULT
 # (shared with ml.inference.arith_standin_classifier — ONE stand-in hash
 # contract, one place for the DuckDB oracles to mirror)
-_CONSTANT_FIELDS = {"site_code", "behaviour_code", "laterality"}
+
+#: the implemented reference branch (prostate_dag.py:167-177): prostate is
+#: always site C61.9 / behaviour 3 / laterality 00, score 1.0
 _CONSTANT_VALUES = {"site_code": "C61.9", "behaviour_code": "3", "laterality": "00"}
 
 
-def _constant_exprs() -> list[Column]:
-    """The implemented reference branch (prostate_dag.py:167-177): prostate
+def _standin_exprs(field: str, salt: int) -> list[str]:
+    """Deterministic stand-in prediction as SQL text: arithmetic hash of
 
-    is always site C61.9 / behaviour 3 / laterality 00, score 1.0."""
-    out: list[Column] = []
-    for f, v in _CONSTANT_VALUES.items():
-        out.append(F.lit(v).alias(f))
-        out.append(F.lit(1.0).alias(f"{f}_pred_score"))
-    return out
-
-
-def _standin_exprs(field: str, salt: int) -> list[Column]:
-    """Deterministic stand-in prediction: arithmetic hash of (msgid,
-
-    filtered-text length, per-branch salt) → code string + score — the same
-    2-column contract as a real branch, in plain integer arithmetic."""
-    # 2^31 pre-fold keeps the multiply inside int64 for 64-bit ids (ANSI
-    # overflow is a hard error); ids < 2^31 match the oracle's raw form
-    h = F.pmod(
-        F.pmod(F.col("msgid"), F.lit(1 << 31)) * _STANDIN_MULT
-        + F.length(F.coalesce(F.col("filtered_message"), F.lit("")))
-        + salt,
-        F.lit(1_000_000),
+    (msgid, filtered-text length, per-branch salt) → code string + score —
+    the same 2-column contract as a real branch, in plain integer
+    arithmetic.  Literal types are part of the output schema: ``1000.0D``
+    is DOUBLE (a bare ``1000.0`` is DECIMAL in Spark SQL) and the
+    multiplier is a BIGINT literal.  The 2^31 pre-fold keeps the multiply
+    inside int64 for 64-bit ids (ANSI overflow is a hard error); ids < 2^31
+    match the oracle's raw form."""
+    h = (
+        f"pmod(pmod(msgid, 2147483648) * {_STANDIN_MULT}L"
+        f" + length(coalesce(filtered_message, '')) + {salt}, 1000000)"
     )
     return [
-        F.pmod(h, F.lit(100)).cast("string").alias(field),
-        (F.pmod(h, F.lit(1000)).cast("double") / 1000.0).alias(f"{field}_pred_score"),
+        f"CAST(pmod({h}, 100) AS STRING) AS {field}",
+        f"CAST(pmod({h}, 1000) AS DOUBLE) / 1000.0D AS {field}_pred_score",
     ]
-
-
-def constant_branch(segments: DataFrame) -> DataFrame:
-    return segments.select(F.col("msgid").alias("msg_id"), *_constant_exprs())
-
-
-def _standin_branch(segments: DataFrame, field: str, salt: int) -> DataFrame:
-    return segments.select(
-        F.col("msgid").alias("msg_id"), *_standin_exprs(field, salt)
-    )
 
 
 def _standin_fields() -> list[str]:
-    return [f for f in PROSTATE_PRED_FIELDS if f not in _CONSTANT_FIELDS]
+    """Stand-in branch fields in salt order (perfbench's DuckDB replay of
+    the fan-in reads this and ``_CONSTANT_VALUES`` too)."""
+    return [f for f in PROSTATE_PRED_FIELDS if f not in _CONSTANT_VALUES]
 
 
-def run_prostate(segments: DataFrame, fuse: bool = True) -> DataFrame:
+def run_prostate(segments: DataFrame) -> DataFrame:
     """Fan-out 6 branches, fan-in to msg_id + 9 prediction/score pairs
 
-    (reference prostate_dag.py:180-200).
-
-    ``fuse=True`` (default): every branch here is a narrow derivation of
-    the same upstream, so the fan-in collapses to ONE projection — zero
-    joins, zero shuffles (SURVEY §3.3's "single select" fast path).
-    ``fuse=False`` keeps the general dataflow: cache the shared upstream,
-    derive each branch, multi-way outer join on ``msg_id`` — the shape for
-    genuinely independent branches (separate model services, branches that
-    may drop rows).
-    """
-    ordered = ["msg_id"] + [
-        c for f in PROSTATE_PRED_FIELDS for c in (f, f"{f}_pred_score")
-    ]
-    if fuse:
-        exprs = [F.col("msgid").alias("msg_id")] + _constant_exprs()
-        for salt, f in enumerate(_standin_fields()):
-            exprs += _standin_exprs(f, salt)
-        return segments.select(*exprs).select(*ordered)
-    segments = segments.cache()
-    branches = [constant_branch(segments)] + [
-        _standin_branch(segments, f, salt)
-        for salt, f in enumerate(_standin_fields())
-    ]
-    return fanin_merge(branches, on="msg_id", how="outer").select(*ordered)
+    (reference prostate_dag.py:180-200) as one SQL projection of
+    ``segments`` (needs ``msgid`` and ``filtered_message``).  Columns come
+    out in ``schemas.PROSTATE_OUTPUT`` order with its types."""
+    standins = _standin_fields()
+    exprs = ["msgid AS msg_id"]
+    for f in PROSTATE_PRED_FIELDS:
+        if f in _CONSTANT_VALUES:
+            exprs += [f"'{_CONSTANT_VALUES[f]}' AS {f}", f"1.0D AS {f}_pred_score"]
+        else:
+            exprs += _standin_exprs(f, standins.index(f))
+    return segments.selectExpr(*exprs)

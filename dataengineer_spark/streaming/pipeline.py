@@ -297,16 +297,14 @@ def _audited_epoch(
     replay contract is testable: calling this twice with the same
     ``epoch_id`` (a retried batch) must leave exactly one copy of the
     epoch's data partition and one audit row."""
-    from dataengineer_spark import schemas as S
-    from dataengineer_spark.batch import AUDIT_TABLE, stamp_batch
+    from dataengineer_spark.batch import AUDIT_TABLE, _audit_row, stamp_batch
 
-    spark = df.sparkSession
     stamped = stamp_batch(df, epoch_id)
     catalog.overwrite_batch(stamped, table)
     audited = False
     if catalog.exists(AUDIT_TABLE):
         audited = (
-            catalog.read(AUDIT_TABLE, S.BATCH)
+            catalog.read(AUDIT_TABLE)
             .where(
                 (F.col("batch_id") == int(epoch_id))
                 & (F.col("pipeline_name") == pipeline_name)
@@ -316,17 +314,13 @@ def _audited_epoch(
             > 0
         )
     if not audited:
-        audit = spark.createDataFrame(
-            [
-                (
-                    int(epoch_id),
-                    pipeline_name,
-                    None,
-                    None,
-                    f"stream epoch {epoch_id}",
-                )
-            ],
-            schema=S.BATCH,
+        audit = _audit_row(
+            df.sparkSession,
+            int(epoch_id),
+            pipeline_name,
+            None,
+            None,
+            f"stream epoch {epoch_id}",
         )
         catalog.write(audit, AUDIT_TABLE)
 

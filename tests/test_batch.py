@@ -31,6 +31,20 @@ class TestAllocator:
         row = catalog.read(AUDIT_TABLE).first()
         assert "px" in row["comment"] and ctx.batch_id == 1
 
+    def test_audit_row_round_trips_through_arrow(self, spark, catalog):
+        from dataengineer_spark.batch import _audit_row
+
+        big = 2**62 + 1  # not exact as a double: must stay int64 end to end
+        row_df = _audit_row(spark, big, "pipé", None, None, "épreuve — 批次 ✓")
+        plan = row_df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        catalog.write(row_df, AUDIT_TABLE)
+        back = catalog.read(AUDIT_TABLE).collect()
+        assert [tuple(r) for r in back] == [
+            (big, "pipé", None, None, "épreuve — 批次 ✓")
+        ]
+        assert BatchAllocator(catalog).open_batch(RunConfig()).batch_id == big + 1
+
 
 class TestPartitionedLake:
     def test_write_partitions_by_batch(self, spark, catalog):
@@ -66,6 +80,47 @@ class TestPartitionedLake:
         catalog.write(df.withColumn("msg", F.lit("x")), "cleaned_data")
         plan = catalog.read_batch("cleaned_data", 3)._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan
+
+
+class TestDeclaredLakeSchemas:
+    def test_reads_use_declared_types_and_submit_no_job(
+        self, spark, catalog, job_group
+    ):
+        from dataengineer_spark import schemas as S
+        from dataengineer_spark.plans.dx_group import run_dx_group
+
+        source = spark.createDataFrame(
+            [(1, "GROSS: mass\nDIAGNOSIS: carcinoma"), (2, None)],
+            "msgid long, message string",
+        )
+        ctx, _ = run_dx_group(catalog, RunConfig(), source)
+        declared_schemas = {
+            AUDIT_TABLE: S.BATCH,
+            "cleaned_data": S.CLEANED_DATA,
+            "preped_data": S.PREPED_DATA,
+            "prediction_table": S.PREDICTION_TABLE,
+        }
+        for table, schema in declared_schemas.items():
+            # what Spark infers from the files: data columns in file order,
+            # then the batch_id partition column as int
+            inferred = spark.read.parquet(catalog.path(table)).columns
+            with job_group() as jobs:
+                frames = [
+                    catalog.read(table),
+                    catalog.read_batch(table, ctx.batch_id),
+                ]
+            assert jobs == [], (table, jobs)
+            declared = {f.name: f.dataType for f in schema}
+            for df in frames:
+                assert df.columns == inferred, table
+                assert {f.name: f.dataType for f in df.schema} == declared
+                assert df.schema["batch_id"].dataType.simpleString() == "bigint"
+            assert frames[1].count() == (1 if table == AUDIT_TABLE else 2)
+
+        # a table attached from outside the lake keeps inference
+        outside = Catalog(spark, catalog.root + "_other")
+        outside.attach("cleaned_data", catalog.path("cleaned_data"))
+        assert outside.read("cleaned_data").schema["batch_id"].dataType.simpleString() == "int"
 
 
 class TestBucketedTables:

@@ -12,7 +12,11 @@ from dataengineer_spark.config import RunConfig
 from dataengineer_spark.plans.api_variant import publish_stage, run_dx_group_api
 from dataengineer_spark.plans.dx_group import clean_stage, prep_stage, run_dx_group
 from dataengineer_spark.plans.prostate import run_prostate
-from dataengineer_spark.schemas import API_EXPORT_COLUMNS, PROSTATE_PRED_FIELDS
+from dataengineer_spark.schemas import (
+    API_EXPORT_COLUMNS,
+    PROSTATE_OUTPUT,
+    PROSTATE_PRED_FIELDS,
+)
 
 
 @pytest.fixture
@@ -91,6 +95,45 @@ class TestApiVariant:
         assert back.count() == export.count()
 
 
+class TestBatchJobBudget:
+    #: Spark jobs one warm clinical batch submits: 2 for the max(batch_id)
+    #: allocation read, 1 audit-row append, 3 contract-table writes, 1
+    #: label-dimension broadcast, 1 CSV export, 1 prostate noop write.
+    #: Schema inference on a lake read-back or a pickled audit row would
+    #: each add jobs here.
+    JOBS_PER_BATCH = 9
+
+    def test_second_batch_job_count(self, spark, tmp_path, job_group):
+        from dataengineer_spark.sources.files import read_csv
+
+        csv = str(tmp_path / "batch_csv")
+        spark.createDataFrame(
+            # one line per report: read_csv's default is not multiLine
+            [(i, f"GROSS: mass {i} DIAGNOSIS: carcinoma {i}") for i in range(20)],
+            "msgid long, message string",
+        ).coalesce(1).write.option("header", True).csv(csv)
+        catalog = Catalog(spark, str(tmp_path / "lake"))
+        labels = spark.createDataFrame(
+            [(1, k, f"N{k}") for k in range(16)],
+            "model_id long, label long, label_name string",
+        )
+
+        def one_batch(batch_id):
+            source = read_csv(spark, csv, schema="msgid long, message string")
+            run_dx_group_api(
+                catalog, RunConfig(), source, labels,
+                export_path=str(tmp_path / f"export_{batch_id}"),
+            )
+            out = run_prostate(catalog.read_batch("preped_data", batch_id))
+            out.write.format("noop").mode("overwrite").save()
+
+        one_batch(1)  # creates the lake tables
+        with job_group() as jobs:
+            one_batch(2)
+        assert len(jobs) == self.JOBS_PER_BATCH, sorted(jobs)
+        assert catalog.read_batch("prediction_table", 2).count() == 20
+
+
 class TestProstate:
     def test_output_schema_and_constants(self, spark, source):
         cleaned = clean_stage(source, batch_id=1)
@@ -100,6 +143,10 @@ class TestProstate:
             c for f in PROSTATE_PRED_FIELDS for c in (f, f"{f}_pred_score")
         ]
         assert out.columns == expected
+        # names AND types: a bare 1000.0 in the SQL text would be DECIMAL
+        assert [(f.name, f.dataType) for f in out.schema] == [
+            (f.name, f.dataType) for f in PROSTATE_OUTPUT
+        ]
         row = out.orderBy("msg_id").first()
         assert row["site_code"] == "C61.9"
         assert row["behaviour_code"] == "3"
