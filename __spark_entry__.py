@@ -48,6 +48,7 @@ from dataengineer_spark.operators import (
     windows as win_ops,
 )
 from dataengineer_spark.operators.multimodal import extract_features
+from dataengineer_spark.operators.preparation import _POLY_MOD
 from dataengineer_spark.plans.api_variant import publish_stage
 from dataengineer_spark.plans.dx_group import clean_stage, predict_stage, prep_stage
 from dataengineer_spark.plans.prostate import run_prostate
@@ -205,6 +206,79 @@ def _label_dim_values() -> str:
         f"(CAST({m} AS BIGINT), CAST({k} AS BIGINT), '{n}')" for m, k, n in LABEL_DIM
     )
     return f"(VALUES {rows}) AS l(model_id, label, label_name)"
+
+
+# -- the portable hash family, replayed in DuckDB ---------------------------
+# One builder per fact: the poly fold (preparation._poly_hash_sql), the
+# char n-gram list (dedup.char_shingles), the exact Jaccard ratio, and the
+# affine MinHash signature + raw-tuple band keys (dedup._minhash_min_sql,
+# _band_buckets(portable=True)).  Every oracle that replays the portable
+# family composes these.
+
+
+def _duck_poly(s: str) -> str:
+    """DuckDB replay of ``preparation._poly_hash_sql``: the
+    ``(acc*31 + codepoint) % 1_000_003`` fold over ``s``'s characters."""
+    return (
+        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
+        f"list_transform(list_filter(string_split({s}, ''), x -> x <> ''), "
+        "ch -> CAST(ascii(ch) AS BIGINT))), "
+        f"(acc, x) -> (acc * 31 + x) % {_POLY_MOD})"
+    )
+
+
+def _duck_shingles(n: int) -> str:
+    """DuckDB replay of ``dedup.char_shingles(text, n)`` over column
+    ``text``: the distinct char n-grams; a text shorter than ``n`` is its
+    own single shingle."""
+    return (
+        "list_distinct(list_transform("
+        f"generate_series(1, greatest(length(text) - {n - 1}, 1)), "
+        f"i -> substr(text, CAST(i AS INT), {n})))"
+    )
+
+
+def _duck_jaccard(a: str, b: str) -> str:
+    """Exact Jaccard of two distinct lists (``dedup._jaccard``)."""
+    return (
+        f"len(list_intersect({a}, {b})) * 1.0 "
+        f"/ len(list_distinct(list_concat({a}, {b})))"
+    )
+
+
+def _duck_minhash(
+    name: str, src: str, keys: str, num_hashes: int, bands: int
+) -> str:
+    """CTE definitions (no leading ``WITH``) of the portable MinHash band
+    keys of relation ``src`` (columns ``keys`` + ``text``): char 5-gram
+    shingles → poly hash → ``min((a·h + b) mod p)`` per affine pair of
+    ``_affine_params(num_hashes, 42)`` → ``bands`` raw-tuple bucket keys.
+    The last CTE is ``name``, with columns ``keys, band, bucket``."""
+    from dataengineer_spark.operators.dedup import _MERSENNE, _affine_params
+
+    mins = ",\n    ".join(
+        f"min(({a} * h + {b}) % {_MERSENNE}) AS s{j + 1}"
+        for j, (a, b) in enumerate(_affine_params(num_hashes, seed=42))
+    )
+    rows = num_hashes // bands
+    band_selects = "\nUNION ALL\n".join(
+        f"SELECT {keys}, {b} AS band, "
+        + " || ',' || ".join(
+            f"CAST(s{b * rows + r + 1} AS VARCHAR)" for r in range(rows)
+        )
+        + f" AS bucket FROM {name}_sigs"
+        for b in range(bands)
+    )
+    return f"""{name}_sh AS (
+  SELECT {keys}, unnest({_duck_shingles(5)}) AS s FROM {src}
+), {name}_h AS (
+  SELECT {keys}, {_duck_poly("s")} AS h FROM {name}_sh
+), {name}_sigs AS (
+  SELECT {keys}, {mins}
+  FROM {name}_h GROUP BY {keys}
+), {name} AS (
+  {band_selects}
+)"""
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2269,15 +2343,10 @@ def q_k8_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shard_export(docs, path, n_shards=16, portable_hash=True)
 
 
-_K8_SHARD_EXPORT_ORACLE = r"""
+_K8_SHARD_EXPORT_ORACLE = rf"""
 WITH s AS (
   SELECT doc_id, text,
-    list_reduce(
-      list_prepend(CAST(0 AS BIGINT),
-        list_transform(list_filter(string_split(CAST(doc_id AS VARCHAR), ''),
-                                   x -> x <> ''),
-                       ch -> CAST(ascii(ch) AS BIGINT))),
-      (acc, x) -> (acc * 31 + x) % 1000003) % 16 AS shard
+    {_duck_poly("CAST(doc_id AS VARCHAR)")} % 16 AS shard
   FROM documents
 )
 SELECT CAST(shard AS INT) AS shard,
@@ -2501,57 +2570,13 @@ def q_e2_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DuckDB replay of dedup.char_shingles(text, 5) — distinct char 5-grams
-_SQL_SHINGLES5 = (
-    "list_distinct(list_transform("
-    "generate_series(1, greatest(length(text) - 4, 1)), "
-    "i -> substr(text, CAST(i AS INT), 5)))"
-)
-
-
-def _minhash_cte_prefix(d_body: str, num_hashes: int = 32, bands: int = 4) -> str:
+def _minhash_cte_prefix(d_body: str, bands: int = 4) -> str:
     """Shared WITH-prefix for the portable-MinHash self-join oracles —
-
-    corpus CTE → shingle explode → polynomial char hash → 32-min
-    signature → band keys → distinct candidate pairs. ONE definition of
-    the signature/band arithmetic serves the near-dup pair oracle and
-    the recall audit (the bipartite twin lives in _lsh_join_oracle)."""
-    from dataengineer_spark.operators.dedup import _MERSENNE, _affine_params
-
-    params = _affine_params(num_hashes, seed=42)
-    mins = ",\n    ".join(
-        f"min(({a} * h + {b}) % {_MERSENNE}) AS s{j + 1}"
-        for j, (a, b) in enumerate(params)
-    )
-    rows = num_hashes // bands
-    band_selects = "\nUNION ALL\n".join(
-        "SELECT doc_id, {b} AS band, {cols} AS bucket FROM sigs".format(
-            b=b,
-            cols=" || ',' || ".join(
-                f"CAST(s{b * rows + r + 1} AS VARCHAR)" for r in range(rows)
-            ),
-        )
-        for b in range(bands)
-    )
+    corpus CTE ``d`` → ``_duck_minhash`` band keys → distinct candidate
+    pairs ``cand`` (the bipartite twin is _lsh_join_oracle)."""
     return f"""d AS (
   {d_body}
-), sh AS (
-  SELECT doc_id, unnest({_SQL_SHINGLES5}) AS s FROM d
-), hashed AS (
-  SELECT doc_id,
-    list_reduce(
-      list_prepend(CAST(0 AS BIGINT),
-        list_transform(list_filter(string_split(s, ''), x -> x <> ''),
-                       ch -> CAST(ascii(ch) AS BIGINT))),
-      (acc, x) -> (acc * 31 + x) % 1000003
-    ) AS h
-  FROM sh
-), sigs AS (
-  SELECT doc_id, {mins}
-  FROM hashed GROUP BY doc_id
-), banded AS (
-  {band_selects}
-), cand AS (
+), {_duck_minhash("banded", "d", "doc_id", 32, bands)}, cand AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM banded a JOIN banded b
     ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
@@ -2562,14 +2587,11 @@ def _minhash_portable_oracle() -> str:
     prefix = _minhash_cte_prefix(
         "SELECT doc_id, text FROM documents WHERE doc_id < 1000"
     )
-    shingles = _SQL_SHINGLES5
     return f"""
 WITH {prefix}, shset AS (
-  SELECT doc_id, {shingles} AS ss FROM d
+  SELECT doc_id, {_duck_shingles(5)} AS ss FROM d
 ), verified AS (
-  SELECT c.id_a, c.id_b,
-    len(list_intersect(sa.ss, sb.ss)) * 1.0
-      / len(list_distinct(list_concat(sa.ss, sb.ss))) AS jaccard
+  SELECT c.id_a, c.id_b, {_duck_jaccard("sa.ss", "sb.ss")} AS jaccard
   FROM cand c
   JOIN shset sa ON sa.doc_id = c.id_a
   JOIN shset sb ON sb.doc_id = c.id_b
@@ -2603,69 +2625,23 @@ def _lsh_join_oracle(
     text``) — shared by the decontamination audit and the train/eval
     split-leakage audit so both replay the identical signature/band/
     verify arithmetic."""
-    from dataengineer_spark.operators.dedup import _MERSENNE, _affine_params
-
-    num_hashes, bands = 32, 8
-    params = _affine_params(num_hashes, seed=42)
-    mins = ",\n    ".join(
-        f"min(({a} * h + {b}) % {_MERSENNE}) AS s{j + 1}"
-        for j, (a, b) in enumerate(params)
-    )
-    rows = num_hashes // bands
-    def band_sql(src: str, idc: str) -> str:
-        return "\nUNION ALL\n".join(
-            "SELECT {idc}, {b} AS band, {cols} AS bucket FROM {src}".format(
-                idc=idc, b=b, src=src,
-                cols=" || ',' || ".join(
-                    f"CAST(s{b * rows + r + 1} AS VARCHAR)" for r in range(rows)
-                ),
-            )
-            for b in range(bands)
-        )
-    shingles = (
-        "list_distinct(list_transform("
-        "generate_series(1, greatest(length(text) - 4, 1)), "
-        "i -> substr(text, CAST(i AS INT), 5)))"
-    )
-    poly = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        " list_transform(list_filter(string_split(s, ''), x -> x <> ''),"
-        " ch -> CAST(ascii(ch) AS BIGINT))),"
-        " (acc, x) -> (acc * 31 + x) % 1000003)"
-    )
     return f"""
 WITH c AS (
   {c_sql}
 ), bn AS (
   {b_sql}
-), shc AS (
-  SELECT corpus_id, unnest({shingles}) AS s FROM c
-), shb AS (
-  SELECT bench_id, unnest({shingles}) AS s FROM bn
-), hc AS (
-  SELECT corpus_id, {poly} AS h FROM shc
-), hb AS (
-  SELECT bench_id, {poly} AS h FROM shb
-), sig_c AS (
-  SELECT corpus_id, {mins} FROM hc GROUP BY corpus_id
-), sig_b AS (
-  SELECT bench_id, {mins} FROM hb GROUP BY bench_id
-), banded_c AS (
-  {band_sql("sig_c", "corpus_id")}
-), banded_b AS (
-  {band_sql("sig_b", "bench_id")}
-), cand AS (
+), {_duck_minhash("banded_c", "c", "corpus_id", 32, 8)},
+{_duck_minhash("banded_b", "bn", "bench_id", 32, 8)}, cand AS (
   SELECT DISTINCT a.corpus_id, b.bench_id
   FROM banded_c a JOIN banded_b b
     ON a.band = b.band AND a.bucket = b.bucket
 ), set_c AS (
-  SELECT corpus_id, {shingles} AS ss FROM c
+  SELECT corpus_id, {_duck_shingles(5)} AS ss FROM c
 ), set_b AS (
-  SELECT bench_id, {shingles} AS ss FROM bn
+  SELECT bench_id, {_duck_shingles(5)} AS ss FROM bn
 ), verified AS (
   SELECT cand.corpus_id, cand.bench_id,
-    len(list_intersect(sa.ss, sb.ss)) * 1.0
-      / len(list_distinct(list_concat(sa.ss, sb.ss))) AS jaccard
+    {_duck_jaccard("sa.ss", "sb.ss")} AS jaccard
   FROM cand
   JOIN set_c sa ON sa.corpus_id = cand.corpus_id
   JOIN set_b sb ON sb.bench_id = cand.bench_id
@@ -2802,12 +2778,7 @@ WITH d AS (
   FROM d
 ), h AS (
   SELECT doc_id,
-    list_reduce(
-      list_prepend(CAST(0 AS BIGINT),
-        list_transform(list_filter(string_split(wd, ''), x -> x <> ''),
-                       ch -> CAST(ascii(ch) AS BIGINT))),
-      (acc, x) -> (acc * 31 + x) % 1000003
-    ) AS h
+    {_duck_poly("wd")} AS h
   FROM w
 ), bits AS (
   SELECT doc_id,
@@ -3827,9 +3798,9 @@ def q_e4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
-        textops.doc_fingerprint(F.col("text")).alias("fingerprint"),
+        textops.doc_fingerprint("text").alias("fingerprint"),
         F.concat_ws(
-            ",", textops.winnowed_fingerprints(F.col("text")).cast("array<string>")
+            ",", textops.winnowed_fingerprints("text").cast("array<string>")
         ).alias("winnowed"),
     )
 
@@ -3841,41 +3812,27 @@ def q_e4_fingerprint_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id",
-        textops.doc_fingerprint(F.col("text"), portable=True).alias(
-            "fingerprint"
-        ),
+        textops.doc_fingerprint("text", portable=True).alias("fingerprint"),
         F.concat_ws(
             ",",
-            textops.winnowed_fingerprints(
-                F.col("text"), portable=True
-            ).cast("array<string>"),
+            textops.winnowed_fingerprints("text", portable=True).cast(
+                "array<string>"
+            ),
         ).alias("winnowed"),
     )
 
 
-_E4_FP_PORTABLE_ORACLE = r"""
+_E4_FP_PORTABLE_ORACLE = rf"""
 WITH d AS (
   SELECT doc_id, text,
     trim(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS norm,
-    list_distinct(list_transform(
-      generate_series(1, greatest(length(text) - 7, 1)),
-      i -> substr(text, CAST(i AS INT), 8))) AS sh
+    {_duck_shingles(8)} AS sh
   FROM documents
 ), hashed AS (
   SELECT doc_id,
-    list_reduce(
-      list_prepend(CAST(0 AS BIGINT),
-        list_transform(list_filter(string_split(norm, ''), x -> x <> ''),
-                       ch -> CAST(ascii(ch) AS BIGINT))),
-      (acc, x) -> (acc * 31 + x) % 1000003
-    ) AS fingerprint,
+    {_duck_poly("norm")} AS fingerprint,
     list_sort(list_transform(sh, s ->
-      list_reduce(
-        list_prepend(CAST(0 AS BIGINT),
-          list_transform(list_filter(string_split(s, ''), x -> x <> ''),
-                         ch -> CAST(ascii(ch) AS BIGINT))),
-        (acc, x) -> (acc * 31 + x) % 1000003
-      ))) AS wh
+      {_duck_poly("s")})) AS wh
   FROM d
 )
 SELECT doc_id, fingerprint,
@@ -3901,60 +3858,17 @@ def q_e2_neardup_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _neardup_dedup_portable_oracle() -> str:
-    from dataengineer_spark.operators.dedup import _MERSENNE, _affine_params
-
-    num_hashes, bands, threshold = 32, 8, 0.5
-    params = _affine_params(num_hashes, seed=42)
-    mins = ",\n    ".join(
-        f"min(({a} * h + {b}) % {_MERSENNE}) AS s{j + 1}"
-        for j, (a, b) in enumerate(params)
-    )
-    rows = num_hashes // bands
-    band_selects = "\nUNION ALL\n".join(
-        "SELECT doc_id, {b} AS band, {cols} AS bucket FROM sigs".format(
-            b=b,
-            cols=" || ',' || ".join(
-                f"CAST(s{b * rows + r + 1} AS VARCHAR)" for r in range(rows)
-            ),
-        )
-        for b in range(bands)
-    )
-    shingles = (
-        "list_distinct(list_transform("
-        "generate_series(1, greatest(length(text) - 4, 1)), "
-        "i -> substr(text, CAST(i AS INT), 5)))"
-    )
-    poly = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT),"
-        " list_transform(list_filter(string_split(s, ''), x -> x <> ''),"
-        " ch -> CAST(ascii(ch) AS BIGINT))),"
-        " (acc, x) -> (acc * 31 + x) % 1000003)"
-    )
+    prefix = _minhash_cte_prefix("SELECT doc_id, text FROM documents", bands=8)
     return f"""
 WITH RECURSIVE
-d AS (
-  SELECT doc_id, text FROM documents
-), sh AS (
-  SELECT doc_id, unnest({shingles}) AS s FROM d
-), hashed AS (
-  SELECT doc_id, {poly} AS h FROM sh
-), sigs AS (
-  SELECT doc_id, {mins} FROM hashed GROUP BY doc_id
-), banded AS (
-  {band_selects}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-), shset AS (
-  SELECT doc_id, {shingles} AS ss FROM d
+{prefix}, shset AS (
+  SELECT doc_id, {_duck_shingles(5)} AS ss FROM d
 ), pairs AS (
   SELECT cand.id_a, cand.id_b
   FROM cand
   JOIN shset sa ON sa.doc_id = cand.id_a
   JOIN shset sb ON sb.doc_id = cand.id_b
-  WHERE len(list_intersect(sa.ss, sb.ss)) * 1.0
-        / len(list_distinct(list_concat(sa.ss, sb.ss))) >= {threshold}
+  WHERE {_duck_jaccard("sa.ss", "sb.ss")} >= 0.5
 ), nodes AS (
   SELECT DISTINCT id_a AS n FROM pairs UNION SELECT DISTINCT id_b FROM pairs
 ), edges AS (
@@ -4195,16 +4109,11 @@ def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("media_id", "kind", F.round("feat_norm", 4).alias("feat_norm"))
 
 
-_MM_FEATURES_ORACLE = """
+_MM_FEATURES_ORACLE = f"""
 WITH h AS (
   SELECT doc_id,
     CASE WHEN text IS NULL THEN NULL ELSE
-      list_reduce(
-        list_prepend(CAST(0 AS BIGINT),
-          list_transform(list_filter(string_split(substr(text, 1, 64), ''),
-                                     x -> x <> ''),
-                         ch -> CAST(ascii(ch) AS BIGINT))),
-        (acc, x) -> (acc * 31 + x) % 1000003)
+      {_duck_poly("substr(text, 1, 64)")}
     END AS h
   FROM documents
 )
@@ -7291,17 +7200,12 @@ def q_prep_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PREP_DSIR_ORACLE = """
+_PREP_DSIR_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, lang = 'en' AS t, unnest({words}) AS w FROM documents
+  SELECT doc_id, lang = 'en' AS t, unnest({_SQL_WORDS}) AS w FROM documents
 ), tok AS (
   SELECT doc_id, t,
-         list_reduce(
-           list_prepend(CAST(0 AS BIGINT),
-             list_transform(list_filter(string_split(w, ''), x -> x <> ''),
-                            ch -> CAST(ascii(ch) AS BIGINT))),
-           (acc, x) -> (acc * 31 + x) % 1000003
-         ) % 64 AS b
+         {_duck_poly("w")} % 64 AS b
   FROM toks WHERE length(w) > 0
 ), per AS (
   SELECT doc_id, b, count(*) AS cnt FROM tok GROUP BY 1, 2
@@ -8059,7 +7963,7 @@ def q_prep_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_PREP_TEMPMIX_ORACLE = r"""
+_PREP_TEMPMIX_ORACLE = rf"""
 WITH d AS (
   SELECT doc_id, source AS domain,
          CAST(len(list_filter(regexp_split_to_array(coalesce(text, ''),
@@ -8083,10 +7987,7 @@ WITH d AS (
   FROM s CROSS JOIN tot CROSS JOIN wsum
 ), h AS (
   SELECT doc_id, domain, n_tok,
-    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      list_transform(list_filter(string_split(CAST(doc_id AS VARCHAR), ''),
-        x -> x <> ''), ch -> CAST(ascii(ch) AS BIGINT))),
-      (acc, x) -> (acc * 31 + x) % 1000003) AS hh
+    {_duck_poly("CAST(doc_id AS VARCHAR)")} AS hh
   FROM d
 ), r AS (
   SELECT doc_id, domain, n_tok,
@@ -8221,60 +8122,13 @@ def _index_probe_oracle(newb_sql: str) -> str:
     portable MinHash signatures of the seen set AND the given new-batch
     CTE, the 4-band raw-tuple buckets, the (band, bucket) probe, and the
     anti join — bit-for-bit."""
-    from dataengineer_spark.operators.dedup import _MERSENNE, _affine_params
-
-    params = _affine_params(32, seed=42)
-    mins = ",\n    ".join(
-        f"min(({a} * h + {b}) % {_MERSENNE}) AS s{j + 1}"
-        for j, (a, b) in enumerate(params)
-    )
-    rows = 32 // 4
-
-    def bands_sql(src: str) -> str:
-        return "\nUNION ALL\n".join(
-            "SELECT doc_id, {b} AS band, {cols} AS bucket FROM {src}".format(
-                b=b,
-                src=src,
-                cols=" || ',' || ".join(
-                    f"CAST(s{b * rows + r + 1} AS VARCHAR)" for r in range(rows)
-                ),
-            )
-            for b in range(4)
-        )
-
-    shingles = (
-        "list_distinct(list_transform("
-        "generate_series(1, greatest(length(text) - 4, 1)), "
-        "i -> substr(text, CAST(i AS INT), 5)))"
-    )
-    polyhash = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(list_filter(string_split(s, ''), x -> x <> ''), "
-        "ch -> CAST(ascii(ch) AS BIGINT))), "
-        "(acc, x) -> (acc * 31 + x) % 1000003)"
-    )
     return f"""
 WITH seen AS (
   SELECT doc_id, text FROM documents WHERE doc_id < 250
 ), newb AS (
   {newb_sql}
-), sh_s AS (
-  SELECT doc_id, unnest({shingles}) AS s FROM seen
-), hs AS (
-  SELECT doc_id, {polyhash} AS h FROM sh_s
-), sigs_s AS (
-  SELECT doc_id, {mins} FROM hs GROUP BY doc_id
-), banded_s AS (
-  {bands_sql('sigs_s')}
-), sh_n AS (
-  SELECT doc_id, unnest({shingles}) AS s FROM newb
-), hn AS (
-  SELECT doc_id, {polyhash} AS h FROM sh_n
-), sigs_n AS (
-  SELECT doc_id, {mins} FROM hn GROUP BY doc_id
-), banded_n AS (
-  {bands_sql('sigs_n')}
-), flagged AS (
+), {_duck_minhash("banded_s", "seen", "doc_id", 32, 4)},
+{_duck_minhash("banded_n", "newb", "doc_id", 32, 4)}, flagged AS (
   SELECT DISTINCT n.doc_id
   FROM banded_n n JOIN banded_s s2
     ON n.band = s2.band AND n.bucket = s2.bucket
@@ -8438,34 +8292,6 @@ def _stream_live_oracle() -> str:
     MinHash family: per batch, self-dedup (smaller-id collision in the
     SAME batch, unconditional on that doc's own survival) then the probe
     against the bands of everything kept in STRICTLY earlier batches."""
-    from dataengineer_spark.operators.dedup import _MERSENNE, _affine_params
-
-    params = _affine_params(32, seed=42)
-    mins = ",\n    ".join(
-        f"min(({a} * h + {b}) % {_MERSENNE}) AS s{j + 1}"
-        for j, (a, b) in enumerate(params)
-    )
-    rows = 32 // 4
-    bands_sql = "\nUNION ALL\n".join(
-        "SELECT batch, doc_id, {b} AS band, {cols} AS bucket FROM sigs".format(
-            b=b,
-            cols=" || ',' || ".join(
-                f"CAST(s{b * rows + r + 1} AS VARCHAR)" for r in range(rows)
-            ),
-        )
-        for b in range(4)
-    )
-    shingles = (
-        "list_distinct(list_transform("
-        "generate_series(1, greatest(length(text) - 4, 1)), "
-        "i -> substr(text, CAST(i AS INT), 5)))"
-    )
-    polyhash = (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        "list_transform(list_filter(string_split(s, ''), x -> x <> ''), "
-        "ch -> CAST(ascii(ch) AS BIGINT))), "
-        "(acc, x) -> (acc * 31 + x) % 1000003)"
-    )
     corpus = "\n  UNION ALL\n".join(
         f"SELECT {i} AS batch, * FROM ({b.format(c=', text, lang')})"
         for i, b in enumerate(_STREAM_LIVE_BATCHES, start=1)
@@ -8473,15 +8299,7 @@ def _stream_live_oracle() -> str:
     return f"""
 WITH corpus AS (
   {corpus}
-), sh AS (
-  SELECT batch, doc_id, unnest({shingles}) AS s FROM corpus
-), hs AS (
-  SELECT batch, doc_id, {polyhash} AS h FROM sh
-), sigs AS (
-  SELECT batch, doc_id, {mins} FROM hs GROUP BY batch, doc_id
-), banded AS (
-  {bands_sql}
-), selfflag AS (
+), {_duck_minhash("banded", "corpus", "batch, doc_id", 32, 4)}, selfflag AS (
   SELECT DISTINCT a.doc_id
   FROM banded a JOIN banded b
     ON a.batch = b.batch AND a.band = b.band AND a.bucket = b.bucket
@@ -8709,14 +8527,10 @@ def q_prep_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PREP_KFOLD_ORACLE = """
+_PREP_KFOLD_ORACLE = f"""
 WITH t AS (
-  SELECT source, CAST(list_reduce(
-    list_prepend(CAST(0 AS BIGINT),
-      list_transform(list_filter(string_split(coalesce(source, '') || 'cv', ''),
-                                 x -> x <> ''),
-                     ch -> CAST(ascii(ch) AS BIGINT))),
-    (acc, x) -> (acc * 31 + x) % 1000003) % 5 AS INT) AS fold
+  SELECT source,
+    CAST({_duck_poly("coalesce(source, '') || 'cv'")} % 5 AS INT) AS fold
   FROM documents
 )
 SELECT fold, CAST(count(*) AS BIGINT) AS n_docs,
@@ -9168,12 +8982,11 @@ def _neardup_recall_oracle() -> str:
     prefix = _minhash_cte_prefix(d_body)
     return f"""
 WITH {prefix}, shset AS (
-  SELECT doc_id, {_SQL_SHINGLES5} AS ss FROM d
+  SELECT doc_id, {_duck_shingles(5)} AS ss FROM d
 ), truth AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
   FROM shset a JOIN shset b ON a.doc_id < b.doc_id
-  WHERE len(list_intersect(a.ss, b.ss)) * 1.0
-        / len(list_distinct(list_concat(a.ss, b.ss))) >= 0.5
+  WHERE {_duck_jaccard("a.ss", "b.ss")} >= 0.5
 ), hit AS (
   SELECT t.id_a, CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END AS f
   FROM truth t LEFT JOIN cand c ON t.id_a = c.id_a AND t.id_b = c.id_b
@@ -9505,12 +9318,8 @@ WITH g AS (
 ), kept AS (
   SELECT * FROM ranked WHERE rn * 2 <= n
 ), folded AS (
-  SELECT lang, text, CAST(list_reduce(
-    list_prepend(CAST(0 AS BIGINT),
-      list_transform(list_filter(string_split(coalesce(source, '') || 'cv', ''),
-                                 c -> c <> ''),
-                     ch -> CAST(ascii(ch) AS BIGINT))),
-    (acc, c) -> (acc * 31 + c) % 1000003) % 5 AS INT) AS fold
+  SELECT lang, text,
+    CAST({_duck_poly("coalesce(source, '') || 'cv'")} % 5 AS INT) AS fold
   FROM kept
 )
 SELECT fold, lang, CAST(count(*) AS BIGINT) AS n_docs,
@@ -11427,7 +11236,7 @@ def oracle_sql() -> dict[str, str]:
         "q_rank_tfidf": _RANK_TFIDF_ORACLE,
         "q_rank_bm25": _RANK_BM25_ORACLE,
         "q_e2_dup_spans": _E2_DUP_SPANS_ORACLE.format(words=_SQL_WORDS),
-        "q_prep_dsir": _PREP_DSIR_ORACLE.format(words=_SQL_WORDS),
+        "q_prep_dsir": _PREP_DSIR_ORACLE,
         "q_dq_funnel": _gopher_funnel_oracle(),
         "q_dq_snapshot_diff": _DQ_SNAPSHOT_DIFF_ORACLE,
         "q_dq_drift": _DQ_DRIFT_ORACLE,

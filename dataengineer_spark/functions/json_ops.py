@@ -12,12 +12,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def json_get(col: Column | str, path: str) -> Column:
-    """Extract one JSON path as string (NULL on missing/invalid)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, f"$.{path}")
-
-
 def json_get_long(col: Column | str, path: str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.get_json_object(c, f"$.{path}").try_cast("bigint")

@@ -119,14 +119,6 @@ def roc_auc(df: DataFrame, score_col: str, label_col: Column) -> DataFrame:
     )
 
 
-def first_row(df: DataFrame, order_by: list[Column] | None = None):
-    """A2 — ``iloc[0]`` (reference prostate_dag.py:62-63). The reference
-
-    relied on implicit result order; the engine requires an explicit sort
-    or accepts arbitrary choice knowingly."""
-    return (df.orderBy(*order_by) if order_by else df).first()
-
-
 def group_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
     """E5 — hash aggregate with named output columns."""
     return df.groupBy(*keys).agg(*aggs)

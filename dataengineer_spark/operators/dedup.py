@@ -11,7 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from dataengineer_spark.operators.preparation import _POLY_MOD
+from dataengineer_spark.operators.preparation import (
+    _poly_hash_sql, _poly_unrolled_sql,
+)
 from dataengineer_spark.tuning import lineage_cut, tie_lifetime, transient_persist
 
 
@@ -277,36 +279,20 @@ def _shingle_hashes_sql(text_sql: str, n: int) -> str:
     )
 
 
-def _poly_hash_sql(s_sql: str) -> str:
-    """SQL text of ``preparation.portable_word_hash`` over ``s_sql``: the
-    ``(acc*31 + codepoint) % 1_000_003`` fold over its characters."""
-    return (
-        f"aggregate(transform(filter(split({s_sql}, ''), x -> x != ''), "
-        f"x -> ascii(x)), CAST(0 AS BIGINT), "
-        f"(acc, x) -> (acc * 31 + x) % {_POLY_MOD})"
-    )
-
-
 def _shingle_hashes_from_cps_sql(text_sql: str, cps_sql: str, n: int) -> str:
     """Portable-family shingle hashes: array<bigint> of the DISTINCT
-    ``portable_word_hash`` values of ``text_sql``'s char n-grams, read
-    positionally from a PRECOMPUTED codepoint array column ``cps_sql``
-    (see ``_expr_signatures`` — the array is built once per row in a
-    prior projection; positions align with ``substr`` 1:1).  The
-    polynomial ``(acc*31 + cp) % 1_000_003`` is unrolled over exactly
-    ``n`` codepoints and reduced mod p every 8 steps (an unreduced
-    prefix stays < p·31⁸ ≈ 8.6e17, inside int64 under ANSI, and
-    ``(x mod p)·31 + c ≡ x·31 + c (mod p)``).  Texts shorter than ``n``
-    keep ONE shingle, the whole text, hashed by the string-based fold."""
-    acc = f"element_at({cps_sql}, i)"
-    since_mod = 0
-    for j in range(1, n):
-        acc = f"({acc} * 31 + element_at({cps_sql}, i + {j}))"
-        since_mod += 1
-        if since_mod == 8:
-            acc = f"({acc} % {_POLY_MOD})"
-            since_mod = 0
-    per_pos = f"({acc} % {_POLY_MOD})"
+    ``preparation._poly_hash_sql`` values of ``text_sql``'s char n-grams,
+    read positionally from a PRECOMPUTED codepoint array column
+    ``cps_sql`` (see ``_expr_signatures`` — the array is built once per
+    row in a prior projection; positions align with ``substr`` 1:1) by
+    the unrolled fold ``preparation._poly_unrolled_sql``.  Texts shorter
+    than ``n`` keep ONE shingle, the whole text, hashed by the
+    string-based fold."""
+    per_pos = _poly_unrolled_sql(
+        lambda j: f"element_at({cps_sql}, i + {j})" if j
+        else f"element_at({cps_sql}, i)",
+        n,
+    )
     short = f"array({_poly_hash_sql(text_sql)})"
     full = (
         f"transform(sequence(1, length({text_sql}) - {n - 1}), i -> {per_pos})"

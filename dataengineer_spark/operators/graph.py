@@ -277,25 +277,6 @@ def pagerank(
     return ranks.select("node", F.round("rank", 8).alias("rank"))
 
 
-def degree_stats(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node in/out degree in one pass: explode each edge into two
-
-    (node, is_out) rows and hash-aggregate — a single shuffle on the
-    node key regardless of direction mix."""
-    both = edges.select(
-        F.col(src).alias("node"), F.lit(1).alias("out_d"), F.lit(0).alias("in_d")
-    ).unionAll(
-        edges.select(
-            F.col(dst).alias("node"), F.lit(0).alias("out_d"), F.lit(1).alias("in_d")
-        )
-    )
-    return both.groupBy("node").agg(
-        F.sum("out_d").alias("out_degree"), F.sum("in_d").alias("in_degree")
-    )
-
-
 def triangle_stats(
     edges: DataFrame,
     src: str = "src",

@@ -43,7 +43,7 @@ def _fake_feature(payload: bytes | None, dim: int) -> np.ndarray:
     """Deterministic stand-in for a decoder+encoder: poly-hash the first
 
     64 chars of the payload's UTF-8 decode (the same ``(acc*31 + cp) %
-    1_000_003`` fold as ``preparation.portable_word_hash``), then expand
+    1_000_003`` fold as ``preparation._poly_hash_sql``), then expand
     to ``dim`` values by per-dim affine transforms mod the same prime.
     Engine-portable by construction — for valid-UTF-8 payloads a SQL
     oracle replays the fold and the affine expansion bit-for-bit, so the

@@ -9,9 +9,11 @@ analysis. All JVM-side expressions.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from dataengineer_spark.tuning import lineage_cut
+from dataengineer_spark.tuning import lineage_cut, sql_literal
 
 
 SPLIT_MULT = 2654435761  # Knuth multiplicative-hash constant
@@ -384,7 +386,7 @@ def temperature_budget_mixture(
     hash aggregate, domain-cardinality rows); α=0.5 uses ``sqrt`` —
     correctly rounded under IEEE 754, so any engine derives the IDENTICAL
     budgets (Σ S^α is a left fold over domains in ascending domain
-    order); the selection order uses ``portable_word_hash`` of the id's
+    order); the selection order uses the portable poly hash of the id's
     decimal string under ``portable=True`` (oracle-replayable) or
     ``xxhash64`` otherwise; running sums are exact integers.  NULL
     domains receive no budget (dropped, like a zero-weight domain).
@@ -439,7 +441,7 @@ def temperature_budget_mixture(
         *[F.lit(x) for d, n in sorted(budgets.items()) for x in (d, n)]
     )
     h = (
-        portable_word_hash(F.col(id_col).cast("string"))
+        F.expr(_poly_hash_sql(f"CAST(`{id_col}` AS STRING)"))
         if portable
         else F.xxhash64(F.col(id_col))
     )
@@ -473,62 +475,58 @@ def temperature_budget_mixture(
 _POLY_MOD = 1_000_003
 
 
-def portable_word_hash(word: Column) -> Column:
-    """Deterministic engine-portable hash of one token: fold
+def _poly_hash_sql(s_sql: str) -> str:
+    """SQL text of the engine-portable hash of one string: fold
 
     ``(acc*31 + codepoint) % 1_000_003`` over its characters. Exists so
-    the DuckDB oracle can reproduce bucket assignment bit-for-bit; the
-    scale default is ``xxhash64`` (JVM, no per-char array walk).
+    the DuckDB oracle (``__spark_entry__._duck_poly``) can reproduce
+    bucket assignment bit-for-bit; the scale default is ``xxhash64``
+    (JVM, no per-char array walk).
 
     The ``split``-array input is LOAD-BEARING, not an accident: the
-    HOF's input expression is evaluated ONCE per row, so ``word`` may
+    HOF's input expression is evaluated ONCE per row, so ``s_sql`` may
     be an arbitrarily complex expression (doc_fingerprint passes a
     regex-normalized string).  A position-``sequence`` fold that
-    captures ``word`` in its lambda re-evaluates the whole expression
+    captures ``s_sql`` in its lambda re-evaluates the whole expression
     per CHARACTER — Catalyst inlines the capture — which turned
     doc_fingerprint into a regex pass per char, O(len²)
     (q_e4_fingerprint_portable 6→21 s at sf0.1 before this was caught).
-    For known-short, known-simple inputs use :func:`portable_hash_fixed`.
+    For known-length, cheap inputs use :func:`_poly_unrolled_sql`.
     """
-    chars = F.filter(F.split(word, ""), lambda x: x != F.lit(""))
-    return F.aggregate(
-        F.transform(chars, F.ascii),
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * F.lit(31) + x) % F.lit(_POLY_MOD),
+    return (
+        f"aggregate(transform(filter(split({s_sql}, ''), x -> x != ''), "
+        f"x -> ascii(x)), CAST(0 AS BIGINT), "
+        f"(acc, x) -> (acc * 31 + x) % {_POLY_MOD})"
     )
 
 
-def portable_hash_fixed(s: Column, n: int) -> Column:
-    """``portable_word_hash`` for strings of EXACTLY ``n`` chars, loop
-    unrolled into one flat expression — no per-char array walk, no
-    interpreted fold; ~4× the folded form on shingle-hash workloads.
-    Identical values: the polynomial is reduced mod p every 8 steps
-    (an unreduced prefix < p·31⁸ ≈ 8.6e17 stays inside int64 under
-    ANSI), and ``(x mod p)·31 + c ≡ x·31 + c (mod p)``.  The CALLER
-    guarantees length — on shorter input the ``ascii('') = 0`` padding
-    silently changes the value, so guard with ``length(s) == n`` and
-    fall back to :func:`portable_word_hash`.  The MinHash shingle stage
-    unrolls the same cadence in SQL text
-    (``dedup._shingle_hashes_from_cps_sql``).
+def _poly_unrolled_sql(code_at: Callable[[int], str], n: int) -> str:
+    """SQL text of the :func:`_poly_hash_sql` fold over EXACTLY ``n``
+    characters, loop unrolled into one flat expression — no per-char
+    array walk, no interpreted fold; ~4× the folded form on shingle-hash
+    workloads.  ``code_at(j)`` renders the BIGINT codepoint at 0-based
+    position ``j`` (``element_at`` of a staged codepoint array, or
+    ``ascii(substr(...))`` of a lambda variable).
 
-    ``s`` MUST be a cheap reference (a lambda variable or plain column):
-    the unrolled form reads ``s`` once per character, and Catalyst
-    inlines expression arguments — a regex/concat expression here would
-    re-run per char (see portable_word_hash's docstring for the
-    incident this rule comes from).
+    Identical values: the polynomial is reduced mod p every 8 steps (an
+    unreduced prefix < p·31⁸ ≈ 8.6e17 stays inside int64 under ANSI),
+    and ``(x mod p)·31 + c ≡ x·31 + c (mod p)``.  The CALLER guarantees
+    length — on shorter input the missing codepoints silently change the
+    value, so guard with ``length(s) = n`` and fall back to
+    :func:`_poly_hash_sql`.
+
+    ``code_at`` MUST read a cheap reference (a lambda variable, a plain
+    column, or a staged array): the unrolled form reads it once per
+    character, and Catalyst inlines expression arguments — a
+    regex/concat expression here would re-run per char (see
+    :func:`_poly_hash_sql` for the incident this rule comes from).
     """
-    def code_at(j: int) -> Column:
-        return F.ascii(s.substr(F.lit(j + 1), F.lit(1)))
-
-    acc = code_at(0).cast("long")
-    since_mod = 0
+    acc = code_at(0)
     for j in range(1, n):
-        acc = acc * 31 + code_at(j)
-        since_mod += 1
-        if since_mod == 8:
-            acc = acc % F.lit(_POLY_MOD)
-            since_mod = 0
-    return acc % F.lit(_POLY_MOD)
+        acc = f"({acc} * 31 + {code_at(j)})"
+        if j % 8 == 0:
+            acc = f"({acc} % {_POLY_MOD})"
+    return f"({acc} % {_POLY_MOD})"
 
 
 def dsir_importance(
@@ -570,7 +568,7 @@ def dsir_importance(
         )
         .where(F.length("w") > 0)
     )
-    h = portable_word_hash(F.col("w")) if portable_hash else F.xxhash64("w")
+    h = F.expr(_poly_hash_sql("`w`")) if portable_hash else F.xxhash64("w")
     tok = tok.select("id", "_t", F.pmod(h, F.lit(buckets)).alias("b"))
 
     per_db = tok.groupBy("id", "b").agg(F.count("*").alias("cnt"))
@@ -985,11 +983,10 @@ def assign_shards(
     scale default (one JVM hash call); ``portable_hash=True`` swaps the
     poly char fold a DuckDB oracle replays bit-for-bit.
     """
-    sid = F.col(id_col).cast("string")
     if portable_hash:
-        h = portable_word_hash(sid)
+        h = F.expr(_poly_hash_sql(f"CAST(`{id_col}` AS STRING)"))
     else:
-        h = F.xxhash64(sid)
+        h = F.xxhash64(F.col(id_col).cast("string"))
     return df.withColumn(out, F.pmod(h, F.lit(n_shards)).cast("int"))
 
 
@@ -1048,7 +1045,7 @@ def kfold_assign(
     or cluster id) never straddle a train/eval fold boundary — the
     cross-validation analogue of the split-leakage rule. Fold id is a
     deterministic function of the group KEY alone (engine-portable char
-    fold, same recipe as :func:`portable_word_hash`): stable across runs,
+    fold, :func:`_poly_hash_sql`): stable across runs,
     partitionings, and row order, and reproducible by any engine. Map-only
     — no shuffle; at 100 TB this is a free column append.
 
@@ -1059,10 +1056,13 @@ def kfold_assign(
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    key = F.concat(
-        F.coalesce(F.col(group_col).cast("string"), F.lit("")), F.lit(salt)
+    key = (
+        f"concat(coalesce(CAST(`{group_col}` AS STRING), ''), "
+        f"{sql_literal(salt)})"
     )
-    return df.withColumn(out_col, (portable_word_hash(key) % k).cast("int"))
+    return df.withColumn(
+        out_col, F.expr(f"CAST({_poly_hash_sql(key)} % {k} AS INT)")
+    )
 
 
 def vocab_coverage(

@@ -55,19 +55,6 @@ def subword_count(text: Column | str) -> Column:
     return F.aggregate(per_word, F.lit(0).cast("bigint"), lambda acc, v: acc + v)
 
 
-def language_scores(text: Column | str) -> dict[str, Column]:
-    """Stopword-hit count per candidate language (one regexp_count scan
-
-    per language — no array materialization)."""
-    c = F.col(text) if isinstance(text, str) else text
-    lowered = F.lower(c)
-    scores = {}
-    for lang, markers in _LANG_MARKERS.items():
-        pattern = r"\b(?:" + "|".join(markers) + r")\b"
-        scores[lang] = F.regexp_count(lowered, F.lit(pattern))
-    return scores
-
-
 #: ASCII punctuation (negated class) — identical in Java regex and RE2
 PUNCT_NEGATED = r"[^!-/:-@\[-`{-~]"
 
@@ -145,50 +132,61 @@ def quality_score(text: Column | str) -> Column:
     )
 
 
-def doc_fingerprint(text: Column | str, portable: bool = False) -> Column:
-    """Whole-document stable fingerprint (normalized hash; xxhash64 by
+def doc_fingerprint(text: str, portable: bool = False) -> Column:
+    """Whole-document stable fingerprint of column ``text``: the hash of
+    its whitespace-collapsed, lower-cased, trimmed form (xxhash64 by
     default, the engine-portable polynomial hash with ``portable=True``
-    so a SQL oracle can reproduce it)."""
-    from dataengineer_spark.operators.preparation import portable_word_hash
+    so a SQL oracle can reproduce it).  One parsed SQL expression; the
+    portable fold walks a ``split`` array, so the regex normalization
+    runs once per row (see ``preparation._poly_hash_sql``)."""
+    from dataengineer_spark.operators.preparation import _poly_hash_sql
 
-    c = F.col(text) if isinstance(text, str) else text
-    normalized = F.trim(F.lower(F.regexp_replace(c, r"\s+", " ")))
+    normalized = f"trim(lower(regexp_replace(`{text}`, '\\\\s+', ' ')))"
     if portable:
-        return portable_word_hash(normalized)
-    return F.xxhash64(normalized)
+        return F.expr(_poly_hash_sql(normalized))
+    return F.expr(f"xxhash64({normalized})")
 
 
 def winnowed_fingerprints(
-    text: Column | str, n: int = 8, keep: int = 4, portable: bool = False
+    text: str, n: int = 8, keep: int = 4, portable: bool = False
 ) -> Column:
-    """Rolling-hash document fingerprint set: hash every char n-gram, keep
+    """Rolling-hash document fingerprint set of column ``text``: hash
+    every distinct char n-gram, keep the ``keep`` smallest hashes (a
+    winnowing sketch) — array<bigint>.  Two documents sharing any
+    fingerprint are copy-candidates.  ``portable=True`` swaps the
+    polynomial char hash for SQL-oracle reproducibility (xxhash64 stays
+    the scale default).
 
-    the ``keep`` smallest hashes (a winnowing sketch) — array<bigint>.
-    Two documents sharing any fingerprint are copy-candidates.
-    ``portable=True`` swaps the polynomial char hash for SQL-oracle
-    reproducibility (xxhash64 stays the scale default).
+    Every shingle is exactly ``n`` chars except the single short-text
+    shingle, so the portable form takes the unrolled fixed-length fold
+    (reading the lambda variable per char) on the fast path and the
+    generic fold on the rare short one.  Positional hashing à la
+    ``dedup._shingle_hashes_sql`` is NOT usable here: winnowing keeps
+    the k smallest hash VALUES with duplicates, so dedup must happen on
+    the shingle STRINGS.
     """
-    from dataengineer_spark.operators.dedup import char_shingles
     from dataengineer_spark.operators.preparation import (
-        portable_hash_fixed, portable_word_hash,
+        _poly_hash_sql, _poly_unrolled_sql,
     )
 
-    c = F.col(text) if isinstance(text, str) else text
+    t = f"`{text}`"
+    shingles = (
+        f"array_distinct(transform(sequence(1, greatest(length({t}) - {n - 1}, "
+        f"1)), i -> substr({t}, i, {n})))"
+    )
     if portable:
-        # every char n-shingle is exactly n chars except the single
-        # short-text shingle — take the unrolled fixed-length poly on
-        # the fast path, the generic fold on the rare short one.
-        # (positional hashing à la dedup._shingle_hashes_sql is NOT
-        # usable here: winnowing keeps the k smallest hash VALUES with
-        # duplicates, so dedup must happen on the shingle STRINGS.)
-        def hash_fn(s: Column) -> Column:
-            return F.when(
-                F.length(s) == n, portable_hash_fixed(s, n)
-            ).otherwise(portable_word_hash(s))
+        fixed = _poly_unrolled_sql(
+            lambda j: f"CAST(ascii(substr(s, {j + 1}, 1)) AS BIGINT)", n
+        )
+        hash_s = (
+            f"CASE WHEN length(s) = {n} THEN {fixed} "
+            f"ELSE {_poly_hash_sql('s')} END"
+        )
     else:
-        hash_fn = F.xxhash64
-    hashes = F.transform(char_shingles(c, n), lambda s: hash_fn(s))
-    return F.slice(F.array_sort(hashes), 1, keep)
+        hash_s = "xxhash64(s)"
+    return F.expr(
+        f"slice(array_sort(transform({shingles}, s -> {hash_s})), 1, {keep})"
+    )
 
 
 def repetition_signals(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataengineer_spark.operators import textops
-from dataengineer_spark.operators.dedup import content_dedup, minhash_lsh_pairs
+from dataengineer_spark.operators.dedup import content_dedup
 from dataengineer_spark.operators.preparation import train_test_split
 
 
@@ -64,26 +64,4 @@ def curate_corpus(
         F.round("quality", 6).alias("quality"),
         "split",
         textops.token_count(F.col(text_col)).cast("bigint").alias("n_tokens"),
-    )
-
-
-def remove_near_dups(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Optional stage: drop the higher id of every MinHash near-dup pair.
-
-    Anti-join against the pair list's ``id_b`` side — at corpus scale the
-    pair list is collision-rate sized and broadcasts.
-    """
-    from dataengineer_spark.tuning import carry_lifetime
-
-    pairs = minhash_lsh_pairs(docs, id_col, text_col, threshold=threshold)
-    losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
-    # the anti-join frame outlives `pairs` — carry the candidate-cache
-    # tie onto it so the transient persist survives until the action
-    return carry_lifetime(
-        docs.join(F.broadcast(losers), id_col, "left_anti"), pairs
     )

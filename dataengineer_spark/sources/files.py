@@ -129,50 +129,3 @@ def read_orc(
 
 def write_orc(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").orc(path)
-
-
-def avro_available(spark: SparkSession) -> bool:
-    """True when the spark-avro module is on the classpath.  Avro has been
-    an EXTERNAL module since Spark 2.4 (``--packages
-    org.apache.spark:spark-avro``); this sandbox's distribution ships only
-    the core avro jars, so the round-trip is exercised where the module is
-    deployed and degrades to a clear error here."""
-    try:
-        # force a real classloader lookup (py4j attribute chains resolve
-        # lazily).  Probe the DataSourceV2 provider class: Spark 4 bundles
-        # a few sql.avro helper classes (from_avro/to_avro codecs) in
-        # spark-sql itself, so AvroFileFormat resolving proves nothing —
-        # only the external spark-avro module registers the source.
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.v2.avro.AvroDataSourceV2"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def read_avro(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Avro scan (row-major interchange format — Kafka/ingest edges).
-
-    Raises a deployment-pointer error when spark-avro is absent rather
-    than Spark's generic ClassNotFound."""
-    if not avro_available(spark):
-        raise NotImplementedError(
-            "spark-avro is not on the classpath; deploy with "
-            "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
-        )
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.format("avro").load(path)
-
-
-def write_avro(df: DataFrame, path: str) -> None:
-    if not avro_available(df.sparkSession):
-        raise NotImplementedError(
-            "spark-avro is not on the classpath; deploy with "
-            "--packages org.apache.spark:spark-avro_2.13:<spark-version>"
-        )
-    df.write.mode("overwrite").format("avro").save(path)

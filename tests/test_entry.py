@@ -7,8 +7,10 @@ per-query list consistent with the one ``QUERY_ORDER`` registry.
 
 from __future__ import annotations
 
+import ast
 import inspect
 import json
+import re
 import sys
 from pathlib import Path
 
@@ -16,6 +18,40 @@ ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod
+
+
+def _sites(path: Path, is_site) -> set[str]:
+    """Names of the top-level functions (``Class.method`` for methods) of
+    ``path`` that contain an AST node ``is_site`` accepts; docstrings are
+    skipped, so prose about an expression is not a copy of it."""
+    tree = ast.parse(path.read_text())
+    docs = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node,
+            (ast.Module, ast.FunctionDef, ast.ClassDef, ast.AsyncFunctionDef),
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+
+    def owners(node, prefix=""):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                yield from owners(child, f"{child.name}.")
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield prefix + child.name, child
+            elif not prefix:
+                yield "<module>", child
+
+    return {
+        name
+        for name, top in owners(tree)
+        for node in ast.walk(top)
+        if id(node) not in docs and is_site(node)
+    }
 
 
 class TestContract:
@@ -81,3 +117,51 @@ class TestRegistry:
         }
         for label, names in lists.items():
             assert set(names) <= registered, (label, set(names) - registered)
+
+    def test_portable_replay_declared_once(self):
+        # the portable hash family has one builder per engine: the fold
+        # text (``acc * 31 + x``) lives only in the DuckDB ``_duck_poly``
+        # and the two Spark SQL builders in preparation.py, and the
+        # affine MinHash parameters are expanded only by ``_duck_minhash``
+        # (SimHash's seed-7 bit family is the one other use)
+        fold = re.compile(r"\*\s*31\s*\+")
+
+        def folds(node):
+            return isinstance(node, ast.Constant) and isinstance(
+                node.value, str
+            ) and bool(fold.search(node.value))
+
+        def affine_calls(node):
+            return isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "_affine_params"
+                or getattr(node.func, "attr", None) == "_affine_params"
+            )
+
+        entry_py = ROOT / "__spark_entry__.py"
+        assert _sites(entry_py, folds) == {"_duck_poly"}
+        assert _sites(entry_py, affine_calls) == {
+            "_duck_minhash", "_simhash_portable_oracle",
+        }
+
+        def spark_folds(node):
+            # SQL text, or Python arithmetic ``x * 31`` (the UDF side)
+            return folds(node) or (
+                isinstance(node, ast.BinOp)
+                and isinstance(node.op, ast.Mult)
+                and any(
+                    isinstance(x, ast.Constant) and x.value == 31
+                    for x in (node.left, node.right)
+                )
+            )
+
+        found = {
+            f"{path.relative_to(ROOT / 'dataengineer_spark')}:{name}"
+            for path in sorted((ROOT / "dataengineer_spark").rglob("*.py"))
+            for name in _sites(path, spark_folds)
+        }
+        assert found == {
+            "operators/preparation.py:_poly_hash_sql",
+            "operators/preparation.py:_poly_unrolled_sql",
+            # the Python-side UDF the multimodal oracle replays
+            "operators/multimodal.py:_fake_feature",
+        }, found

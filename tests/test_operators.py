@@ -506,9 +506,61 @@ class TestTextOps:
         assert scores[1] < scores[0]
 
     def test_fingerprint_stability(self, spark):
-        df = spark.createDataFrame([("Some  Text",), ("some text",)], "t string")
-        fps = [r["f"] for r in df.select(textops.doc_fingerprint("t").alias("f")).collect()]
-        assert fps[0] == fps[1]  # normalization: case + whitespace
+        import re
+        from functools import reduce
+
+        from dataengineer_spark.operators.preparation import _POLY_MOD
+
+        texts = [
+            "Some  Text", "some text", "\tLeading and trailing \n",
+            "TABS\tand\nnew\r\nlines\x0bhere", "a    b     c", "", None,
+            "seven77", "eight888", "Ünïcödé  Café\tNAÏVE 🙂 中文",
+        ]
+        df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+        got = {
+            r["id"]: r
+            for r in df.select(
+                "id",
+                textops.doc_fingerprint("t").alias("fx"),
+                textops.doc_fingerprint("t", portable=True).alias("fp"),
+                textops.winnowed_fingerprints("t").alias("wx"),
+                textops.winnowed_fingerprints("t", portable=True).alias("wp"),
+            ).collect()
+        }
+        assert got[0]["fx"] == got[1]["fx"]  # normalization: case + whitespace
+        assert got[0]["fp"] == got[1]["fp"]
+
+        # Python-normalized references: Java regex \s, then lower, then
+        # trim (spaces only); winnowing reads the RAW text's char 8-grams
+        def norm(t):
+            return re.sub("[ \t\n\x0b\f\r]+", " ", t).lower().strip(" ")
+
+        def grams(t):
+            return {t[i:i + 8] for i in range(max(len(t) - 7, 1))}
+
+        def poly(t):
+            return reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0)
+
+        strs = {norm(t) for t in texts if t is not None}
+        strs |= {g for t in texts if t is not None for g in grams(t)}
+        strs.add(None)
+        xx = dict(
+            spark.createDataFrame([(x,) for x in strs], "x string")
+            .select("x", F.xxhash64("x"))
+            .collect()
+        )
+        for i, t in enumerate(texts):
+            if t is None:
+                want = (xx[None], None, [xx[None]], [None])
+            else:
+                want = (
+                    xx[norm(t)],
+                    poly(norm(t)),
+                    sorted(xx[g] for g in grams(t))[:4],
+                    sorted(poly(g) for g in grams(t))[:4],
+                )
+            r = got[i]
+            assert (r["fx"], r["fp"], r["wx"], r["wp"]) == want, (t, r, want)
 
 
 class TestEvents:
@@ -673,19 +725,6 @@ class TestRandomProjection:
         import statistics
 
         assert abs(statistics.mean(ratios) - 1.0) < 0.05
-
-
-class TestSmallSurface:
-    def test_first_row_explicit_order(self, spark):
-        df = spark.createDataFrame([(3, "c"), (1, "a"), (2, "b")], "k int, v string")
-        assert agg_ops.first_row(df, [F.col("k").asc()])["v"] == "a"
-        assert agg_ops.first_row(df) is not None  # arbitrary-choice form
-
-    def test_language_scores_counts_markers(self, spark):
-        df = spark.createDataFrame([("the cat and the dog",)], "t string")
-        scores = textops.language_scores(F.col("t"))
-        row = df.select(*[c.alias(k) for k, c in scores.items()]).first()
-        assert row["en"] == 3 and row["fr"] == 0
 
 
 class TestDataQuality:
@@ -1049,8 +1088,19 @@ class TestCharShingleHashes:
              (5, None), (6, "aaaaaaaa")],
             "doc_id long, text string",
         )
+        from functools import reduce
+
         from pyspark.sql import functions as F
-        from dataengineer_spark.operators.preparation import portable_word_hash
+        from dataengineer_spark.operators.preparation import _POLY_MOD
+
+        def poly(t):
+            return reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0)
+
+        def portable_ref(t):
+            if t is None:
+                return [None]
+            grams = {t[i:i + 5] for i in range(max(len(t) - 4, 1))}
+            return sorted({poly(g) for g in grams})
 
         staged = df.select(
             "doc_id",
@@ -1069,57 +1119,74 @@ class TestCharShingleHashes:
             fast = staged.select(
                 "doc_id", F.array_sort(F.expr(fast_sql)).alias("h")
             )
-            if portable:
-                hash_fn = portable_word_hash
-            else:
-                hash_fn = lambda s: F.pmod(
-                    F.xxhash64(s), F.lit(dedup_ops._MERSENNE)
-                )
-            slow = df.select(
-                "doc_id",
-                F.array_sort(
-                    F.transform(
-                        dedup_ops.char_shingles(F.col("text"), 5), hash_fn
-                    )
-                ).alias("h"),
-            )
             f = {r["doc_id"]: r["h"] for r in fast.collect()}
-            s = {r["doc_id"]: r["h"] for r in slow.collect()}
+            if portable:
+                s = {i: portable_ref(t) for i, t in df.collect()}
+            else:
+                slow = df.select(
+                    "doc_id",
+                    F.array_sort(
+                        F.transform(
+                            dedup_ops.char_shingles(F.col("text"), 5),
+                            lambda x: F.pmod(
+                                F.xxhash64(x), F.lit(dedup_ops._MERSENNE)
+                            ),
+                        )
+                    ).alias("h"),
+                )
+                s = {r["doc_id"]: r["h"] for r in slow.collect()}
             assert f == s, f"portable={portable}: {f} != {s}"
 
     def test_portable_hash_forms_agree(self, spark):
-        # the sequence-fold portable_word_hash, the unrolled fixed-length
-        # form, and the historical split-based fold must all agree —
-        # including empty, NULL, unicode, and the >8-char periodic-mod path
+        # the word fold and the unrolled fixed-length fold under both of
+        # its per-character reads (staged codepoint array, substr of a
+        # lambda variable) must equal the pure-Python fold — including
+        # empty, NULL, unicode, astral-plane, and the >8-char
+        # periodic-mod path (25 chars overflows int64 unless reduced
+        # every 8 steps)
+        from functools import reduce
+
         from pyspark.sql import functions as F
         from dataengineer_spark.operators.preparation import (
-            _POLY_MOD, portable_hash_fixed, portable_word_hash,
+            _POLY_MOD, _poly_hash_sql,
         )
 
+        texts = ["hello", "", None, "héllo wörld", "a", "x" * 25,
+                 "abcdefgh", "🙂é🙂é🙂é🙂é"]
         df = spark.createDataFrame(
-            [(1, "hello"), (2, ""), (3, None), (4, "héllo wörld"),
-             (5, "a"), (6, "x" * 25), (7, "abcdefgh")],
-            "id long, s string",
+            list(enumerate(texts)), "id long, s string"
+        ).select(
+            "id", "s",
+            F.expr(
+                "transform(split(`s`, ''), x -> CAST(ascii(x) AS BIGINT))"
+            ).alias("_cps"),
         )
-        split_fold = F.aggregate(
-            F.transform(
-                F.filter(F.split(F.col("s"), ""), lambda x: x != F.lit("")),
-                F.ascii,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: (acc * F.lit(31) + x) % F.lit(_POLY_MOD),
-        )
+
+        def fixed(n):
+            # a text of exactly n chars is its own single n-shingle
+            cps = F.expr(
+                dedup_ops._shingle_hashes_from_cps_sql("`s`", "`_cps`", n)
+            )[0]
+            sub = textops.winnowed_fingerprints(
+                "s", n=n, keep=1, portable=True
+            )[0]
+            return F.when(F.length("s") == n, F.array(cps, sub))
+
         rows = df.select(
-            "id", split_fold.alias("ref"),
-            portable_word_hash(F.col("s")).alias("seq"),
-            F.when(F.length("s") == 8, portable_hash_fixed(F.col("s"), 8))
-            .when(F.length("s") == 25, portable_hash_fixed(F.col("s"), 25))
-            .alias("fixed"),
+            "id",
+            F.expr(_poly_hash_sql("`s`")).alias("fold"),
+            F.coalesce(fixed(8), fixed(25)).alias("fixed"),
         ).collect()
         for r in rows:
-            assert r["seq"] == r["ref"], r
-            if r["fixed"] is not None:
-                assert r["fixed"] == r["ref"], r
+            t = texts[r["id"]]
+            want = None if t is None else reduce(
+                lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0
+            )
+            assert r["fold"] == want, (r, want)
+            if t is not None and len(t) in (8, 25):
+                assert r["fixed"] == [want, want], (r, want)
+            else:
+                assert r["fixed"] is None, r
 
     _EDGE_ROWS = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -1875,16 +1942,6 @@ class TestPagerank:
         # 2 receives only 1's floor rank; 3 receives 2's rank
         assert abs(ranks[2] - (base + 0.85 * base)) < 1e-7
         assert ranks[3] > ranks[2] > ranks[1]
-
-    def test_degree_stats(self, spark):
-        from dataengineer_spark.operators import graph as graph_ops
-
-        edges = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "src long, dst long")
-        out = {
-            r["node"]: (r["out_degree"], r["in_degree"])
-            for r in graph_ops.degree_stats(edges).collect()
-        }
-        assert out == {1: (2, 0), 2: (1, 1), 3: (0, 2)}
 
 
 class TestFuzzyJoin:
@@ -4821,46 +4878,30 @@ class TestSqlExprTwins:
         self._check(spark, [(121, None)])
 
     def test_pq_encode_matches_column_builder(self, spark):
-        from pyspark.sql import functions as F
-
+        # the fused pq_encode builder against a pure-Python encode with
+        # its float-op order: per subspace, left-fold dots minus the
+        # half-norms, argmax with ties to the lower index
         from dataengineer_spark.operators import similarity as s
-        from dataengineer_spark.tuning import array_lit
 
         df = self._frame(spark)
         cb = s.pq_codebook(64, m=8, ksub=16, seed=11)
-
-        # the pre-round-11 Column-API formulation, inlined as the parity
-        # reference
         dsub = len(cb[0][0])
-        v = F.col("embedding").cast("array<double>")
-        codes = []
-        for j, cbk in enumerate(cb):
-            sub = F.slice(v, j * dsub + 1, dsub)
-            ksub = len(cbk)
-            pmat = array_lit([[c[t] for c in cbk] for t in range(dsub)])
-            dots = F.aggregate(
-                F.zip_with(
-                    sub, pmat,
-                    lambda x, row: F.transform(row, lambda cv: x * cv),
-                ),
-                F.array_repeat(F.lit(0.0), ksub),
-                lambda acc, contrib: F.zip_with(
-                    acc, contrib, lambda a, c: a + c
-                ),
-            )
-            halves = array_lit([s._half_sqnorm(c) for c in cbk])
-            scores = F.zip_with(dots, halves, lambda d, h: d - h)
-            best = F.array_max(
-                F.transform(
-                    scores,
-                    lambda sc, i: F.struct(sc.alias("s"), (-i).alias("ni")),
-                )
-            )
-            codes.append((-best.getField("ni")).cast("int"))
-        ref = df.withColumn("old", F.array(*codes)).select("vec_id", "old")
 
-        new = s.pq_encode(df, cb, out="new").select("vec_id", "new")
-        assert ref.join(new, "vec_id").where("old <> new").count() == 0
+        def encode(v):
+            codes = []
+            for j, cbk in enumerate(cb):
+                sub = v[j * dsub:(j + 1) * dsub]
+                scores = [
+                    self._dot_py(sub, c) - s._half_sqnorm(c) for c in cbk
+                ]
+                codes.append(
+                    max(range(len(cbk)), key=lambda i: (scores[i], -i))
+                )
+            return codes
+
+        got = s.pq_encode(df, cb, out="new").select("embedding", "new")
+        for r in got.collect():
+            assert r["new"] == encode(r["embedding"]), r["new"]
 
     def test_simhash_matches_python_reference(self, spark):
         import re

@@ -168,17 +168,6 @@ class TestCuration:
         assert {r["split"] for r in rows} <= {"train", "valid", "test"}
         assert all(r["n_tokens"] > 0 for r in rows)
 
-    def test_remove_near_dups_drops_higher_id(self, spark):
-        from dataengineer_spark.plans.curation import remove_near_dups
-
-        text = "the quick brown fox jumps over the lazy dog again and again today"
-        df = spark.createDataFrame(
-            [(1, text), (2, text), (3, "entirely different words live here now friends")],
-            "doc_id long, text string",
-        )
-        kept = sorted(r["doc_id"] for r in remove_near_dups(df, threshold=0.9).collect())
-        assert kept == [1, 3]
-
 
 class TestCuration2Composition:
     def test_fold_conservation_and_trim_rule(self, spark, sf_dir):

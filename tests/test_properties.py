@@ -869,11 +869,15 @@ class TestPpsPythonParity:
 
 
 class TestPortablePolyParity:
-    """The unrolled mod-every-8 polynomial (preparation.portable_hash_fixed;
-    dedup._shingle_hashes_from_cps_sql unrolls the same cadence) must equal
-    the reference fold for EVERY length, not just the pinned n∈{8,25} —
-    the int64-overflow proof depends on the mod cadence, and a cadence
-    edit would silently break DuckDB-oracle bit-parity."""
+    """The portable poly hash's Spark SQL builders must equal the
+    pure-Python fold for EVERY length, not just pinned ones: the word
+    fold (``preparation._poly_hash_sql``) and the unrolled mod-every-8
+    fold (``preparation._poly_unrolled_sql``) under both of its
+    per-character reads — ``element_at`` of the staged codepoint array
+    (the MinHash shingle stage) and ``ascii(substr(...))`` of a lambda
+    variable (the winnowing sketch).  The int64-overflow proof depends
+    on the mod cadence, and a cadence edit would silently break
+    DuckDB-oracle bit-parity."""
 
     @given(
         texts=st.lists(
@@ -892,29 +896,53 @@ class TestPortablePolyParity:
     @settings(max_examples=15, deadline=None,
               suppress_health_check=[HealthCheck.function_scoped_fixture])
     def test_fixed_matches_fold_and_python(self, spark, texts):
-        from dataengineer_spark.operators.preparation import (
-            _POLY_MOD, portable_hash_fixed, portable_word_hash,
+        from functools import reduce
+
+        from dataengineer_spark.operators.dedup import (
+            _shingle_hashes_from_cps_sql,
         )
+        from dataengineer_spark.operators.preparation import (
+            _POLY_MOD, _poly_hash_sql,
+        )
+        from dataengineer_spark.operators.textops import winnowed_fingerprints
 
         rows = [(i, t) for i, t in enumerate(texts)]
-        df = spark.createDataFrame(rows, "id long, s string")
+        df = spark.createDataFrame(rows, "id long, s string").select(
+            "id", "s",
+            F.expr(
+                "transform(split(`s`, ''), x -> CAST(ascii(x) AS BIGINT))"
+            ).alias("_cps"),
+        )
+        # a text of exactly n chars is its own single n-shingle, so both
+        # production callers return [unrolled fold of the whole text];
         # one unrolled expression per distinct length present
+        lengths = sorted({len(t) for t in texts})
+        cps = F.coalesce(*[
+            F.when(
+                F.length("s") == n,
+                F.expr(_shingle_hashes_from_cps_sql("`s`", "`_cps`", n))[0],
+            )
+            for n in lengths
+        ])
+        substr = F.coalesce(*[
+            F.when(
+                F.length("s") == n,
+                winnowed_fingerprints("s", n=n, keep=1, portable=True)[0],
+            )
+            for n in lengths
+        ])
         out = df.select(
             "id",
-            portable_word_hash(F.col("s")).alias("fold"),
-            F.coalesce(*[
-                F.when(
-                    F.length("s") == n, portable_hash_fixed(F.col("s"), n)
-                )
-                for n in sorted({len(t) for t in texts})
-            ]).alias("fixed"),
+            F.expr(_poly_hash_sql("`s`")).alias("fold"),
+            cps.alias("cps"),
+            substr.alias("substr"),
         ).collect()
         py = {
-            i: __import__("functools").reduce(
-                lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0
-            )
+            i: reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0)
             for i, t in rows
         }
         for r in out:
-            assert r["fold"] == py[r["id"]], (r, py[r["id"]])
-            assert r["fixed"] == py[r["id"]], (r, py[r["id"]])
+            want = py[r["id"]]
+            assert (r["fold"], r["cps"], r["substr"]) == (want,) * 3, (
+                r, want,
+            )

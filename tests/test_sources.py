@@ -507,29 +507,6 @@ class TestNormalizedLake:
         assert (tmp_path / "lake" / "lineitem.parquet").is_symlink()
 
 
-class TestAvroGate:
-    def test_avro_roundtrip_or_clear_error(self, spark, sf_dir):
-        """Round-trips nation when spark-avro is deployed; otherwise the
-        gate must raise the deployment pointer, not a raw JVM error."""
-        import tempfile
-
-        import pytest
-
-        from dataengineer_spark.sources.files import (
-            avro_available, read_avro, write_avro,
-        )
-        from dataengineer_spark.testdata import load_table
-
-        nation = load_table(spark, sf_dir, "nation")
-        if avro_available(spark):
-            out = tempfile.mkdtemp(prefix="spark_graft_avro_") + "/nation"
-            write_avro(nation, out)
-            assert read_avro(spark, out).count() == nation.count()
-        else:
-            with pytest.raises(NotImplementedError, match="spark-avro"):
-                write_avro(nation, "/tmp/never_written_avro")
-
-
 class TestPermissiveJson:
     def test_corrupt_lines_quarantined_not_dropped(self, spark, tmp_path):
         from pyspark.sql import types as T
