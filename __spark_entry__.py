@@ -212,7 +212,7 @@ def _label_dim_values() -> str:
 # One builder per fact: the poly fold (preparation._poly_hash_sql), the
 # char n-gram list (dedup.char_shingles), the exact Jaccard ratio, and the
 # affine MinHash signature + raw-tuple band keys (dedup._minhash_min_sql,
-# _band_buckets(portable=True)).  Every oracle that replays the portable
+# _family_bands(family="portable")).  Every oracle that replays the portable
 # family composes these.
 
 
@@ -2560,7 +2560,7 @@ def q_e2_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).where(F.col("doc_id") < 1000)
     out = dedup_ops.minhash_lsh_pairs(
         docs, "doc_id", "text", shingle_size=5, num_hashes=32, bands=4,
-        threshold=0.5, portable=True,
+        threshold=0.5, family="portable",
     )
     # the wrapper select outlives `out` — move the candidate-cache tie
     # onto it or the transient persist unpersists before the action
@@ -2613,7 +2613,7 @@ def q_prep_decontaminate_portable(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("doc_id").alias("bench_id"), "text"
     )
     return dedup_ops2.minhash_lsh_join(
-        docs, bench, threshold=0.5, portable=True
+        docs, bench, threshold=0.5, family="portable"
     )
 
 
@@ -2685,7 +2685,7 @@ def q_prep_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return dedup_ops.minhash_lsh_join(
         train, holdout, corpus_id="corpus_id", bench_id="bench_id",
-        threshold=0.8, portable=True,
+        threshold=0.8, family="portable",
     )
 
 
@@ -2719,7 +2719,7 @@ def q_prep_decontaminate_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("bench_id"), "text"
     )
     return dedup_ops3.minhash_lsh_join(
-        docs, bench, threshold=0.5, engine="arrow"
+        docs, bench, threshold=0.5, family="arrow"
     )
 
 
@@ -3850,7 +3850,9 @@ def q_e2_neardup_dedup_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataengineer_spark.tuning import carry_lifetime
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    raw = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5, portable=True)
+    raw = minhash_lsh_pairs(
+        docs, "doc_id", "text", threshold=0.5, family="portable"
+    )
     pairs = carry_lifetime(raw.select("id_a", "id_b"), raw)
     return carry_lifetime(
         cluster_dedup(docs, pairs, "doc_id").select("doc_id"), pairs
@@ -8074,12 +8076,11 @@ def q_e2_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-shingled; the only shuffle ships 24-byte (band, bucket)
     rows.  Portable hash family → the oracle replays both sides'
     signatures, the band probe, and the anti join bit-for-bit."""
-    return _incneardup_probe(spark, sf_dir, portable=True)
+    return _incneardup_probe(spark, sf_dir, "portable")
 
 
 def _incneardup_probe(
-    spark: SparkSession, sf_dir: str, portable: bool = False,
-    engine: str = "expr",
+    spark: SparkSession, sf_dir: str, family: str
 ) -> DataFrame:
     """Shared scenario for the stored-index probe engine twins (fresh
     docs + 50 re-crawls vs the doc_id<250 history) — ONE builder so the
@@ -8089,7 +8090,7 @@ def _incneardup_probe(
     seen = docs.where(F.col("doc_id") < 250)
     seen_bands = dedup_ops.signature_table(
         seen, "doc_id", "text", shingle_size=5, num_hashes=32, bands=4,
-        portable=portable, engine=engine,
+        family=family,
     )
     recrawl = docs.where(F.col("doc_id") < 50).withColumn(
         "doc_id", F.col("doc_id") + 5000
@@ -8097,7 +8098,7 @@ def _incneardup_probe(
     new = docs.where(F.col("doc_id") >= 250).unionByName(recrawl)
     kept = dedup_ops.incremental_neardup(
         new, seen_bands, "doc_id", "text", shingle_size=5, num_hashes=32,
-        bands=4, portable=portable, engine=engine,
+        bands=4, family=family,
     )
     return kept.select("doc_id", "lang")
 
@@ -8113,7 +8114,7 @@ def q_e2_incremental_neardup_arrow(
     twin hash-verifies with the portable family.  ~29× the portable
     family's wall at sf0.1 (38→1.3 s); this is the form that benches
     and ships."""
-    return _incneardup_probe(spark, sf_dir, engine="arrow")
+    return _incneardup_probe(spark, sf_dir, "arrow")
 
 
 def _index_probe_oracle(newb_sql: str) -> str:
@@ -8155,12 +8156,11 @@ def q_e11_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch-split-invariant and the batch SQL oracle checks the
     streamed output row-for-row.  No state store: the index IS the
     state, in the lake where it belongs."""
-    return _stream_neardup_run(spark, sf_dir, portable=True)
+    return _stream_neardup_run(spark, sf_dir, "portable")
 
 
 def _stream_neardup_run(
-    spark: SparkSession, sf_dir: str, portable: bool = False,
-    engine: str = "expr",
+    spark: SparkSession, sf_dir: str, family: str
 ) -> DataFrame:
     """Shared runner for the streaming near-dup-ingest engine twins —
     ONE builder (index split, checkpointed availableNow run, lake
@@ -8175,13 +8175,13 @@ def _stream_neardup_run(
     seen = docs_batch.where(F.col("doc_id") < 250)
     idx = dedup_ops.signature_table(
         seen, "doc_id", "text", shingle_size=5, num_hashes=32, bands=4,
-        portable=portable, engine=engine,
+        family=family,
     ).localCheckpoint()  # fixed for the run; sized for broadcast
     out_dir = tempfile.mkdtemp(prefix="spark_graft_snd_") + "/kept"
     s = stream_documents(spark, sf_dir + "/documents.parquet")
     q = stream_neardup_filter(
         s, idx, out_dir, shingle_size=5, num_hashes=32, bands=4,
-        portable=portable, engine=engine,
+        family=family,
         checkpoint=tempfile.mkdtemp(prefix="spark_graft_snd_ck_"),
     )
     q.awaitTermination()
@@ -8196,7 +8196,7 @@ def q_e11_stream_neardup_arrow(
     probe/lake-append pipeline to the oracled portable twin
     ``q_e11_stream_neardup`` (which hash-verifies the plan); this is
     the bench/deploy form."""
-    return _stream_neardup_run(spark, sf_dir, engine="arrow")
+    return _stream_neardup_run(spark, sf_dir, "arrow")
 
 
 def _stream_neardup_oracle() -> str:
@@ -8271,7 +8271,7 @@ def q_e11_stream_neardup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         s,
         os.path.join(root, "index"),
         os.path.join(root, "kept"),
-        shingle_size=5, num_hashes=32, bands=4, portable=True,
+        shingle_size=5, num_hashes=32, bands=4, family="portable",
         checkpoint=os.path.join(root, "ck"),
         n_index_buckets=8,
     )
@@ -8970,11 +8970,16 @@ def q_e2_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.unionByName(mutated)
     return dedup_ops.neardup_recall(
         corpus, "doc_id", "text", shingle_size=5, num_hashes=32, bands=4,
-        threshold=0.5, portable=True, allow_quadratic=True,
+        threshold=0.5, family="portable", allow_quadratic=True,
     )
 
 
 def _neardup_recall_oracle() -> str:
+    """Ground truth as an inverted index: the docs' distinct shingles,
+    self-joined on the shingle and counted per pair, give ``|A∩B|``, and
+    ``|A∪B| = |A| + |B| − |A∩B|`` (``dedup._jaccard``'s size identity).
+    A pair sharing no shingle has Jaccard 0, below the threshold, so the
+    all-pairs intersect is never built."""
     d_body = f"""SELECT doc_id, text FROM documents WHERE doc_id < 400
   UNION ALL
   SELECT doc_id + 10000 AS doc_id, text || '{_RECALL_TAIL}' AS text
@@ -8983,10 +8988,13 @@ def _neardup_recall_oracle() -> str:
     return f"""
 WITH {prefix}, shset AS (
   SELECT doc_id, {_duck_shingles(5)} AS ss FROM d
+), sh AS (
+  SELECT doc_id, len(ss) AS n, unnest(ss) AS s FROM shset
 ), truth AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM shset a JOIN shset b ON a.doc_id < b.doc_id
-  WHERE {_duck_jaccard("a.ss", "b.ss")} >= 0.5
+  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id, a.n, b.n
+  HAVING count(*) * 1.0 / (a.n + b.n - count(*)) >= 0.5
 ), hit AS (
   SELECT t.id_a, CASE WHEN c.id_a IS NOT NULL THEN 1 ELSE 0 END AS f
   FROM truth t LEFT JOIN cand c ON t.id_a = c.id_a AND t.id_b = c.id_b

@@ -320,17 +320,13 @@ def _minhash_min_sql(hashes_sql: str, num_hashes: int, seed: int = 42) -> str:
     ``hashes_sql`` MUST be a plain (quoted) column reference to a
     previously-projected hash array — the parser inlines it verbatim, so
     an expression here would recompute the shingle stage ``num_hashes``
-    times.
+    times.  The array must hold no NULL: ``_expr_signatures`` never
+    folds a NULL text's hashes.
     """
     params = _affine_params(num_hashes, seed)
-    # a NULL hash value (NULL input text) yields {_MERSENNE} per
-    # component — the fold's initial value — not NULL: array_min over
-    # all-NULL returns NULL, and every non-NULL pmod value is
-    # < {_MERSENNE}, so the coalesce changes nothing else
     passes = ",".join(
-        f"coalesce(array_min(transform({hashes_sql}, "
-        f"h -> pmod({a} * h + {b}, {_MERSENNE}))), "
-        f"CAST({_MERSENNE} AS BIGINT))"
+        f"array_min(transform({hashes_sql}, "
+        f"h -> pmod({a} * h + {b}, {_MERSENNE})))"
         for a, b in params
     )
     return f"array({passes})"
@@ -372,6 +368,8 @@ def _expr_signatures(
     signature stage at sf0.1).
     Texts shorter than the shingle width keep the original string-based
     fold verbatim (the CASE branches evaluate lazily per row).
+
+    NULL text has no shingles, so its signature is NULL.
     """
     from dataengineer_spark.tuning import fan_out
 
@@ -395,34 +393,87 @@ def _expr_signatures(
     # referenced num_hashes times by the fold below — CollapseProject
     # keeps it un-inlined, so the shingle stage runs once per row), then
     # fold the signature via the allocation-light array_min form
-    hashed = staged.select(F.col(id_col), F.expr(hs_sql).alias("_hs"))
+    # text rides along to the fold's projection for the NULL guard only
+    hashed = staged.select(
+        F.col(id_col), F.col(text_col), F.expr(hs_sql).alias("_hs")
+    )
+    fold = _minhash_min_sql("`_hs`", num_hashes, seed)
     return hashed.select(
         F.col(id_col),
-        F.expr(_minhash_min_sql("`_hs`", num_hashes, seed)).alias("_sig"),
+        F.expr(f"IF(`{text_col}` IS NULL, NULL, {fold})").alias("_sig"),
     )
 
 
-def _band_buckets(
-    sig: DataFrame, id_col: str, num_hashes: int, bands: int,
-    portable: bool = False,
+#: The MinHash near-dup hash families, by the name a ``signature_table``
+#: index is stamped with.  Buckets of different families never match.
+NEARDUP_FAMILIES = ("xxhash64", "portable", "arrow")
+
+
+def _check_family(bands_df: DataFrame | None, family: str) -> None:
+    """The one hash-family fence: ``family`` must be a known family and,
+    when ``bands_df`` is a stored ``signature_table`` index, the family
+    whose stamp its bucket column carries (the stamp survives the parquet
+    round trip in Spark's schema footer).  A cross-family probe would
+    silently match nothing, so it fails loudly instead."""
+    if family not in NEARDUP_FAMILIES:
+        raise ValueError(
+            f"unknown near-dup hash family {family!r}: expected one of "
+            f"{', '.join(NEARDUP_FAMILIES)}"
+        )
+    if bands_df is None or "bucket" not in bands_df.columns:
+        return
+    stamped = bands_df.schema["bucket"].metadata.get("neardup_family")
+    if stamped is not None and stamped != family:
+        raise ValueError(
+            f"the stored index was built with the '{stamped}' signature "
+            f"family but this probe uses '{family}' — cross-family "
+            "buckets never match, so every duplicate would silently pass; "
+            "probe with the family that built the index"
+        )
+
+
+def _family_bands(
+    df: DataFrame, id_col: str, text_col: str, shingle_size: int,
+    num_hashes: int, bands: int, family: str, assume_fanned: bool = False,
 ) -> DataFrame:
-    """(id, band, bucket) rows from a ``_sig`` signature column.
+    """(id, band, bucket) MinHash-LSH band rows of hash ``family`` — the
+    one place that picks the signature path and the bucket key:
+
+    - ``"xxhash64"`` (the scale default): expression-engine signatures
+      over xxhash64 shingle hashes, xxhash64 band keys;
+    - ``"portable"``: expression-engine signatures over the polynomial
+      shingle hash, and the band's joined signature values as a raw
+      string key, so a SQL oracle can reproduce every key;
+    - ``"arrow"``: vectorized byte-level signatures
+      (``minhash_signatures_arrow``), xxhash64 band keys.
+
+    NULL text has no shingles, so it gets no band rows (as in the DuckDB
+    replay: ``_duck_shingles(NULL)`` is empty): its signature is NULL and
+    the explode emits nothing.  Not a Filter: over a shared ``fan_out``
+    base Catalyst pushes a Filter below the round-robin repartition of
+    this branch only, and the signature and verify branches would stop
+    sharing one exchange.
 
     The band exchange carries ONLY (id, band, bucket) — 24 bytes/row —
     never the shingle arrays (which the explode would duplicate ×bands).
-    ``portable=True`` keeps the band's joined signature values as the
-    (string) bucket key instead of xxhash64-ing them — the equi-join
-    semantics are identical and a SQL oracle can reproduce the key.
-
     The bands×rows struct array is built as ONE parsed SQL expression
-    (~300 py4j round trips → 1; see ``_shingle_hashes_sql``); bucket
-    values and the 0-based band numbering are unchanged.
+    (~300 py4j round trips → 1; see ``_shingle_hashes_sql``).
     """
+    _check_family(None, family)
     if num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes}) — "
             "otherwise trailing signature components are silently dropped "
             "and the tuned (bands, rows) s-curve is not the one that runs"
+        )
+    if family == "arrow":
+        sig = minhash_signatures_arrow(
+            df, id_col, text_col, shingle_size, num_hashes
+        )
+    else:
+        sig = _expr_signatures(
+            df, id_col, text_col, shingle_size, num_hashes,
+            family == "portable", assume_fanned=assume_fanned,
         )
     rows = num_hashes // bands
 
@@ -431,14 +482,16 @@ def _band_buckets(
             f"element_at(_sig, {b * rows + r + 1})" for r in range(rows)
         )
         joined = f"concat_ws(',', {elems})"
-        return joined if portable else f"xxhash64({joined})"
+        return joined if family == "portable" else f"xxhash64({joined})"
 
     structs = ", ".join(
         f"named_struct('band', {b}, 'bucket', {bucket(b)})"
         for b in range(bands)
     )
     return sig.select(
-        id_col, F.explode(F.expr(f"array({structs})")).alias("_band")
+        id_col,
+        F.explode(F.expr(f"IF(_sig IS NULL, NULL, array({structs}))"))
+        .alias("_band"),
     ).select(id_col, "_band.band", "_band.bucket")
 
 
@@ -450,8 +503,7 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.7,
-    portable: bool = False,
-    engine: str = "expr",
+    family: str = "xxhash64",
 ) -> DataFrame:
     """E2 — near-duplicate pairs via MinHash + LSH banding.
 
@@ -459,6 +511,7 @@ def minhash_lsh_pairs(
     self-equi-join on (band, hash) → exact Jaccard verify ≥ threshold.
     The only shuffle is the band-bucket join; candidate count scales with
     collision rate, not n². Returns (id_a, id_b, jaccard) with id_a < id_b.
+    ``family`` is one of ``NEARDUP_FAMILIES`` (see ``_family_bands``).
 
     The candidate-pair intermediate is ``transient_persist``-ed
     (metadata-only at plan build — a lazy lineage cut would EXECUTE the
@@ -477,15 +530,8 @@ def minhash_lsh_pairs(
     # otherwise keeps the scan's partitioning through the broadcast
     # semi-join and serializes on a single-row-group local input)
     base = fan_out(df.select(F.col(id_col), F.col(text_col).alias("_t")))
-    if engine == "arrow":
-        sig = minhash_signatures_arrow(
-            base, id_col, "_t", shingle_size, num_hashes
-        )
-    else:
-        sig = _expr_signatures(base, id_col, "_t", shingle_size, num_hashes,
-                               portable, assume_fanned=True)
-
-    banded = _band_buckets(sig, id_col, num_hashes, bands, portable=portable)
+    banded = _family_bands(base, id_col, "_t", shingle_size, num_hashes,
+                           bands, family, assume_fanned=True)
 
     # referenced by BOTH self-join sides, whose differing id aliases
     # defeat exchange reuse (the canonical plans differ) — without the
@@ -1012,8 +1058,7 @@ def minhash_lsh_join(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    portable: bool = False,
-    engine: str = "expr",
+    family: str = "xxhash64",
 ) -> DataFrame:
     """Bipartite near-dup join: corpus documents ~matching any benchmark
 
@@ -1039,28 +1084,10 @@ def minhash_lsh_join(
     base_b = fan_out(bench.select(
         F.col(bench_id).alias("bench_id"), F.col(bench_text).alias("_t")
     ))
-    if engine == "arrow":
-        sig_c = minhash_signatures_arrow(
-            base_c, "corpus_id", "_t", shingle_size, num_hashes
-        )
-        sig_b = minhash_signatures_arrow(
-            base_b, "bench_id", "_t", shingle_size, num_hashes
-        )
-    else:
-        sig_c = _expr_signatures(
-            base_c, "corpus_id", "_t", shingle_size, num_hashes, portable,
-            assume_fanned=True,
-        )
-        sig_b = _expr_signatures(
-            base_b, "bench_id", "_t", shingle_size, num_hashes, portable,
-            assume_fanned=True,
-        )
-    banded_c = _band_buckets(
-        sig_c, "corpus_id", num_hashes, bands, portable=portable
-    )
-    banded_b = _band_buckets(
-        sig_b, "bench_id", num_hashes, bands, portable=portable
-    )
+    banded_c = _family_bands(base_c, "corpus_id", "_t", shingle_size,
+                             num_hashes, bands, family, assume_fanned=True)
+    banded_b = _family_bands(base_b, "bench_id", "_t", shingle_size,
+                             num_hashes, bands, family, assume_fanned=True)
     cand = transient_persist(
         banded_c.join(F.broadcast(banded_b), ["band", "bucket"])
         .select("corpus_id", "bench_id")
@@ -1097,8 +1124,7 @@ def signature_table(
     shingle_size: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
-    engine: str = "expr",
+    family: str = "xxhash64",
 ) -> DataFrame:
     """(id, band, bucket) MinHash-LSH index rows — the REUSABLE near-dup
 
@@ -1109,44 +1135,23 @@ def signature_table(
     that doesn't scale).  Exactly the band exchange ``minhash_lsh_pairs``
     builds internally, exposed as a persistable table.
 
-    ``engine="arrow"`` computes signatures on the vectorized
-    Arrow/numpy path (``minhash_signatures_arrow`` — a byte-level hash
-    family, so an index is only probe-compatible with signatures from
-    the SAME engine; pick one per lake index and stick with it).
+    The bucket column is stamped with ``family`` (``_family_bands``), so
+    an index is only probe-compatible with the family that built it;
+    pick one per lake index and stick with it.
     """
-    if engine == "arrow":
-        sig = minhash_signatures_arrow(
-            df.select(id_col, text_col), id_col, text_col, shingle_size,
-            num_hashes,
-        )
-    else:
-        sig = _expr_signatures(
-            df.select(F.col(id_col), F.col(text_col)), id_col, text_col,
-            shingle_size, num_hashes, portable,
-        )
-    banded = _band_buckets(sig, id_col, num_hashes, bands, portable=portable)
+    banded = _family_bands(
+        df.select(F.col(id_col), F.col(text_col)), id_col, text_col,
+        shingle_size, num_hashes, bands, family,
+    )
     # stamp the hash family into the bucket column's metadata (survives
     # the parquet round trip via Spark's schema footer) so a probe with
-    # the WRONG family fails loudly instead of silently matching nothing
+    # the WRONG family fails loudly in _check_family instead of silently
+    # matching nothing
     return banded.select(
         id_col,
         "band",
-        F.col("bucket").alias(
-            "bucket", metadata={"neardup_family": _sig_family(portable, engine)}
-        ),
+        F.col("bucket").alias("bucket", metadata={"neardup_family": family}),
     )
-
-
-def _sig_family(portable: bool, engine: str) -> str:
-    """Canonical name of a signature/bucket hash family.  Buckets from
-    different families NEVER match meaningfully, so an index is only
-    probe-compatible with the family that built it.  ``portable`` is part
-    of the family even under the arrow engine (it selects raw-string vs
-    xxhash64 bucket keys in ``_band_buckets``, which never compare
-    equal), so all four combinations are distinct stamps."""
-    if engine == "arrow":
-        return "arrow-portable" if portable else "arrow"
-    return "portable" if portable else "xxhash64"
 
 
 def incremental_neardup(
@@ -1158,8 +1163,7 @@ def incremental_neardup(
     num_hashes: int = 32,
     bands: int = 8,
     min_bands: int = 1,
-    portable: bool = False,
-    engine: str = "expr",
+    family: str = "xxhash64",
 ) -> DataFrame:
     """E2+O6 — near-dup dedup of an incoming batch against ALL previously
 
@@ -1174,25 +1178,12 @@ def incremental_neardup(
     it ships 24-byte rows.  ``min_bands > 1`` trades recall for precision
     by requiring repeated collisions (one hash agg on the hit pairs,
     collision-rate-sized).  Returns surviving ``new_batch`` rows; append
-    their ``signature_table`` rows to the index afterwards.
+    their ``signature_table`` rows to the index afterwards.  A NULL-text
+    doc has no band rows, so it is never dropped.
     """
-    fam = _sig_family(portable, engine)
-    stamped = (
-        seen_bands.schema["bucket"].metadata.get("neardup_family")
-        if "bucket" in seen_bands.columns
-        else None
-    )
-    if stamped is not None and stamped != fam:
-        raise ValueError(
-            "incremental_neardup: the stored index was built with the "
-            f"'{stamped}' signature family but this probe would use "
-            f"'{fam}' — cross-family buckets never match, so every "
-            "duplicate would silently pass; probe with the family that "
-            "built the index"
-        )
+    _check_family(seen_bands, family)
     new_bands = signature_table(
-        new_batch, id_col, text_col, shingle_size, num_hashes, bands,
-        portable=portable, engine=engine,
+        new_batch, id_col, text_col, shingle_size, num_hashes, bands, family,
     )
     if min_bands <= 1:
         seen = seen_bands.select("band", "bucket").dropDuplicates()
@@ -1273,7 +1264,8 @@ def minhash_signatures_arrow(
     The hash family is byte-level, NOT the expression form's
     codepoint-level xxhash64 — a different but equally valid MinHash
     instantiation (banding recall behavior is the same; candidate sets
-    differ in the tails). Downstream banding/verify are shared.
+    differ in the tails). Downstream banding/verify are shared.  NULL
+    text has no shingles, so its signature is NULL.
     """
     import numpy as np
     import pandas as pd
@@ -1289,7 +1281,7 @@ def minhash_signatures_arrow(
         B = np.asarray(b_np, dtype=np.int64)[:, None]
 
         def sig(t: str):
-            b = np.frombuffer((t or "").encode("utf-8"), dtype=np.uint8)
+            b = np.frombuffer(t.encode("utf-8"), dtype=np.uint8)
             b = b.astype(np.int64)
             if len(b) <= k:
                 h = np.zeros(1, dtype=np.int64)
@@ -1307,7 +1299,10 @@ def minhash_signatures_arrow(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
-                    "_sig": [sig(t).tolist() for t in pdf[text_col]],
+                    "_sig": [
+                        None if t is None else sig(t).tolist()
+                        for t in pdf[text_col]
+                    ],
                 }
             )
 
@@ -1558,7 +1553,7 @@ def neardup_recall(
     num_hashes: int = 32,
     bands: int = 4,
     threshold: float = 0.5,
-    portable: bool = False,
+    family: str = "xxhash64",
     allow_quadratic: bool = False,
 ) -> DataFrame:
     """Recall audit of the MinHash-LSH banding against exact ground
@@ -1585,18 +1580,24 @@ def neardup_recall(
     # division sees the identical int operands → the same doubles, bit
     # for bit.  (A PPJoin-style size prefilter and a shingle persist
     # were both measured SLOWER on the bounded sample — rejected.)
+    # NULL text has no shingles (as in _family_bands): its set is NULL,
+    # array_size keeps it NULL, and a NULL Jaccard is never a true pair
     sh = df.select(
-        F.col(id_col), char_shingles(F.col(text_col), shingle_size).alias("_sh")
+        F.col(id_col),
+        F.when(
+            F.col(text_col).isNotNull(),
+            char_shingles(F.col(text_col), shingle_size),
+        ).alias("_sh"),
     )
     a = sh.select(
         F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"),
-        F.size("_sh").alias("_na"),
+        F.array_size("_sh").alias("_na"),
     )
     b = sh.select(
         F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"),
-        F.size("_sh").alias("_nb"),
+        F.array_size("_sh").alias("_nb"),
     )
-    inter = F.size(F.array_intersect("_sa", "_sb"))
+    inter = F.array_size(F.array_intersect("_sa", "_sb"))
     jac = inter / (F.col("_na") + F.col("_nb") - inter)
     truth = (
         a.crossJoin(b)
@@ -1610,7 +1611,7 @@ def neardup_recall(
     raw = minhash_lsh_pairs(
         df, id_col, text_col, shingle_size=shingle_size,
         num_hashes=num_hashes, bands=bands, threshold=threshold,
-        portable=portable,
+        family=family,
     )
     found = raw.select("id_a", "id_b", F.lit(1).alias("_f"))
     stats = truth.join(found, ["id_a", "id_b"], "left").agg(

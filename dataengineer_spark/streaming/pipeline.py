@@ -561,9 +561,8 @@ def stream_neardup_filter(
     shingle_size: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
+    family: str = "xxhash64",
     checkpoint: str | None = None,
-    engine: str = "expr",
 ):
     """Near-dup-filtered ingest — the streaming twin of
 
@@ -599,12 +598,16 @@ def stream_neardup_filter(
             "batch_audited_sink)"
         )
 
-    from dataengineer_spark.operators.dedup import incremental_neardup
+    from dataengineer_spark.operators.dedup import (
+        _check_family, incremental_neardup,
+    )
+
+    _check_family(seen_bands, family)  # before the stream starts
 
     def sink(df: DataFrame, epoch_id: int) -> None:
         kept = incremental_neardup(
             df, seen_bands, id_col, text_col, shingle_size, num_hashes,
-            bands, portable=portable, engine=engine,
+            bands, family=family,
         )
         _overwrite_epoch(kept, out_path, epoch_id)
 
@@ -625,11 +628,9 @@ def stream_neardup_ingest(
     shingle_size: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
+    family: str = "xxhash64",
     checkpoint: str | None = None,
-    engine: str = "expr",
     n_index_buckets: int = 64,
-    compact_every: int = 0,
 ):
     """DEPLOY-form near-dup-filtered ingest (VERDICT r9 item 2) — unlike
     ``stream_neardup_filter``'s fixed-index probe, the signature index is
@@ -712,12 +713,10 @@ def stream_neardup_ingest(
 
     Small-file hygiene: each epoch adds ≤ ``n_index_buckets`` index
     files (band rows are grouped by bucket before the bucketed append)
-    and one ``out_path`` partition.  ``compact_every=N`` runs
-    ``compact_neardup_ingest`` inline every N epochs — fine for bench
-    and short streams; long-running deployments should instead schedule
-    it as a maintenance job (it rewrites the index), which the entry
-    queries demonstrate post-run.  Seed the index from batch history
-    with ``seed_neardup_index(signature_table(history), index_path)``.
+    and one ``out_path`` partition; schedule ``compact_neardup_ingest``
+    as a maintenance job (it rewrites the index), as the entry queries
+    demonstrate post-run.  Seed the index from batch history with
+    ``seed_neardup_index(signature_table(history), index_path)``.
     """
     if not checkpoint:
         raise ValueError(
@@ -727,17 +726,15 @@ def stream_neardup_ingest(
             "out_path rows"
         )
 
+    from dataengineer_spark.operators.dedup import _check_family
+
+    _check_family(None, family)  # before the stream starts
+
     def sink(df: DataFrame, epoch_id: int) -> None:
         _neardup_ingest_epoch(
             df, int(epoch_id), index_path, out_path, id_col, text_col,
-            shingle_size, num_hashes, bands, portable, engine,
-            n_index_buckets,
+            shingle_size, num_hashes, bands, family, n_index_buckets,
         )
-        if compact_every and (int(epoch_id) + 1) % compact_every == 0:
-            compact_neardup_ingest(
-                df.sparkSession, index_path, out_path,
-                n_buckets=n_index_buckets,
-            )
 
     writer = (
         stream.writeStream.foreachBatch(sink)
@@ -826,8 +823,7 @@ def _neardup_ingest_epoch(
     shingle_size: int,
     num_hashes: int,
     bands: int,
-    portable: bool,
-    engine: str,
+    family: str,
     n_index_buckets: int,
 ) -> None:
     """One micro-batch of ``stream_neardup_ingest`` — module-level so the
@@ -836,13 +832,11 @@ def _neardup_ingest_epoch(
     one copy of the epoch's survivors and later epochs unaffected."""
     from pyspark.sql import Window as W
 
-    from dataengineer_spark.operators.dedup import _sig_family, signature_table
+    from dataengineer_spark.operators.dedup import signature_table
 
     spark = df.sparkSession
-    table = neardup_index_table(index_path)
     bands_new = signature_table(
-        df, id_col, text_col, shingle_size, num_hashes, bands,
-        portable=portable, engine=engine,
+        df, id_col, text_col, shingle_size, num_hashes, bands, family,
     ).localCheckpoint()  # batch-sized; probed twice + appended below
     # bucket pruning lives in the bucketed-scan path, which the planner
     # auto-disables when no operator needs the bucket distribution (the
@@ -876,8 +870,8 @@ def _neardup_ingest_epoch(
         # the bucketed index (seed rows carry _epoch=-1); bucket pruning
         # is adaptive — see _cross_probe.
         cross_flag = _cross_probe(
-            spark, index_path, bands_new, epoch_id, id_col,
-            _sig_family(portable, engine), n_index_buckets,
+            spark, index_path, bands_new, epoch_id, id_col, family,
+            n_index_buckets,
         )
         if cross_flag is None:
             cross_flag = self_flag.limit(0)
@@ -907,7 +901,7 @@ def _cross_probe(
     bands_new: DataFrame,
     epoch_id: int,
     id_col: str,
-    fam: str,
+    family: str,
     n_index_buckets: int,
 ):
     """Cross-batch probe plan (rule 3) against STRICTLY earlier epochs of
@@ -924,22 +918,10 @@ def _cross_probe(
     table = neardup_index_table(index_path)
     if not spark.catalog.tableExists(table):
         return None
+    from dataengineer_spark.operators.dedup import _check_family
+
     stored = spark.table(table)
-    # same cross-family fence as dedup.incremental_neardup: a seeded
-    # index built with another signature family would silently match
-    # nothing — fail loudly instead
-    stamped = (
-        stored.schema["bucket"].metadata.get("neardup_family")
-        if "bucket" in stored.columns
-        else None
-    )
-    if stamped is not None and stamped != fam:
-        raise ValueError(
-            "stream_neardup_ingest: the stored index at "
-            f"{index_path} was built with the '{stamped}' signature "
-            f"family but this stream probes with '{fam}' — cross-family "
-            "buckets never match, so every duplicate would silently pass"
-        )
+    _check_family(stored, family)
     # ONE control-plane job per epoch (round-12; was a count + a distinct
     # collect): pull the batch's distinct buckets capped at
     # n_index_buckets + 1 — an empty list means no band rows (skip the
@@ -982,8 +964,7 @@ def neardup_probe_plan(
     shingle_size: int = 5,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
-    engine: str = "expr",
+    family: str = "xxhash64",
     n_index_buckets: int = 64,
 ) -> DataFrame:
     """Standalone builder of one micro-batch's cross-index probe plan —
@@ -993,15 +974,14 @@ def neardup_probe_plan(
     batch build side, no exchange or sort on the stored index.  The
     bucketed-scan conf is left to the caller (the sink forces it per
     epoch); the gate asserts under the forced setting."""
-    from dataengineer_spark.operators.dedup import _sig_family, signature_table
+    from dataengineer_spark.operators.dedup import signature_table
 
     bands_new = signature_table(
-        batch_df, id_col, text_col, shingle_size, num_hashes, bands,
-        portable=portable, engine=engine,
+        batch_df, id_col, text_col, shingle_size, num_hashes, bands, family,
     ).localCheckpoint()
     probe = _cross_probe(
-        spark, index_path, bands_new, epoch_id, id_col,
-        _sig_family(portable, engine), n_index_buckets,
+        spark, index_path, bands_new, epoch_id, id_col, family,
+        n_index_buckets,
     )
     if probe is None:
         raise ValueError(

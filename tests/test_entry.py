@@ -165,3 +165,44 @@ class TestRegistry:
             # the Python-side UDF the multimodal oracle replays
             "operators/multimodal.py:_fake_feature",
         }, found
+
+    def test_hash_family_declared_once(self):
+        # the MinHash near-dup stack takes ONE ``family`` parameter: no
+        # function takes both of the old ``portable`` and ``engine``
+        # switches, the never-used Arrow + raw-string-key combination is
+        # gone, and the index's family stamp is read by one fence
+        lib = sorted((ROOT / "dataengineer_spark").rglob("*.py"))
+        paths = [ROOT / "__spark_entry__.py", *lib]
+        both = {
+            f"{path.relative_to(ROOT)}:{node.name}"
+            for path in paths
+            for node in ast.walk(ast.parse(path.read_text()))
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and {"portable", "engine"} <= {
+                a.arg
+                for a in node.args.posonlyargs + node.args.args
+                + node.args.kwonlyargs
+            }
+        }
+        assert not both, both
+        dead = "-".join(("arrow", "portable"))
+        assert [p.name for p in paths if dead in p.read_text()] == []
+
+        def reads_stamp(node):
+            key = None
+            if isinstance(node, ast.Call) and node.args and getattr(
+                node.func, "attr", None
+            ) == "get":
+                key = node.args[0]
+            elif isinstance(node, ast.Subscript):
+                key = node.slice
+            return isinstance(key, ast.Constant) and key.value == "neardup_family"
+
+        found = {
+            f"{path.relative_to(ROOT)}:{name}"
+            for path in paths
+            for name in _sites(path, reads_stamp)
+        }
+        assert found == {
+            "dataengineer_spark/operators/dedup.py:_check_family"
+        }, found

@@ -1198,7 +1198,8 @@ class TestCharShingleHashes:
     def test_expr_signatures_match_python_reference(self, spark):
         # the PRODUCTION signature stage (staged shingle hashes, then the
         # array_min MinHash fold) against min((a·h + b) mod p) in Python,
-        # both families, over short/empty/NULL/unicode/repetitive text
+        # both expression-engine families, over short/empty/unicode/
+        # repetitive text; NULL text has no shingles, so no signature
         from functools import reduce
 
         from dataengineer_spark.operators.preparation import _POLY_MOD
@@ -1210,8 +1211,6 @@ class TestCharShingleHashes:
             return reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0)
 
         def portable_hashes(t):
-            if t is None:
-                return set()  # NULL text: the hash array is [NULL]
             if len(t) < 5:
                 return {poly(t)}
             return {poly(t[i:i + 5]) for i in range(len(t) - 4)}
@@ -1230,36 +1229,38 @@ class TestCharShingleHashes:
         params = dedup_ops._affine_params(32)
 
         def minhash(hashes):
-            return [
-                min(((a * h + b) % p for h in hashes), default=p)
-                for a, b in params
-            ]
+            return [min((a * h + b) % p for h in hashes) for a, b in params]
 
-        for portable in (True, False):
+        for family in ("portable", "xxhash64"):
             got = {
                 r["doc_id"]: r["_sig"]
                 for r in dedup_ops._expr_signatures(
-                    df, "doc_id", "_t", 5, 32, portable, assume_fanned=True
+                    df, "doc_id", "_t", 5, 32, family == "portable",
+                    assume_fanned=True,
                 ).collect()
             }
             want = {
-                i: minhash(portable_hashes(t) if portable else xx[i])
+                i: None if t is None else minhash(
+                    portable_hashes(t) if family == "portable" else xx[i]
+                )
                 for i, t in self._EDGE_ROWS
             }
-            assert got == want, f"portable={portable}"
+            assert got == want, family
 
     def test_sql_string_forms_match_column_builders(self, spark):
-        # round-9: _band_buckets builds its bands×rows struct array as
+        # round-9: _family_bands builds its bands×rows struct array as
         # ONE parsed SQL string; pin it value-identical to the per-band
-        # Column construction it replaced — both band key forms, over
-        # the production signatures of the edge frame
+        # Column construction it replaced — both expression-engine band
+        # key forms, over the production signatures of the edge frame.
+        # The NULL-text doc (5) has a NULL signature and no band rows.
         from pyspark.sql import functions as F
 
         df = spark.createDataFrame(self._EDGE_ROWS, "doc_id long, _t string")
-        for portable in (True, False):
+        for family in ("portable", "xxhash64"):
+            portable = family == "portable"
             sig = dedup_ops._expr_signatures(
                 df, "doc_id", "_t", 5, 32, portable, assume_fanned=True
-            )
+            ).where(F.col("_sig").isNotNull())
             rows = 32 // 8
             def old_bucket(b):
                 joined = F.concat_ws(
@@ -1277,13 +1278,15 @@ class TestCharShingleHashes:
                     for b in range(8)
                 ])).alias("_band"),
             ).select("doc_id", "_band.band", "_band.bucket")
-            new_b = dedup_ops._band_buckets(sig, "doc_id", 32, 8,
-                                            portable=portable)
+            new_b = dedup_ops._family_bands(
+                df, "doc_id", "_t", 5, 32, 8, family, assume_fanned=True
+            )
             o = {(r["doc_id"], r["band"]): r["bucket"]
                  for r in old_b.collect()}
             n = {(r["doc_id"], r["band"]): r["bucket"]
                  for r in new_b.collect()}
-            assert o == n, f"portable={portable}"
+            assert o == n, family
+            assert {d for d, _ in n} == {1, 2, 3, 4, 6, 7}, family
 
 
 class TestArrowTopK:
@@ -2412,6 +2415,53 @@ class TestSemanticDecontaminate:
 
 
 class TestIncrementalNeardup:
+    def test_unknown_family_raises(self, spark):
+        import pytest
+
+        df = spark.createDataFrame([(1, "abcdef")], "doc_id long, text string")
+        for family in ("expr", "XXHASH64"):
+            with pytest.raises(ValueError, match="unknown near-dup hash family"):
+                dedup_ops.signature_table(df, family=family)
+            with pytest.raises(ValueError, match="unknown near-dup hash family"):
+                dedup_ops.minhash_lsh_pairs(df, "doc_id", "text", family=family)
+
+    def test_null_text_has_no_bands_in_any_family(self, spark):
+        # NULL text has no shingles (the DuckDB replay's
+        # ``_duck_shingles(NULL)`` is empty), so it gets no band rows: two
+        # NULL docs are not a Jaccard-1.0 pair, an index row of a NULL doc
+        # drops nothing, and a NULL doc is never dropped itself
+        docs = spark.createDataFrame(
+            [(1, None), (2, None), (3, "the quick brown fox jumps over"),
+             (4, "")],
+            "doc_id long, text string",
+        )
+        null_idx_doc = spark.createDataFrame(
+            [(9, None)], "doc_id long, text string"
+        )
+        for family in dedup_ops.NEARDUP_FAMILIES:
+            assert dedup_ops.minhash_lsh_pairs(
+                docs, "doc_id", "text", threshold=0.5, family=family
+            ).collect() == [], family
+            bands = dedup_ops.signature_table(docs, bands=4, family=family)
+            assert {r["doc_id"] for r in bands.collect()} == {3, 4}, family
+            idx = dedup_ops.signature_table(null_idx_doc, family=family)
+            assert idx.count() == 0, family
+            kept = dedup_ops.incremental_neardup(docs, idx, family=family)
+            assert sorted(r["doc_id"] for r in kept.collect()) == [
+                1, 2, 3, 4
+            ], family
+        # the recall audit's ground truth agrees: NULL docs pair with
+        # nothing, so the planted (3, 5) pair is the only true pair
+        rec = dedup_ops.neardup_recall(
+            docs.union(spark.createDataFrame(
+                [(5, "the quick brown fox jumps over")],
+                "doc_id long, text string",
+            )),
+            "doc_id", "text", threshold=0.5, family="portable",
+            allow_quadratic=True,
+        ).collect()[0]
+        assert (rec["n_true"], rec["n_found"]) == (1, 1)
+
     def test_recrawl_dropped_fresh_kept(self, spark):
         texts = {
             1: "the quick brown fox jumps over the lazy dog again and again",
@@ -2420,7 +2470,7 @@ class TestIncrementalNeardup:
         seen = spark.createDataFrame(
             [(i, t) for i, t in texts.items()], "doc_id long, text string"
         )
-        idx = dedup_ops.signature_table(seen, bands=4, portable=True)
+        idx = dedup_ops.signature_table(seen, bands=4, family="portable")
         new = spark.createDataFrame(
             [
                 (10, texts[1]),                       # exact re-crawl
@@ -2432,7 +2482,7 @@ class TestIncrementalNeardup:
         kept = {
             r["doc_id"]
             for r in dedup_ops.incremental_neardup(
-                new, idx, bands=4, portable=True
+                new, idx, bands=4, family="portable"
             ).collect()
         }
         assert 10 not in kept          # identical signature always collides
@@ -2451,7 +2501,7 @@ class TestIncrementalNeardup:
         seen = spark.createDataFrame(
             [(i, t) for i, t in texts.items()], "doc_id long, text string"
         )
-        idx = dedup_ops.signature_table(seen, bands=4, engine="arrow")
+        idx = dedup_ops.signature_table(seen, bands=4, family="arrow")
         new = spark.createDataFrame(
             [
                 (10, texts[1]),  # exact re-crawl: identical signature
@@ -2462,22 +2512,23 @@ class TestIncrementalNeardup:
         kept = {
             r["doc_id"]
             for r in dedup_ops.incremental_neardup(
-                new, idx, bands=4, engine="arrow"
+                new, idx, bands=4, family="arrow"
             ).collect()
         }
         assert 10 not in kept and 12 in kept
 
     def test_cross_family_probe_raises(self, spark, tmp_path):
-        # an index built with one signature family must refuse a probe
-        # from another (cross-family buckets never match → silent dup
-        # passthrough); the family stamp survives the parquet round trip
+        # an index built with the arrow family must refuse a probe from
+        # the xxhash64 family (cross-family buckets never match → silent
+        # dup passthrough); the family stamp survives the parquet round
+        # trip
         import pytest
 
         seen = spark.createDataFrame(
             [(1, "the quick brown fox jumps over the lazy dog")],
             "doc_id long, text string",
         )
-        idx = dedup_ops.signature_table(seen, bands=4, engine="arrow")
+        idx = dedup_ops.signature_table(seen, bands=4, family="arrow")
         path = str(tmp_path / "idx")
         idx.write.parquet(path)
         stored = spark.read.parquet(path)
@@ -2485,11 +2536,13 @@ class TestIncrementalNeardup:
             [(2, "some new text")], "doc_id long, text string"
         )
         with pytest.raises(ValueError, match="signature family"):
-            dedup_ops.incremental_neardup(new, stored, bands=4)  # expr probe
+            dedup_ops.incremental_neardup(
+                new, stored, bands=4, family="xxhash64"
+            )
         # matching family probes fine through the same stored index
         assert (
             dedup_ops.incremental_neardup(
-                new, stored, bands=4, engine="arrow"
+                new, stored, bands=4, family="arrow"
             ).count()
             == 1
         )
@@ -2506,7 +2559,7 @@ class TestIncrementalNeardup:
         import dataengineer_spark.operators.dedup as dd
         from pyspark.sql import functions as F
 
-        new_bands = dd.signature_table(new, bands=4, portable=True)
+        new_bands = dd.signature_table(new, bands=4, family="portable")
         buckets = {r["band"]: r["bucket"] for r in new_bands.collect()}
         # craft the seen index to collide in bands 0 and 1 via two docs
         seen_idx = spark.createDataFrame(
@@ -2514,7 +2567,7 @@ class TestIncrementalNeardup:
             "doc_id long, band int, bucket string",
         )
         kept = dd.incremental_neardup(
-            new, seen_idx, bands=4, min_bands=2, portable=True
+            new, seen_idx, bands=4, min_bands=2, family="portable"
         )
         assert kept.count() == 1  # split across seen docs → NOT flagged
         seen_same = spark.createDataFrame(
@@ -2522,7 +2575,7 @@ class TestIncrementalNeardup:
             "doc_id long, band int, bucket string",
         )
         kept2 = dd.incremental_neardup(
-            new, seen_same, bands=4, min_bands=2, portable=True
+            new, seen_same, bands=4, min_bands=2, family="portable"
         )
         assert kept2.count() == 0  # same seen doc in 2 bands → flagged
 

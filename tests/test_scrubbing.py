@@ -324,7 +324,7 @@ class TestNeardupRecall:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         out = dedup_ops.neardup_recall(
             df, "doc_id", "text", shingle_size=5, num_hashes=32, bands=4,
-            threshold=0.5, portable=True, allow_quadratic=True,
+            threshold=0.5, family="portable", allow_quadratic=True,
         ).collect()[0]
         assert (out["n_true"], out["n_found"], out["recall"]) == (1, 1, 1.0)
 
@@ -336,7 +336,7 @@ class TestNeardupRecall:
             "doc_id long, text string",
         )
         out = dedup_ops.neardup_recall(
-            df, "doc_id", "text", threshold=0.9, portable=True,
+            df, "doc_id", "text", threshold=0.9, family="portable",
             allow_quadratic=True,
         ).collect()[0]
         assert (out["n_true"], out["n_found"]) == (0, 0)

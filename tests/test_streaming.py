@@ -394,7 +394,7 @@ class TestStreamNeardupFilter:
         seen = spark.createDataFrame(
             [(1, seen_text)], "doc_id long, text string"
         )
-        idx = dedup_ops.signature_table(seen, bands=4, portable=True)
+        idx = dedup_ops.signature_table(seen, bands=4, family="portable")
         src = str(tmp_path / "docs_in")
         os.makedirs(src)
         # two files -> two micro-batches (maxFilesPerTrigger=1)
@@ -415,9 +415,11 @@ class TestStreamNeardupFilter:
         import pytest as _pytest
 
         with _pytest.raises(ValueError, match="checkpoint is required"):
-            stream_neardup_filter(stream, idx, out_dir, bands=4, portable=True)
+            stream_neardup_filter(
+                stream, idx, out_dir, bands=4, family="portable"
+            )
         q = stream_neardup_filter(
-            stream, idx, out_dir, bands=4, portable=True,
+            stream, idx, out_dir, bands=4, family="portable",
             checkpoint=str(tmp_path / "ck"),
         )
         q.awaitTermination()
@@ -460,8 +462,8 @@ class TestStreamNeardupIngest:
         )
         out_dir = str(tmp_path / "kept")
         q = stream_neardup_ingest(
-            stream, str(tmp_path / "index"), out_dir, bands=4, portable=True,
-            checkpoint=str(tmp_path / "ck"),
+            stream, str(tmp_path / "index"), out_dir, bands=4,
+            family="portable", checkpoint=str(tmp_path / "ck"),
         )
         q.awaitTermination()
         return {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
@@ -511,7 +513,7 @@ class TestStreamNeardupIngest:
 
         index, out = str(tmp_path / "idx"), str(tmp_path / "kept")
         t1 = "the quick brown fox jumps over the lazy dog once more"
-        args = ("doc_id", "text", 5, 32, 4, True, "expr", 8)
+        args = ("doc_id", "text", 5, 32, 4, "portable", 8)
         _neardup_ingest_epoch(
             self._mk_batch(spark, [(1, t1), (2, "unrelated second text")]),
             0, index, out, *args,
@@ -547,19 +549,39 @@ class TestStreamNeardupIngest:
         t1 = "the quick brown fox jumps over the lazy dog once more"
         history = self._mk_batch(spark, [(100, t1)])
         seed_neardup_index(
-            signature_table(history, bands=4, portable=True), index,
+            signature_table(history, bands=4, family="portable"), index,
             n_index_buckets=8,
         )
         _neardup_ingest_epoch(
             self._mk_batch(spark, [(1, t1), (2, "fresh unseen text")]),
-            0, index, out, "doc_id", "text", 5, 32, 4, True, "expr", 8,
+            0, index, out, "doc_id", "text", 5, 32, 4, "portable", 8,
         )
         got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
         assert got == [2]  # doc 1 re-crawls seeded history
 
+    def test_null_text_docs_are_kept(self, spark, tmp_path):
+        """NULL text has no shingles, so a NULL doc has no band rows: it
+        neither self-collides with another NULL doc in its epoch nor
+        with the NULL docs a previous epoch accepted."""
+        from dataengineer_spark.streaming.pipeline import _neardup_ingest_epoch
+
+        index, out = str(tmp_path / "idx"), str(tmp_path / "kept")
+        t1 = "the quick brown fox jumps over the lazy dog once more"
+        args = ("doc_id", "text", 5, 32, 4, "xxhash64", 8)
+        _neardup_ingest_epoch(
+            self._mk_batch(spark, [(1, None), (2, None), (3, t1)]),
+            0, index, out, *args,
+        )
+        _neardup_ingest_epoch(
+            self._mk_batch(spark, [(4, None), (5, t1)]), 1, index, out, *args,
+        )
+        got = sorted(r["doc_id"] for r in spark.read.parquet(out).collect())
+        assert got == [1, 2, 3, 4]  # only the re-crawl 5 drops
+
     def test_cross_family_probe_raises(self, spark, tmp_path):
-        """Same fence as dedup.incremental_neardup: probing a seeded index
-        with a different signature family must fail loudly."""
+        """Same fence as dedup.incremental_neardup: probing an index seeded
+        by the xxhash64 family with the portable family must fail
+        loudly."""
         import pytest as _pytest
 
         from dataengineer_spark.operators.dedup import signature_table
@@ -569,13 +591,13 @@ class TestStreamNeardupIngest:
         index, out = str(tmp_path / "idx"), str(tmp_path / "kept")
         history = self._mk_batch(spark, [(100, "seed history text")])
         seed_neardup_index(
-            signature_table(history, bands=4, portable=False), index,
+            signature_table(history, bands=4, family="xxhash64"), index,
             n_index_buckets=8,
         )
         with _pytest.raises(ValueError, match="signature family"):
             _neardup_ingest_epoch(
                 self._mk_batch(spark, [(1, "whatever text")]),
-                0, index, out, "doc_id", "text", 5, 32, 4, True, "expr", 8,
+                0, index, out, "doc_id", "text", 5, 32, 4, "portable", 8,
             )
 
     def test_compaction_preserves_results_and_shrinks_files(
@@ -594,7 +616,7 @@ class TestStreamNeardupIngest:
 
         index, out = str(tmp_path / "idx"), str(tmp_path / "kept")
         t1 = "the quick brown fox jumps over the lazy dog once more"
-        args = ("doc_id", "text", 5, 32, 4, True, "expr", 8)
+        args = ("doc_id", "text", 5, 32, 4, "portable", 8)
         _neardup_ingest_epoch(
             self._mk_batch(spark, [(1, t1), (2, "second doc body")]),
             0, index, out, *args,
@@ -643,7 +665,7 @@ class TestStreamNeardupIngest:
         )
 
         index, out = str(tmp_path / "idx"), str(tmp_path / "kept")
-        args = ("doc_id", "text", 5, 32, 4, True, "expr", 8)
+        args = ("doc_id", "text", 5, 32, 4, "portable", 8)
         _neardup_ingest_epoch(
             self._mk_batch(
                 spark,
@@ -655,7 +677,7 @@ class TestStreamNeardupIngest:
             spark,
             index,
             self._mk_batch(spark, [(100, "probe doc one two three")]),
-            epoch_id=1, bands=4, portable=True, n_index_buckets=8,
+            epoch_id=1, bands=4, family="portable", n_index_buckets=8,
         )
         # the sink forces bucketed scans per epoch; assert under the
         # same setting (pruning lives in the bucketed-scan path)
@@ -857,7 +879,7 @@ class TestStreamRuntimeSession:
                 str(tmp_path / "idx"),
                 str(tmp_path / "kept"),
                 bands=4,
-                portable=True,
+                family="portable",
                 checkpoint=str(tmp_path / "ck"),
                 n_index_buckets=4,
             )
