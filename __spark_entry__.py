@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_spark.testdata import load_table
-from dataengineer_spark.tuning import fan_out
+from dataengineer_spark.tuning import control_frame, fan_out
 from dataengineer_spark.functions import cleaning
 from dataengineer_spark.functions.cleaning import clean_msg
 from dataengineer_spark.functions.labels import split_label
@@ -3598,17 +3598,19 @@ FROM cs ORDER BY cos_sim DESC NULLS LAST, vec_id LIMIT 10
 def q_f9_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3/F5 completion: BPE vocabulary TRAINING on the corpus
     (functions/bpe.bpe_train — one corpus scan to a vocab-sized word
-    histogram, then per-merge pair-count shuffles over vocab rows with a
-    one-row argmax collect: the kmeans_codebook iteration shape, cost
-    independent of corpus size).  The DuckDB oracle replays all six
-    merge rounds as unrolled CTE stages — double-sentinel segmentation
-    strings make the non-overlapping replace reproduce BPE's greedy-left
-    merge in both engines bit-for-bit."""
+    histogram, collected once; all six merges then run on the driver, so
+    the fit is one driver round trip whatever the merge count, cost
+    independent of corpus size).  The merge list comes back as an Arrow
+    local relation (tuning.control_frame).  The DuckDB oracle still
+    replays all six merge rounds as unrolled CTE stages — double-sentinel
+    segmentation strings make the non-overlapping replace reproduce BPE's
+    greedy-left merge in both engines bit-for-bit."""
     from dataengineer_spark.functions.bpe import bpe_train
 
     docs = _docs(spark, sf_dir).select("text")
     merges = bpe_train(docs, "text", n_merges=6)
-    return spark.createDataFrame(
+    return control_frame(
+        spark,
         [(i + 1, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "rank int, lhs string, rhs string, merged string",
     )

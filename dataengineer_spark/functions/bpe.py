@@ -3,17 +3,19 @@
 The tokenizer surface (functions/truncate.py, reference capability M3/F5)
 consumes a vocabulary; this trains one FROM the corpus, the way real
 subword tokenizers are trained — except the corpus-scale part runs on
-Spark.  The decomposition mirrors ``similarity.kmeans_codebook``:
+Spark.  The decomposition:
 
 - ONE corpus scan builds the word histogram (vocab-sized — this is the
-  only data-size-dependent cost at 100 TB);
-- each merge iteration computes adjacent-pair counts over the CURRENT
-  segmentation of that histogram (a shuffle over vocab rows, not corpus
-  rows) and collects the single best pair — a control-plane row;
+  only data-size-dependent cost at 100 TB), collected to the driver once;
+- every merge runs on the driver over that histogram: adjacent-pair
+  counts over the CURRENT segmentation, weighted by word frequency, pick
+  the best pair — the trainer's usual shape, one driver round trip per
+  fit whatever the merge count;
 - the chosen merge applies as a sentinel-delimited string replace, an
-  expression both engines implement with identical left-to-right
-  non-overlapping semantics, so the DuckDB oracle can replay every
-  iteration bit-for-bit (unrolled CTE stages, the kmeans oracle shape).
+  operation Python, Spark and DuckDB implement with identical
+  left-to-right non-overlapping semantics, so the DuckDB oracle can
+  replay every iteration bit-for-bit (unrolled CTE stages, the kmeans
+  oracle shape) and :func:`bpe_segment` tokenizes with the same rule.
 
 Token boundaries are DOUBLE sentinels (``␁␁a␁␁b␁␁``) and the merge
 pattern ``␁a␁␁b␁`` consumes only the inner halves: a non-overlapping
@@ -22,10 +24,13 @@ left-to-right replace then still merges back-to-back occurrences
 sentinel behind for the next — with single sentinels the replace would
 eat the shared boundary and skip every other pair.
 
-Ties break deterministically: count desc, then left asc, right asc.
+Ties break deterministically: count desc, then left asc, right asc, by
+code point (Spark's UTF8_BINARY string order).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +38,9 @@ from pyspark.sql import functions as F
 #: token separator inside a segmentation string — a control char that
 #: cannot appear in whitespace-split words
 SEP = "\x01"
+
+#: most distinct words :func:`bpe_train` merges on the driver
+MAX_VOCAB = 200_000
 
 
 def _segmented_histogram(df: DataFrame, text_col: str) -> DataFrame:
@@ -47,65 +55,42 @@ def _segmented_histogram(df: DataFrame, text_col: str) -> DataFrame:
     return words.select(seg.alias("seg"), F.col("n"))
 
 
-def _pair_counts(hist: DataFrame) -> DataFrame:
-    """Adjacent-pair counts over the current segmentation, weighted by
-
-    word frequency.  Overlap semantics are BPE's greedy-left by
-    construction: pairs are read from the CURRENT tokens, and merges are
-    applied with non-overlapping left-to-right replaces."""
-    tokens = F.filter(F.split(F.col("seg"), SEP), lambda t: t != F.lit(""))
-    sz = F.size(tokens)
-    pairs = F.zip_with(
-        F.slice(tokens, 1, sz - 1),
-        F.slice(tokens, 2, sz - 1),
-        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-    )
-    return (
-        hist.where(sz >= 2)
-        .select(F.explode(pairs).alias("p"), "n")
-        .groupBy("p.a", "p.b")
-        .agg(F.sum("n").alias("cnt"))
-    )
-
-
 def bpe_train(
     df: DataFrame, text_col: str, n_merges: int = 8
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus; returns them in
 
-    order.  Iteration cost is independent of corpus size (the histogram
-    is persisted once; each round shuffles vocab-sized pair rows and
-    collects one row).  The merge list is fully collected before
-    returning, so the histogram cache is dropped on exit — repeated
-    trainings in a long-lived session leak nothing."""
-    from dataengineer_spark.tuning import transient_persist
+    order.  Spark runs the one corpus scan to the (seg, n) histogram,
+    which is collected once; every merge then runs on the driver: count
+    the adjacent token pairs of each segmentation weighted by ``n``, take
+    the highest count (ties: smaller left, then smaller right token, by
+    code point — Spark's UTF8_BINARY order), and apply it with the same
+    sentinel replace :func:`bpe_segment` uses.  Nothing is cached.
 
-    base = transient_persist(_segmented_histogram(df, text_col))
-    hist = base
-    try:
-        merges: list[tuple[str, str]] = []
-        for _ in range(n_merges):
-            best = (
-                _pair_counts(hist)
-                .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            a, b = best[0]["a"], best[0]["b"]
-            merges.append((a, b))
-            hist = hist.withColumn(
-                "seg",
-                F.replace(
-                    F.col("seg"),
-                    F.lit(f"{SEP}{a}{SEP}{SEP}{b}{SEP}"),
-                    F.lit(f"{SEP}{a}{b}{SEP}"),
-                ),
-            )
-        return merges
-    finally:
-        base.unpersist()  # merges already collected; nothing reads the cache
+    ``MAX_VOCAB`` bounds the driver loop, whose cost is O(merges × Σ
+    segment length); a histogram with more distinct words raises
+    ``ValueError``.  Driver memory for the collect is already guarded by
+    ``spark.driver.maxResultSize``."""
+    hist = _segmented_histogram(df, text_col).collect()
+    if len(hist) > MAX_VOCAB:
+        raise ValueError(
+            f"bpe_train: {len(hist)} distinct words exceed MAX_VOCAB="
+            f"{MAX_VOCAB}; train on a sample of the corpus"
+        )
+    merges: list[tuple[str, str]] = []
+    for _ in range(n_merges):
+        counts: Counter[tuple[str, str]] = Counter()
+        for seg, n in hist:
+            toks = [t for t in seg.split(SEP) if t]
+            for pair in zip(toks, toks[1:]):
+                counts[pair] += n
+        if not counts:
+            break
+        a, b = min(counts, key=lambda p: (-counts[p], p))
+        merges.append((a, b))
+        old, new = f"{SEP}{a}{SEP}{SEP}{b}{SEP}", f"{SEP}{a}{b}{SEP}"
+        hist = [(seg.replace(old, new), n) for seg, n in hist]
+    return merges
 
 
 def bpe_segment(col, merges: list[tuple[str, str]]):

@@ -1560,9 +1560,10 @@ def neardup_recall(
 
     truth — the near-dup analogue of similarity.ann_recall, and the
     number the (bands, rows) s-curve is tuned by: ground truth is every
-    pair with exact shingle-Jaccard >= threshold (a guarded quadratic —
-    this audit runs on a bounded sample, the same way ann_recall samples
-    its probe set, never on the full corpus), and the index under test
+    pair with exact shingle-Jaccard >= threshold (still guarded as a
+    quadratic — a shingle shared by every doc pairs them all — so this
+    audit runs on a bounded sample, the same way ann_recall samples its
+    probe set, never on the full corpus), and the index under test
     is :func:`minhash_lsh_pairs` with identical shingling and verify
     rules, so found ⊆ truth by construction and recall is an exact
     int/int division.
@@ -1573,37 +1574,34 @@ def neardup_recall(
     from dataengineer_spark.operators.similarity import _guard_quadratic
 
     _guard_quadratic(df, "corpus sample", "minhash_lsh_pairs", allow_quadratic)
-    # round-11 opt: carry each side's set size as an int and derive
-    # |A∪B| = |A|+|B|−|A∩B| arithmetically instead of materializing
-    # array_union per pair.  char_shingles is distinct by construction,
-    # so the union identity is exact over integers and the jaccard
-    # division sees the identical int operands → the same doubles, bit
-    # for bit.  (A PPJoin-style size prefilter and a shingle persist
-    # were both measured SLOWER on the bounded sample — rejected.)
-    # NULL text has no shingles (as in _family_bands): its set is NULL,
-    # array_size keeps it NULL, and a NULL Jaccard is never a true pair
+    if threshold <= 0:
+        raise ValueError("neardup_recall: threshold must be > 0")
+    # ground truth as an inverted index, the DuckDB oracle's shape: each
+    # doc's distinct shingles, self-joined on the shingle and counted per
+    # pair, give |A∩B|; char_shingles is distinct, so |A∪B| =
+    # |A|+|B|−|A∩B| is exact over integers and the Jaccard is one
+    # int/int division, the same double as the oracle's.  A pair sharing
+    # no shingle has Jaccard 0, below any positive threshold, so it never
+    # needs a row.  NULL text has no shingles (as in _family_bands):
+    # explode emits nothing for it.
     sh = df.select(
-        F.col(id_col),
+        F.col(id_col).alias("_id"),
         F.when(
             F.col(text_col).isNotNull(),
             char_shingles(F.col(text_col), shingle_size),
         ).alias("_sh"),
+    ).select(
+        "_id", F.array_size("_sh").alias("_n"), F.explode("_sh").alias("_s")
     )
-    a = sh.select(
-        F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"),
-        F.array_size("_sh").alias("_na"),
-    )
-    b = sh.select(
-        F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"),
-        F.array_size("_sh").alias("_nb"),
-    )
-    inter = F.array_size(F.array_intersect("_sa", "_sb"))
-    jac = inter / (F.col("_na") + F.col("_nb") - inter)
+    a = sh.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "_s")
+    b = sh.select(F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "_s")
+    inter = F.col("_i")
     truth = (
-        a.crossJoin(b)
+        a.join(b, "_s")
         .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", jac.alias("_j"))
-        .where(F.col("_j") >= threshold)
+        .groupBy("id_a", "id_b", "_na", "_nb")
+        .agg(F.count("*").alias("_i"))
+        .where(inter / (F.col("_na") + F.col("_nb") - inter) >= threshold)
         .select("id_a", "id_b")
     )
     from dataengineer_spark.tuning import carry_lifetime

@@ -302,6 +302,56 @@ class TestBpe:
         after = len(spark.sparkContext._jsc.getPersistentRDDs())
         assert after <= before
 
+    def test_job_count_independent_of_merges(self, spark, job_group):
+        # the histogram is collected once; every merge runs on the driver
+        from dataengineer_spark.functions.bpe import bpe_train
+
+        df = spark.createDataFrame([("aaab aab abab xyxy",)], "text string")
+        counts = []
+        for n in (1, 8):
+            with job_group() as jobs:
+                bpe_train(df, "text", n_merges=n)
+            counts.append(len(jobs))
+        assert counts[0] == counts[1]
+
+    def test_merges_pinned(self, spark):
+        # pinned against the per-merge Spark loop this trainer replaced:
+        # count ties, back-to-back repeats, case folding, non-ASCII and
+        # emoji words, a NULL and an empty row
+        from dataengineer_spark.functions.bpe import bpe_train
+
+        df = spark.createDataFrame(
+            [
+                ("xyxy xyxy abab ba",),
+                ("naïve café Café 😀😀 😀x xyxy",),
+                (None,),
+                ("",),
+                ("ab ba xy yx ñandú ñandú",),
+                ("héllo wörld 🙂🙃 🙂🙃 zz zzz   ",),
+                ("  aaab aab béb bèb",),
+            ],
+            "text string",
+        )
+        assert bpe_train(df, "text", n_merges=30) == [
+            ("x", "y"), ("a", "b"), ("xy", "xy"), ("z", "z"), ("a", "ab"),
+            ("a", "f"), ("a", "n"), ("af", "é"), ("an", "d"), ("and", "ú"),
+            ("b", "a"), ("c", "afé"), ("ñ", "andú"), ("🙂", "🙃"),
+            ("a", "aab"), ("a", "ï"), ("ab", "ab"), ("aï", "v"),
+            ("aïv", "e"), ("b", "è"), ("b", "é"), ("bè", "b"), ("bé", "b"),
+            ("h", "é"), ("hé", "l"), ("hél", "l"), ("héll", "o"),
+            ("l", "d"), ("n", "aïve"), ("r", "ld"),
+        ]
+
+    def test_vocab_bound_raises(self, spark, monkeypatch):
+        import pytest
+
+        from dataengineer_spark.functions import bpe
+
+        monkeypatch.setattr(bpe, "MAX_VOCAB", 2)
+        df = spark.createDataFrame([("ab ab abc abcd",)], "text string")
+        with pytest.raises(ValueError, match="MAX_VOCAB"):
+            bpe.bpe_train(df, "text", n_merges=2)
+
     def test_segment_applies_merges_greedy_left(self, spark):
         from dataengineer_spark.functions.bpe import bpe_segment
         from pyspark.sql import functions as F

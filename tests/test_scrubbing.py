@@ -343,6 +343,45 @@ class TestNeardupRecall:
         assert out["recall"] is None
 
 
+    def test_truth_matches_python_jaccard(self, spark):
+        import itertools
+
+        import pytest
+
+        from dataengineer_spark.operators import dedup as dedup_ops
+
+        def shingles(t: str, n: int = 5) -> set[str]:
+            # char_shingles: one shingle (the whole text) below n chars
+            return {t[i:i + n] for i in range(max(len(t) - n + 1, 1))}
+
+        rows = [
+            (1, None), (2, None),            # NULL text pairs with nothing
+            (3, ""), (4, ""),                # one "" shingle each
+            (5, "abc"), (6, "abc"), (7, "abcd"),  # shorter than a shingle
+            (8, "the quick brown fox"), (9, "the quick brown fox"),
+            (10, "the quick brown fox jumps"),
+            (11, "abcdefgh"), (12, "zzzzabcde"),  # share only "abcde"
+        ]
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        sets = {i: shingles(t) for i, t in rows if t is not None}
+        for threshold in (0.1, 0.5, 0.9):
+            truth = sum(
+                len(sets[i] & sets[j]) / len(sets[i] | sets[j]) >= threshold
+                for i, j in itertools.combinations(sorted(sets), 2)
+            )
+            out = dedup_ops.neardup_recall(
+                df, "doc_id", "text", threshold=threshold,
+                family="portable", allow_quadratic=True,
+            ).collect()[0]
+            assert out["n_true"] == truth, threshold
+            assert 0 <= out["n_found"] <= truth, threshold
+        assert len(sets[11] & sets[12]) == 1  # the one-shingle pair
+        with pytest.raises(ValueError, match="threshold"):
+            dedup_ops.neardup_recall(
+                df, "doc_id", "text", threshold=0.0, allow_quadratic=True
+            )
+
+
 class TestNgramNovelty:
     def test_exact_shares(self, spark):
         from dataengineer_spark.operators.textops import ngram_novelty
