@@ -33,7 +33,7 @@ from dataengineer_spark.tuning import control_frame, fan_out
 from dataengineer_spark.functions import cleaning
 from dataengineer_spark.functions.cleaning import clean_msg
 from dataengineer_spark.functions.labels import split_label
-from dataengineer_spark.functions.sections import create_sections, sectionize
+from dataengineer_spark.functions.sections import sectionize
 from dataengineer_spark.functions.dates import format_date
 from dataengineer_spark.functions.truncate import truncate_text_chars
 from dataengineer_spark.ml.inference import STANDIN_MULT, arith_standin_classifier
@@ -154,6 +154,16 @@ DOC_PATTERNS = {
 }
 
 LABEL_DIM = [(1, k, f"NAME_{k}") for k in range(16)]
+
+
+def _label_dim(spark: SparkSession, n: int = len(LABEL_DIM)) -> DataFrame:
+    """The first ``n`` rows of the labels dimension as an Arrow local
+    relation (``tuning.control_frame``; every value is a plain int or
+    str).  ``createDataFrame`` over the tuples would be a pickled RDD,
+    whose broadcast runs a Python-worker job."""
+    return control_frame(
+        spark, LABEL_DIM[:n], "model_id long, label long, label_name string"
+    )
 
 
 def _sql_clean(expr: str) -> str:
@@ -312,8 +322,7 @@ def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         classifier=arith_standin_classifier("msgid", "model_input"),
         char_budget=200,
     )
-    labels = spark.createDataFrame(LABEL_DIM, "model_id long, label long, label_name string")
-    return publish_stage(predictions, labels)
+    return publish_stage(predictions, _label_dim(spark))
 
 
 _FLAGSHIP_ORACLE = f"""
@@ -570,7 +579,7 @@ def q_p9_struct_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_f1_clean_msg(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    dirty = F.concat(F.lit("OBX|1|TX|"), F.col("text"), F.lit("~  tail\t\ttail2  "))
+    dirty = "concat('OBX|1|TX|', text, '~  tail\\t\\ttail2  ')"
     return docs.select("doc_id", clean_msg(dirty).alias("msg"))
 
 
@@ -677,14 +686,12 @@ def q_f6_format_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_f7_split_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    raw = F.when(F.col("lang") == "zh", F.lit("PLAIN")).otherwise(
-        F.concat(
-            F.lit("LABEL_"),
-            F.pmod(F.col("doc_id") * 37 + F.col("n_chars"), F.lit(16)).cast("string"),
-        )
+    raw = (
+        "CASE WHEN lang = 'zh' THEN 'PLAIN' "
+        "ELSE concat('LABEL_', CAST(pmod(doc_id * 37 + n_chars, 16) AS STRING)) END"
     )
     return docs.select(
-        "doc_id", raw.alias("raw_label"), split_label(raw).alias("parsed")
+        "doc_id", F.expr(raw).alias("raw_label"), split_label(raw).alias("parsed")
     )
 
 
@@ -710,9 +717,7 @@ def q_j1_label_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.pmod(F.col("doc_id") * 37 + F.col("n_chars"), F.lit(16)).alias("predicted_label"),
     )
-    dim = spark.createDataFrame(
-        [(k, n) for _, k, n in LABEL_DIM[:12]], "label long, label_name string"
-    )
+    dim = _label_dim(spark, 12).select("label", "label_name")
     return join_ops.label_join(facts, dim).select(
         "doc_id", "predicted_label", "label_name"
     )

@@ -6,7 +6,9 @@ and a ``basic_reg`` variant (mvp_pipe.py:32). Their bodies are absent from
 the repo, so the engine defines the cleaning contract explicitly — typical
 HL7/clinical-text normalization — as a chain of native ``regexp_replace``
 expressions: JVM-side, vectorized, no Python in the hot path, and filters
-written after it still push down past the projection.
+written after it still push down past the projection.  ``clean_msg`` is
+built as SQL text (``_clean_msg_s``), so a stage that uses it parses one
+expression instead of making a py4j round trip per ``F.*`` call.
 
 Regex parity note (SURVEY.md §7.4.3): patterns are Java-regex; they avoid
 constructs whose semantics differ from Python ``re`` and are unit-tested
@@ -18,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dataengineer_spark.tuning import sql_literal
+
 # HL7 segment markers look like "OBX|1|TX|..." — strip the pipe-delimited
 # prefixes; also normalize escape sequences HL7 uses for line breaks.
 # Literal \r (raw HL7 is CR-delimited) normalizes with the escapes.
@@ -28,26 +32,36 @@ _MULTI_WS = r"[ \t]+"
 _MULTI_NL = r"\n{2,}"
 
 
-def clean_msg(col: Column | str) -> Column:
-    """Normalize raw report text (F1).
+def _clean_msg_s(text: str) -> str:
+    """SQL text of ``clean_msg`` over the SQL fragment ``text``."""
+    s = text
+    # breaks FIRST: a segment delimited by '~'/'\X0D\' escapes isn't at
+    # line start until the break normalizes, so the (?m)^ prefix strip
+    # would miss every segment after the first.  Then trim ALL whitespace
+    # (trim() strips spaces only — a newline-ending report would survive
+    # it); \v/\f can't occur there (replaced before), so Java, RE2, and
+    # Python `\s` agree on this character set
+    for pattern, repl in (
+        (_HL7_BREAKS, "\n"),
+        (_HL7_SEGMENT_PREFIX, ""),
+        (_CONTROL_CHARS, " "),
+        (_MULTI_WS, " "),
+        (_MULTI_NL, "\n"),
+        (r"^\s+|\s+$", ""),
+    ):
+        s = f"regexp_replace({s}, {sql_literal(pattern)}, {sql_literal(repl)})"
+    return s
+
+
+def clean_msg(text: str) -> Column:
+    """Normalize raw report text (F1); ``text`` is a column name or any
+    SQL fragment.
 
     Contract: drop HL7 segment prefixes and escape sequences, drop control
     characters, collapse runs of spaces/tabs to one space, collapse blank
     lines, trim. NULL in → NULL out; '' in → '' out.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    # breaks FIRST: a segment delimited by '~'/'\X0D\' escapes isn't at
-    # line start until the break normalizes, so the (?m)^ prefix strip
-    # would miss every segment after the first
-    c = F.regexp_replace(c, _HL7_BREAKS, "\n")
-    c = F.regexp_replace(c, _HL7_SEGMENT_PREFIX, "")
-    c = F.regexp_replace(c, _CONTROL_CHARS, " ")
-    c = F.regexp_replace(c, _MULTI_WS, " ")
-    c = F.regexp_replace(c, _MULTI_NL, "\n")
-    # trim ALL whitespace (F.trim strips spaces only — a newline-ending
-    # report would survive it); \v/\f can't occur here (replaced above),
-    # so Java, RE2, and Python `\s` agree on this character set
-    return F.regexp_replace(c, r"^\s+|\s+$", "")
+    return F.expr(_clean_msg_s(text))
 
 
 # Literal accent-fold table (Latin-1/Latin-Extended common cases): the

@@ -12,16 +12,21 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def split_label(col: Column | str, as_long: bool = True) -> Column:
-    """``LABEL_7`` → 7 (bigint) / ``'7'``; no ``'_'`` → NULL.
+def _split_label_s(label: str, as_long: bool = True) -> str:
+    """SQL text of ``split_label`` over the SQL fragment ``label``."""
+    suffix = f"get(split({label}, '_'), 1)"
+    return f"try_cast({suffix} AS BIGINT)" if as_long else suffix
+
+
+def split_label(label: str, as_long: bool = True) -> Column:
+    """``LABEL_7`` → 7 (bigint) / ``'7'``; no ``'_'`` → NULL.  ``label`` is
+    a column name or SQL fragment.
 
     ANSI-safe: ``get`` returns NULL out-of-bounds and ``try_cast`` returns
     NULL for a non-numeric suffix instead of failing the job — a single
     malformed label must not kill a 100 TB run.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    suffix = F.get(F.split(c, "_"), 1)
-    return suffix.try_cast("bigint") if as_long else suffix
+    return F.expr(_split_label_s(label, as_long))
 
 
 def audit_comment_expr(params: dict[str, str]) -> Column:

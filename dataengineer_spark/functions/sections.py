@@ -9,10 +9,11 @@ driver, reference dx_group.py:177-183) and applied row-wise via an opaque
 - F3: collect the *tiny* config table once, keep per-authority variant
   lists per section — broadcast implicitly via the query plan (patterns
   are literals inside expressions; extraction coalesces across variants).
-- F4: one ``regexp_extract`` per section assembled into a single ``struct``
-  column in the same select, then expanded with ``select("*", "s.*")`` —
-  never pandas-style positional alignment, which has no deterministic
-  meaning on a distributed table.
+- F4: one ``regexp_extract`` per section plus the two derived columns,
+  rendered as SQL text (``_section_exprs``) and projected in one
+  ``selectExpr`` next to the input columns — never pandas-style positional
+  alignment, which has no deterministic meaning on a distributed table.
+  ``create_sections`` wraps the same text in one ``named_struct``.
 
 Patterns use the Java/RE2-common subset (no lookaround, no backrefs) so the
 same pattern string behaves identically in Spark, DuckDB (oracle), and
@@ -23,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dataengineer_spark.tuning import sql_literal
 
 #: section fields in output order (reference dx_group.py:163-164)
 SECTION_NAMES = ["gross", "addendum", "diagnosis", "diagnosis_comment", "micro"]
@@ -35,6 +38,11 @@ DEFAULT_PATTERNS: dict[str, str] = {
     "diagnosis_comment": r"(?i)(?:diagnosis )?comment\s*:\s*([^\n]*)",
     "micro": r"(?i)micro(?:scopic)?(?: description)?\s*:\s*([^\n]*)",
 }
+
+#: a never-matching pattern WITH a group 1, for a section missing from the
+#: pattern table: the section is '' (NULL for a NULL report); a groupless
+#: pattern makes regexp_extract raise at run time
+_NO_SECTION = "($^)"
 
 #: authority columns of the section_regex config table (dx_group.py:176-182)
 AUTHORITY_COLUMNS = ["nha", "fha", "fha2", "iha", "vcha1", "vcha2"]
@@ -64,24 +72,24 @@ def compile_section_regex(section_df: DataFrame) -> dict[str, str | list[str]]:
     return compiled
 
 
-def _extract_section(c: Column, pattern: str | list[str]) -> Column:
+def _extract_section_s(msg: str, pattern: str | list[str]) -> str:
     """Group-1 extraction over one pattern or a variant list (first
-    variant that extracts a non-empty body wins)."""
+    variant that extracts a non-empty body wins), as SQL text."""
     variants = [pattern] if isinstance(pattern, str) else list(pattern)
-    out = F.regexp_extract(c, variants[0], 1)
-    for v in variants[1:]:
-        out = F.when(out != F.lit(""), out).otherwise(F.regexp_extract(c, v, 1))
-    return out
+    *firsts, last = [f"regexp_extract({msg}, {sql_literal(v)}, 1)" for v in variants]
+    if not firsts:
+        return last
+    return "coalesce(" + ", ".join([f"nullif({e}, '')" for e in firsts] + [last]) + ")"
 
 
-def create_sections(
-    msg: Column | str, patterns: dict[str, str | list[str]] | None = None
-) -> Column:
-    """F4: one report column → struct of named sections.
+def _section_exprs(
+    msg: str, patterns: dict[str, str | list[str]] | None = None
+) -> dict[str, str]:
+    """F4 as SQL text over the fragment ``msg``: output name → expression,
+    in ``SECTION_NAMES`` order then ``filtered_message``, ``part_of_report``.
 
-    Returns ``struct<gross, addendum, diagnosis, diagnosis_comment, micro,
-    filtered_message, part_of_report>``. Semantics (contract defined by the
-    engine; the reference body is absent, SURVEY.md F4):
+    Semantics (contract defined by the engine; the reference body is
+    absent, SURVEY.md F4):
 
     - each section = first regex match's group 1, '' if no match
     - ``part_of_report``: 'diag_or_add' when diagnosis/addendum matched,
@@ -91,35 +99,38 @@ def create_sections(
       matched, else the whole message.
     """
     pats = patterns or DEFAULT_PATTERNS
-    c = F.col(msg) if isinstance(msg, str) else msg
-    parts = {name: _extract_section(c, pats.get(name, r"$^")) for name in SECTION_NAMES}
-
-    has = {name: parts[name] != F.lit("") for name in SECTION_NAMES}
-    part_of_report = (
-        F.when(has["diagnosis"] | has["addendum"], F.lit("diag_or_add"))
-        .when(has["gross"] | has["micro"], F.lit("gross_or_micro"))
-        .otherwise(F.lit("entire report"))
-    )
-    any_section = None
-    for name in SECTION_NAMES:
-        any_section = has[name] if any_section is None else (any_section | has[name])
+    out = {
+        name: _extract_section_s(msg, pats.get(name, _NO_SECTION))
+        for name in SECTION_NAMES
+    }
+    has = {name: f"{out[name]} != ''" for name in SECTION_NAMES}
     # skip EMPTY slots, not just NULLs (concat_ws only skips NULLs): a
     # report matching two non-adjacent sections must join them with one
     # space, not carry an interior run of separators
-    joined = F.array_join(
-        F.filter(
-            F.array(*[parts[n] for n in SECTION_NAMES]),
-            lambda x: x != F.lit(""),
-        ),
-        " ",
+    joined = (
+        f"array_join(filter(array({', '.join(out.values())}), s -> s != ''), ' ')"
     )
-    filtered_message = F.when(any_section, F.trim(joined)).otherwise(c)
+    out["filtered_message"] = (
+        f"CASE WHEN {' OR '.join(has.values())} THEN trim({joined}) ELSE {msg} END"
+    )
+    out["part_of_report"] = (
+        f"CASE WHEN {has['diagnosis']} OR {has['addendum']} THEN 'diag_or_add' "
+        f"WHEN {has['gross']} OR {has['micro']} THEN 'gross_or_micro' "
+        "ELSE 'entire report' END"
+    )
+    return out
 
-    return F.struct(
-        *[parts[n].alias(n) for n in SECTION_NAMES],
-        filtered_message.alias("filtered_message"),
-        part_of_report.alias("part_of_report"),
+
+def create_sections(
+    msg: str, patterns: dict[str, str | list[str]] | None = None
+) -> Column:
+    """F4: one report (a column name or SQL fragment) → struct of named
+    sections: ``struct<gross, addendum, diagnosis, diagnosis_comment,
+    micro, filtered_message, part_of_report>`` (see ``_section_exprs``)."""
+    fields = ", ".join(
+        f"{sql_literal(name)}, {expr}" for name, expr in _section_exprs(msg, patterns).items()
     )
+    return F.expr(f"named_struct({fields})")
 
 
 def sectionize(
@@ -128,11 +139,12 @@ def sectionize(
     patterns: dict[str, str | list[str]] | None = None,
     keep: list[str] | None = None,
 ) -> DataFrame:
-    """Apply F4 and expand the struct to top-level columns (P9).
+    """Apply F4 as top-level columns after ``keep`` (default: every input
+    column) (P9).
 
-    The struct is computed and expanded in one select — the distributed-safe
-    replacement for the reference's index-aligned horizontal concat
-    (dx_group.py:189).
+    One ``selectExpr`` computes every section next to the input columns —
+    the distributed-safe replacement for the reference's index-aligned
+    horizontal concat (dx_group.py:189).
 
     Raises when the input already carries a section output column (e.g.
     re-sectionizing sectionized output): the expansion would otherwise
@@ -146,7 +158,7 @@ def sectionize(
             f"sectionize: input columns {sorted(clash)} collide with the "
             "section output columns — drop or rename them (or pass keep=)"
         )
-    base = [F.col(c) for c in base_names]
-    return df.select(*base, create_sections(msg_col, patterns).alias("_s")).select(
-        "*", "_s.*"
-    ).drop("_s")
+    return df.selectExpr(
+        *[f"`{c}`" for c in base_names],
+        *[f"{expr} AS {name}" for name, expr in _section_exprs(f"`{msg_col}`", patterns).items()],
+    )

@@ -22,8 +22,8 @@ boundary-pinned tests in tests/test_functions.py.
 
 Two forms (SURVEY.md §7.4.4):
 
-- ``truncate_text_chars``: character-budget approximation as native
-  expressions — deterministic, SQL-expressible, oracle-checked.
+- ``truncate_text_chars``: character-budget approximation as one native
+  SQL expression — deterministic, SQL-expressible, oracle-checked.
 - ``truncate_text_tokens``: exact token semantics in an Arrow-batched
   pandas UDF.  The tokenizer is named by a SCHEME string resolved on the
   executor (the same trick as ml.inference's ``probe:``/``numpy:`` model
@@ -54,20 +54,24 @@ from pyspark.sql import types as T
 TOKEN_LIMIT = 510  # reference dx_group.py:51 — 512 minus [CLS]/[SEP]
 
 
-def truncate_text_chars(
-    text: Column | str, part_of_report: Column | str, budget: int = 2000
-) -> Column:
-    """Character-budget truncation (oracle form).
+def _truncate_text_chars_s(text: str, part_of_report: str, budget: int = 2000) -> str:
+    """SQL text of ``truncate_text_chars`` over two SQL fragments."""
+    return (
+        f"CASE WHEN length({text}) <= {budget} THEN {text} "
+        f"WHEN {part_of_report} = 'entire report' "
+        f"THEN substring({text}, {-budget}, {budget}) "
+        f"ELSE substring({text}, 1, {budget}) END"
+    )
+
+
+def truncate_text_chars(text: str, part_of_report: str, budget: int = 2000) -> Column:
+    """Character-budget truncation (oracle form) over two column names or
+    SQL fragments.
 
     Keeps the last ``budget`` chars for 'entire report', else the first
     ``budget`` chars; under-budget text passes through unchanged.
     """
-    t = F.col(text) if isinstance(text, str) else text
-    p = F.col(part_of_report) if isinstance(part_of_report, str) else part_of_report
-    n = F.length(t)
-    tail = F.substring(t, -budget, budget)
-    head = F.substring(t, 1, budget)
-    return F.when(n <= budget, t).when(p == "entire report", tail).otherwise(head)
+    return F.expr(_truncate_text_chars_s(text, part_of_report, budget))
 
 
 # -- exact token form (pandas UDF) -----------------------------------------

@@ -33,19 +33,27 @@ _PRED_SCHEMA = T.StructType(
 _MODEL_CACHE: dict[str, object] = {}  # per-executor-process singleton cache
 
 
-def standin_classifier(text: Column | str, num_labels: int = 16) -> Column:
+def _standin_classifier_s(text: str, num_labels: int = 16) -> str:
+    """SQL text of ``standin_classifier`` over the SQL fragment ``text``.
+    ``1000.0D`` is a DOUBLE literal (a bare ``1000.0`` is DECIMAL)."""
+    h = f"abs(xxhash64({text}))"
+    return (
+        f"named_struct('predicted_label', "
+        f"concat('LABEL_', CAST(pmod({h}, {num_labels}) AS STRING)), "
+        f"'model_score', CAST(pmod({h}, 1000) AS DOUBLE) / 1000.0D)"
+    )
+
+
+def standin_classifier(text: str, num_labels: int = 16) -> Column:
     """M1 stand-in — deterministic 'classifier': label = pmod(xxhash64
     (text), num_labels) as 'LABEL_k', score = (pmod(hash,1000))/1000.
+    ``text`` is a column name or SQL fragment.
 
-    Pure Column expression (no UDF, fully SQL-expressible for the oracle);
+    One SQL expression (no UDF, fully SQL-expressible for the oracle);
     emits the same 2-field shape as the real model so the pipeline around
     it is identical.
     """
-    c = F.col(text) if isinstance(text, str) else text
-    h = F.abs(F.xxhash64(c))
-    label = F.concat(F.lit("LABEL_"), F.pmod(h, F.lit(num_labels)).cast("string"))
-    score = F.pmod(h, F.lit(1000)).cast("double") / 1000.0
-    return F.struct(label.alias("predicted_label"), score.alias("model_score"))
+    return F.expr(_standin_classifier_s(text, num_labels))
 
 
 STANDIN_MULT = 2654435761  # Knuth multiplicative-hash constant

@@ -10,21 +10,30 @@ lake. XCom disappears: ``batch_id`` is a plain Python int.
 
 The plan is embarrassingly parallel (map stages + broadcast lookups) — no
 shuffle anywhere, so it scales linearly with input partitions.
+
+Each stage is built as SQL text: one ``selectExpr`` for clean and prep, two
+for predict (a ``classifier`` Column passed in adds one ``select``).  The builders the
+stages call (``_clean_msg_s``, ``_section_exprs``,
+``_truncate_text_chars_s``, ``_standin_classifier_s``, ``_split_label_s``)
+render SQL fragments, so a stage costs a few dozen py4j calls at plan
+build instead of hundreds of ``F.*`` round trips, and Catalyst sees the
+same expressions.  Batch-id allocation (``BatchAllocator.open_batch``)
+runs on the driver and submits no Spark job on a local lake, so a warm
+batch's jobs are its three contract writes plus what the caller adds.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from dataengineer_spark.batch import BatchAllocator, BatchContext, stamp_batch
+from dataengineer_spark.batch import BatchAllocator, BatchContext
 from dataengineer_spark.catalog import Catalog
 from dataengineer_spark.config import RunConfig
-from dataengineer_spark.functions.cleaning import clean_msg
-from dataengineer_spark.functions.labels import split_label
+from dataengineer_spark.functions.cleaning import _clean_msg_s
+from dataengineer_spark.functions.labels import _split_label_s
 from dataengineer_spark.functions.sections import sectionize
-from dataengineer_spark.functions.truncate import truncate_text_chars
-from dataengineer_spark.ml.inference import standin_classifier
+from dataengineer_spark.functions.truncate import _truncate_text_chars_s
+from dataengineer_spark.ml.inference import _standin_classifier_s
 
 
 def clean_stage(source: DataFrame, batch_id: int, id_col: str = "msgid",
@@ -35,21 +44,16 @@ def clean_stage(source: DataFrame, batch_id: int, id_col: str = "msgid",
     non-numeric id from a CSV/REST edge yields NULL (quarantine
     upstream if needed) rather than an ANSI CAST_INVALID_INPUT that
     kills the whole batch — the labels.split_label bad-row policy."""
-    return stamp_batch(
-        source.select(
-            F.col(id_col).try_cast("bigint").alias("msgid"),
-            clean_msg(msg_col).alias("msg"),
-        ),
-        batch_id,
-    ).select("batch_id", "msgid", "msg")
+    return source.selectExpr(
+        f"CAST({int(batch_id)} AS BIGINT) AS batch_id",
+        f"try_cast(`{id_col}` AS BIGINT) AS msgid",
+        f"{_clean_msg_s(f'`{msg_col}`')} AS msg",
+    )
 
 
 def prep_stage(cleaned: DataFrame, patterns: dict[str, str] | None = None) -> DataFrame:
     """Stage 2 — prep_data: sectionize into the preped_data contract."""
-    return sectionize(cleaned, "msg", patterns).select(
-        "batch_id", "msgid", "gross", "addendum", "diagnosis",
-        "diagnosis_comment", "micro", "filtered_message", "part_of_report",
-    )
+    return sectionize(cleaned, "msg", patterns, keep=["batch_id", "msgid"])
 
 
 def predict_stage(
@@ -60,21 +64,25 @@ def predict_stage(
 ) -> DataFrame:
     """Stage 3 — predict: truncate → classify → parse label suffix →
 
-    stamp model_id → prediction_table contract."""
-    truncated = preped.withColumn(
-        "model_input",
-        truncate_text_chars("filtered_message", "part_of_report", char_budget),
-    )
-    pred = classifier if classifier is not None else standin_classifier(F.col("model_input"))
-    return (
-        truncated.withColumn("_pred", pred)
-        .select(
-            "batch_id",
-            "msgid",
-            split_label(F.col("_pred.predicted_label")).alias("predicted_label"),
-            F.col("_pred.model_score").alias("model_score"),
-            F.lit(model_id).cast("bigint").alias("model_id"),
+    stamp model_id → prediction_table contract.  ``classifier`` is any
+    Column over ``preped``'s columns plus ``model_input`` yielding
+    ``struct<predicted_label, model_score>``; the default is
+    ``standin_classifier`` over the truncated text."""
+    model_input = _truncate_text_chars_s("filtered_message", "part_of_report", char_budget)
+    if classifier is None:
+        pred = preped.selectExpr(
+            "batch_id", "msgid", f"{_standin_classifier_s(model_input)} AS _pred"
         )
+    else:
+        pred = preped.selectExpr("*", f"{model_input} AS model_input").select(
+            "batch_id", "msgid", classifier.alias("_pred")
+        )
+    return pred.selectExpr(
+        "batch_id",
+        "msgid",
+        f"{_split_label_s('_pred.predicted_label')} AS predicted_label",
+        "_pred.model_score AS model_score",
+        f"CAST({int(model_id)} AS BIGINT) AS model_id",
     )
 
 

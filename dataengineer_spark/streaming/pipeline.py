@@ -96,26 +96,35 @@ def stream_events(
 
     the source swaps for kafka/kinesis — the downstream plan is identical.
     ``ts`` is normalized to a µs TimestampType column whatever the file's
-    native precision (same policy as testdata.load_table): a one-time batch
-    footer probe decides whether the column arrives as a timestamp (µs
-    file) or must be read as an ns-long and floored."""
+    native precision (same policy as testdata.load_table): the footer
+    decides whether the column arrives as a timestamp (ms/µs file) or must
+    be read as an ns-long and floored.  A local path's footer is read on
+    the driver with pyarrow (a file or a directory of parts; no Spark
+    job); a remote (``://``) path keeps a one-time batch-read probe."""
     import os
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-    from pyspark.sql import types as T
 
     from dataengineer_spark.schemas import EVENTS
 
     # naive µs files are interpreted as UTC wall clock, like load_table
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # probe the footer with a batch read: stream schemas are mandatory and
-    # fixed up-front, so sniff which shape this lake uses before subscribing
-    ts_is_native = False
-    try:
-        dt = spark.read.parquet(path).schema["ts"].dataType
-        ts_is_native = isinstance(dt, (T.TimestampType, T.TimestampNTZType))
-    except AnalysisException:
-        pass  # ns file in a vanilla session: read as long below
+    # stream schemas are mandatory and fixed up-front, so sniff which shape
+    # this lake uses before subscribing
+    if "://" in path:
+        from pyspark.errors.exceptions.captured import AnalysisException
+        from pyspark.sql import types as T
+
+        ts_is_native = False
+        try:
+            dt = spark.read.parquet(path).schema["ts"].dataType
+            ts_is_native = isinstance(dt, (T.TimestampType, T.TimestampNTZType))
+        except AnalysisException:
+            pass  # ns file in a vanilla session: read as long below
+    else:
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        ts = ds.dataset(path, format="parquet").schema.field("ts").type
+        ts_is_native = pa.types.is_timestamp(ts) and ts.unit in ("ms", "us")
 
     schema = EVENTS if ts_is_native else EVENTS_RAW
     reader = spark.readStream.schema(schema).option(
@@ -297,32 +306,16 @@ def _audited_epoch(
     replay contract is testable: calling this twice with the same
     ``epoch_id`` (a retried batch) must leave exactly one copy of the
     epoch's data partition and one audit row."""
-    from dataengineer_spark.batch import AUDIT_TABLE, _audit_row, stamp_batch
+    from dataengineer_spark.batch import _append_audit, _audit_max_id, stamp_batch
 
     stamped = stamp_batch(df, epoch_id)
     catalog.overwrite_batch(stamped, table)
-    audited = False
-    if catalog.exists(AUDIT_TABLE):
-        audited = (
-            catalog.read(AUDIT_TABLE)
-            .where(
-                (F.col("batch_id") == int(epoch_id))
-                & (F.col("pipeline_name") == pipeline_name)
-            )
-            .limit(1)
-            .count()
-            > 0
+    # the batch allocator's driver-side audit reader and writer: no Spark
+    # job on a local lake
+    if _audit_max_id(catalog, batch_id=epoch_id, pipeline_name=pipeline_name) is None:
+        _append_audit(
+            catalog, epoch_id, pipeline_name, None, None, f"stream epoch {epoch_id}"
         )
-    if not audited:
-        audit = _audit_row(
-            df.sparkSession,
-            int(epoch_id),
-            pipeline_name,
-            None,
-            None,
-            f"stream epoch {epoch_id}",
-        )
-        catalog.write(audit, AUDIT_TABLE)
 
 
 def stream_dedup(

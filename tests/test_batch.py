@@ -45,6 +45,38 @@ class TestAllocator:
         ]
         assert BatchAllocator(catalog).open_batch(RunConfig()).batch_id == big + 1
 
+    def test_mixed_audit_files_continue_ids_without_a_job(
+        self, spark, catalog, job_group
+    ):
+        # a lake whose audit table holds Spark-written parts (with
+        # _SUCCESS and .crc files), driver-written parts and a leftover
+        # in-flight temp file: the temp file is invisible to every reader
+        import os
+
+        import duckdb
+        import pyarrow.parquet as pq
+
+        from dataengineer_spark.batch import _append_audit, _audit_row, _audit_table
+
+        catalog.write(_audit_row(spark, 1, "spark", None, None, "c1"), AUDIT_TABLE)
+        _append_audit(catalog, 2, "arrow", "20220101", None, "c2")
+        path = catalog.path(AUDIT_TABLE)
+        pq.write_table(
+            _audit_table(99, "torn", None, None, None),
+            os.path.join(path, ".part-0123.parquet.tmp"),
+        )
+        alloc = BatchAllocator(catalog)
+        with job_group() as jobs:
+            ids = [alloc.open_batch(RunConfig(pipeline_name="p")).batch_id for _ in range(2)]
+        assert ids == [3, 4]
+        assert jobs == []
+        spark_rows = sorted(tuple(r) for r in catalog.read(AUDIT_TABLE).collect())
+        duck_rows = sorted(
+            duckdb.sql(f"SELECT * FROM read_parquet('{path}/*.parquet')").fetchall()
+        )
+        assert [r[0] for r in spark_rows] == [1, 2, 3, 4]
+        assert spark_rows == duck_rows
+
 
 class TestPartitionedLake:
     def test_write_partitions_by_batch(self, spark, catalog):

@@ -31,18 +31,18 @@ def _one(spark, expr, value: str | None):
 class TestCleanMsg:
     def test_strips_hl7_prefix_and_breaks(self, spark):
         raw = "OBX|1|TX|Diagnosis: carcinoma~present"
-        out = _one(spark, clean_msg(F.col("t")), raw)
+        out = _one(spark, clean_msg("t"), raw)
         assert out == "TX|Diagnosis: carcinoma\npresent"
 
     def test_collapses_whitespace(self, spark):
-        assert _one(spark, clean_msg(F.col("t")), "a   b\t\tc") == "a b c"
+        assert _one(spark, clean_msg("t"), "a   b\t\tc") == "a b c"
 
     def test_null_and_empty(self, spark):
-        assert _one(spark, clean_msg(F.col("t")), None) is None
-        assert _one(spark, clean_msg(F.col("t")), "") == ""
+        assert _one(spark, clean_msg("t"), None) is None
+        assert _one(spark, clean_msg("t"), "") == ""
 
     def test_control_chars_removed(self, spark):
-        assert _one(spark, clean_msg(F.col("t")), "a\x01\x02b") == "a b"
+        assert _one(spark, clean_msg("t"), "a\x01\x02b") == "a b"
 
     def test_basic_reg_lowercases(self, spark):
         assert _one(spark, basic_reg(F.col("t")), "Hello,  WORLD!") == "hello, world"
@@ -87,6 +87,22 @@ class TestSections:
             .first()
         )
         assert row["part_of_report"] == "gross_or_micro"
+
+    def test_section_missing_from_patterns_is_empty(self, spark):
+        # PATTERNS has no addendum/diagnosis_comment: an empty or
+        # newline-only report matches the stand-in never-match pattern,
+        # which must carry a group 1 or regexp_extract raises
+        rows = (
+            spark.createDataFrame([("",), ("\n",), (None,)], "msg string")
+            .select(create_sections("msg", self.PATTERNS).alias("s"))
+            .select("s.addendum", "s.diagnosis_comment", "s.part_of_report")
+            .collect()
+        )
+        assert [tuple(r) for r in rows] == [
+            ("", "", "entire report"),
+            ("", "", "entire report"),
+            (None, None, "entire report"),
+        ]
 
     def test_null_msg(self, spark):
         row = (
@@ -270,12 +286,12 @@ class TestDatesAndLabels:
         assert out == "2022-03-05"
 
     def test_split_label(self, spark):
-        assert _one(spark, split_label(F.col("t")), "LABEL_7") == 7
-        assert _one(spark, split_label(F.col("t")), "PLAIN") is None
-        assert _one(spark, split_label(F.col("t")), None) is None
-        assert _one(spark, split_label(F.col("t"), as_long=False), "LABEL_x") == "x"
+        assert _one(spark, split_label("t"), "LABEL_7") == 7
+        assert _one(spark, split_label("t"), "PLAIN") is None
+        assert _one(spark, split_label("t"), None) is None
+        assert _one(spark, split_label("t", as_long=False), "LABEL_x") == "x"
         # non-numeric suffix under try_cast → NULL, not an error
-        assert _one(spark, split_label(F.col("t")), "LABEL_x") is None
+        assert _one(spark, split_label("t"), "LABEL_x") is None
 
 
 class TestBpe:
@@ -396,12 +412,12 @@ class TestNormalizeText:
 
 class TestSixthReviewEdgeCases:
     def test_clean_msg_strips_tilde_delimited_segment_prefixes(self, spark):
-        out = _one(spark, clean_msg(F.col("t")), "OBX|1|TX|foo~OBX|2|TX|bar")
+        out = _one(spark, clean_msg("t"), "OBX|1|TX|foo~OBX|2|TX|bar")
         assert out == "TX|foo\nTX|bar"  # second segment's prefix stripped too
 
     def test_clean_msg_normalizes_literal_carriage_returns(self, spark):
-        assert _one(spark, clean_msg(F.col("t")), "A\r\rB") == "A\nB"
-        assert _one(spark, clean_msg(F.col("t")), "A\r\nB") == "A\nB"
+        assert _one(spark, clean_msg("t"), "A\r\rB") == "A\nB"
+        assert _one(spark, clean_msg("t"), "A\r\nB") == "A\nB"
 
     def test_filtered_message_no_interior_space_runs(self, spark):
         from dataengineer_spark.functions.sections import create_sections

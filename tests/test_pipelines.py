@@ -10,7 +10,12 @@ from pyspark.sql import functions as F
 from dataengineer_spark.catalog import Catalog
 from dataengineer_spark.config import RunConfig
 from dataengineer_spark.plans.api_variant import publish_stage, run_dx_group_api
-from dataengineer_spark.plans.dx_group import clean_stage, prep_stage, run_dx_group
+from dataengineer_spark.plans.dx_group import (
+    clean_stage,
+    predict_stage,
+    prep_stage,
+    run_dx_group,
+)
 from dataengineer_spark.plans.prostate import run_prostate
 from dataengineer_spark.schemas import (
     API_EXPORT_COLUMNS,
@@ -96,12 +101,13 @@ class TestApiVariant:
 
 
 class TestBatchJobBudget:
-    #: Spark jobs one warm clinical batch submits: 2 for the max(batch_id)
-    #: allocation read, 1 audit-row append, 3 contract-table writes, 1
-    #: label-dimension broadcast, 1 CSV export, 1 prostate noop write.
-    #: Schema inference on a lake read-back or a pickled audit row would
-    #: each add jobs here.
-    JOBS_PER_BATCH = 9
+    #: Spark jobs one warm clinical batch submits: 3 contract-table writes,
+    #: 1 label-dimension broadcast (this test's labels frame is a pickled
+    #: RDD), 1 CSV export, 1 prostate noop write.  Batch-id allocation and
+    #: the audit append run on the driver on a local lake (0 jobs).  A
+    #: Spark audit read or append, or schema inference on a lake read-back,
+    #: would each add jobs here.
+    JOBS_PER_BATCH = 6
 
     def test_second_batch_job_count(self, spark, tmp_path, job_group):
         from dataengineer_spark.sources.files import read_csv
@@ -132,6 +138,32 @@ class TestBatchJobBudget:
             one_batch(2)
         assert len(jobs) == self.JOBS_PER_BATCH, sorted(jobs)
         assert catalog.read_batch("prediction_table", 2).count() == 20
+
+
+class TestStageBuildPy4jBudget:
+    #: py4j calls to build clean + prep + predict (948 when the stages
+    #: were built with the Column API; ~40 as SQL text)
+    BUDGET = 60
+
+    def test_stage_builds_stay_within_budget(self, spark, source, monkeypatch):
+        import gc
+
+        import py4j.clientserver as cs
+
+        calls = []
+        send = cs.ClientServerConnection.send_command
+
+        def counted(conn, command, *args, **kwargs):
+            if not command.startswith("m\n"):  # skip GC'd-object releases
+                calls.append(command)
+            return send(conn, command, *args, **kwargs)
+
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+        gc.collect()
+        predict_stage(prep_stage(clean_stage(source, batch_id=1), PATTERNS), model_id=1)
+        # the counter must see the session's calls at all
+        assert calls
+        assert len(calls) <= self.BUDGET, len(calls)
 
 
 class TestProstate:

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataengineer_spark.batch import AUDIT_TABLE
@@ -190,6 +191,63 @@ class TestBatchAuditedSink:
         _audited_epoch(ev, 1, catalog, "events_out", "evt")
         assert catalog.read("events_out").count() == 200
         assert catalog.read(AUDIT_TABLE).count() == 2
+
+
+class TestStreamEventsFooter:
+    """``stream_events`` decides the ``ts`` shape from the pyarrow footer:
+    no Spark job at stream start, and the streamed µs values are the
+    file's instants floored to µs whatever its precision."""
+
+    TS_NS = [1_704_067_200_000_000_123, 1_704_067_260_000_001_999]
+
+    def _frame(self, unit: str):
+        import pyarrow as pa
+
+        scale = {"us": 1000, "ns": 1}[unit]
+        return pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array([t // scale for t in self.TS_NS], pa.timestamp(unit)),
+                "user_id": pa.array([7, 7], pa.int64()),
+                "event_type": ["view", "click"],
+                "value": [1.0, 2.0],
+                "props": ["{}", "{}"],
+            }
+        )
+
+    def _source(self, tmp_path, layout: str) -> str:
+        import pyarrow.parquet as pq
+
+        if layout == "pandas_parts":
+            src = tmp_path / "parts"
+            src.mkdir()
+            pdf = self._frame("ns").to_pandas()
+            pdf.iloc[:1].to_parquet(src / "p1.parquet")
+            pdf.iloc[1:].to_parquet(src / "p2.parquet")
+            return str(src)
+        path = str(tmp_path / f"ev_{layout}.parquet")
+        pq.write_table(self._frame(layout), path)
+        return path
+
+    @pytest.mark.parametrize("layout", ["us", "ns", "pandas_parts"])
+    def test_footer_read_submits_no_job(self, spark, tmp_path, job_group, layout):
+        src = self._source(tmp_path, layout)
+        with job_group() as jobs:
+            stream = stream_events(spark, src)
+        assert jobs == []
+        name = f"t_footer_{uuid.uuid4().hex[:8]}"
+        q = (
+            stream.select("event_id", F.unix_micros("ts").alias("us"))
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        got = sorted(tuple(r) for r in spark.table(name).collect())
+        assert got == [(i + 1, t // 1000) for i, t in enumerate(self.TS_NS)]
 
 
 class TestStreamStreamJoin:
