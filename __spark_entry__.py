@@ -249,7 +249,7 @@ def _duck_shingles(n: int) -> str:
 
 
 def _duck_jaccard(a: str, b: str) -> str:
-    """Exact Jaccard of two distinct lists (``dedup._jaccard``)."""
+    """Exact Jaccard of two distinct lists (``dedup._jaccard_sql``)."""
     return (
         f"len(list_intersect({a}, {b})) * 1.0 "
         f"/ len(list_distinct(list_concat({a}, {b})))"
@@ -1339,8 +1339,9 @@ FROM acc
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph analytics (operators/graph.py): 5-iteration PageRank over
     the supplier co-occurrence graph (suppliers sharing an order, both
-    directions — symmetric, so no dangling mass).  Each round is one
-    shuffle join on src + one hash aggregate on dst, localCheckpoint-ed;
+    directions — symmetric, so no dangling mass).  The power iteration
+    is one SQL statement over persisted, dst-partitioned edges: each
+    round one broadcast join on src + one hash aggregate on dst;
     contributions round-then-decimal-sum so the whole power iteration is
     bit-reproducible and the oracle can replay it as unrolled CTEs.
 
@@ -8984,7 +8985,7 @@ def q_e2_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _neardup_recall_oracle() -> str:
     """Ground truth as an inverted index: the docs' distinct shingles,
     self-joined on the shingle and counted per pair, give ``|A∩B|``, and
-    ``|A∪B| = |A| + |B| − |A∩B|`` (``dedup._jaccard``'s size identity).
+    ``|A∪B| = |A| + |B| − |A∩B|`` (``dedup._jaccard_sql``'s size identity).
     A pair sharing no shingle has Jaccard 0, below the threshold, so the
     all-pairs intersect is never built."""
     d_body = f"""SELECT doc_id, text FROM documents WHERE doc_id < 400

@@ -14,7 +14,12 @@ from pyspark.sql import functions as F
 from dataengineer_spark.operators.preparation import (
     _poly_hash_sql, _poly_unrolled_sql,
 )
-from dataengineer_spark.tuning import lineage_cut, tie_lifetime, transient_persist
+from dataengineer_spark.tuning import (
+    lineage_cut,
+    sql_literal,
+    tie_lifetime,
+    transient_persist,
+)
 
 
 # deterministic affine-hash modulus for the MinHash family: the Mersenne
@@ -210,25 +215,30 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def _hashed_shingles(text: Column, n: int) -> Column:
-    """Distinct char n-gram shingles as xxhash64 longs — the verify-stage
-    representation: exact-Jaccard verification only consumes set SIZES
-    (|∩|, |A|, |B|), which hashing preserves, and int64 array intersects
-    run ~2-4× faster than shingle-string ones on million-pair candidate
-    sets (same 2⁻⁶⁴-collision exactness budget the xxhash64 LSH family
-    already accepts)."""
-    return F.array_distinct(
-        F.transform(char_shingles(text, n), lambda s: F.xxhash64(s))
+def _hashed_shingles_sql(text_sql: str, n: int) -> str:
+    """SQL text of the distinct char n-gram shingles of ``text_sql`` as
+    xxhash64 longs — the verify-stage representation: exact-Jaccard
+    verification only consumes set SIZES (|∩|, |A|, |B|), which hashing
+    preserves, and int64 array intersects run ~2-4× faster than
+    shingle-string ones on million-pair candidate sets (same
+    2⁻⁶⁴-collision exactness budget the xxhash64 LSH family already
+    accepts).  Every window is hashed and the hashes deduped: the set is
+    the one ``char_shingles`` + per-shingle hashing gives (equal strings
+    hash equal), without materializing a shingle string.  Texts shorter
+    than ``n`` keep ONE shingle, the whole text (``greatest(L-n+1, 1)``).
+    ``text_sql`` must be a plain (quoted) column reference."""
+    return (
+        f"array_distinct(transform(sequence(1, greatest(length({text_sql}) "
+        f"- {n - 1}, 1)), i -> xxhash64(substr({text_sql}, i, {n}))))"
     )
 
 
-def _jaccard(a: str, b: str) -> Column:
-    """Exact Jaccard of two DISTINCT arrays from one intersect pass:
-    |U| = |A| + |B| − |∩|, so the array_union walk is never built."""
-    inter = F.size(F.array_intersect(a, b))
-    return (
-        inter / (F.size(a) + F.size(b) - inter)
-    ).alias("jaccard")
+def _jaccard_sql(a: str, b: str) -> str:
+    """SQL text of the exact Jaccard of two DISTINCT array columns from one
+    intersect pass: |U| = |A| + |B| − |∩|, so the array_union walk is
+    never built."""
+    inter = f"size(array_intersect({a}, {b}))"
+    return f"{inter} / (size({a}) + size({b}) - {inter})"
 
 
 # -- MinHash + LSH banding --------------------------------------------------
@@ -374,34 +384,24 @@ def _expr_signatures(
     from dataengineer_spark.tuning import fan_out
 
     fanned = df if assume_fanned else fan_out(df)
+    idq, textq = f"`{id_col}`", f"`{text_col}`"
     if portable:
         cps_sql = (
-            f"transform(split(`{text_col}`, ''), x -> CAST(ascii(x) AS BIGINT))"
+            f"transform(split({textq}, ''), x -> CAST(ascii(x) AS BIGINT))"
         )
-        staged = fanned.select(
-            F.col(id_col),
-            F.col(text_col),
-            F.expr(cps_sql).alias("_cps"),
-        )
-        hs_sql = _shingle_hashes_from_cps_sql(
-            f"`{text_col}`", "`_cps`", shingle_size
-        )
+        staged = fanned.selectExpr(idq, textq, f"{cps_sql} AS _cps")
+        hs_sql = _shingle_hashes_from_cps_sql(textq, "`_cps`", shingle_size)
     else:
         staged = fanned
-        hs_sql = _shingle_hashes_sql(f"`{text_col}`", shingle_size)
+        hs_sql = _shingle_hashes_sql(textq, shingle_size)
     # stage the shingle-hash array in its OWN projection (non-cheap and
     # referenced num_hashes times by the fold below — CollapseProject
     # keeps it un-inlined, so the shingle stage runs once per row), then
     # fold the signature via the allocation-light array_min form
     # text rides along to the fold's projection for the NULL guard only
-    hashed = staged.select(
-        F.col(id_col), F.col(text_col), F.expr(hs_sql).alias("_hs")
-    )
+    hashed = staged.selectExpr(idq, textq, f"{hs_sql} AS _hs")
     fold = _minhash_min_sql("`_hs`", num_hashes, seed)
-    return hashed.select(
-        F.col(id_col),
-        F.expr(f"IF(`{text_col}` IS NULL, NULL, {fold})").alias("_sig"),
-    )
+    return hashed.selectExpr(idq, f"IF({textq} IS NULL, NULL, {fold}) AS _sig")
 
 
 #: The MinHash near-dup hash families, by the name a ``signature_table``
@@ -488,11 +488,9 @@ def _family_bands(
         f"named_struct('band', {b}, 'bucket', {bucket(b)})"
         for b in range(bands)
     )
-    return sig.select(
-        id_col,
-        F.explode(F.expr(f"IF(_sig IS NULL, NULL, array({structs}))"))
-        .alias("_band"),
-    ).select(id_col, "_band.band", "_band.bucket")
+    return sig.selectExpr(
+        f"`{id_col}`", f"explode(IF(_sig IS NULL, NULL, array({structs}))) AS _band"
+    ).selectExpr(f"`{id_col}`", "_band.band", "_band.bucket")
 
 
 def minhash_lsh_pairs(
@@ -529,7 +527,8 @@ def minhash_lsh_pairs(
     # below AND the candidate verify re-shingling further down (which
     # otherwise keeps the scan's partitioning through the broadcast
     # semi-join and serializes on a single-row-group local input)
-    base = fan_out(df.select(F.col(id_col), F.col(text_col).alias("_t")))
+    idq = f"`{id_col}`"
+    base = fan_out(df.selectExpr(idq, f"`{text_col}` AS _t"))
     banded = _family_bands(base, id_col, "_t", shingle_size, num_hashes,
                            bands, family, assume_fanned=True)
 
@@ -542,12 +541,12 @@ def minhash_lsh_pairs(
     # GC'd (tie_lifetime below), same contract as the candidate persist.
     banded = transient_persist(banded)
 
-    left = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    right = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    left = banded.selectExpr(f"{idq} AS id_a", "band", "bucket")
+    right = banded.selectExpr(f"{idq} AS id_b", "band", "bucket")
     cand = (
         left.join(right, on=["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        .where("id_a < id_b")
+        .selectExpr("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     # candidate pairs are referenced twice below (verify probe +
@@ -562,22 +561,18 @@ def minhash_lsh_pairs(
     # corpus down to candidate docs FIRST, then shingle just those — at a
     # sane collision rate this re-shingles a tiny fraction of the corpus
     # instead of shuffling every doc's shingle array ×bands
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias(id_col)
+    cand_ids = cand.selectExpr(
+        f"explode(array(id_a, id_b)) AS {idq}"
     ).dropDuplicates()
-    sh = (
-        base.join(F.broadcast(cand_ids), id_col, "left_semi")
-        .select(
-            F.col(id_col),
-            _hashed_shingles(F.col("_t"), shingle_size).alias("_sh"),
-        )
+    sh = base.join(F.broadcast(cand_ids), id_col, "left_semi").selectExpr(
+        idq, f"{_hashed_shingles_sql('`_t`', shingle_size)} AS _sh"
     )
-    pairs = cand.join(
-        sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a"
-    ).join(sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b")), "id_b")
-    out = pairs.select("id_a", "id_b", _jaccard("_sh_a", "_sh_b")).where(
-        F.col("jaccard") >= threshold
+    pairs = cand.join(sh.selectExpr(f"{idq} AS id_a", "_sh AS _sh_a"), "id_a").join(
+        sh.selectExpr(f"{idq} AS id_b", "_sh AS _sh_b"), "id_b"
     )
+    out = pairs.selectExpr(
+        "id_a", "id_b", f"{_jaccard_sql('_sh_a', '_sh_b')} AS jaccard"
+    ).where(f"jaccard >= {sql_literal(threshold)}")
     return tie_lifetime(tie_lifetime(out, cand), banded)
 
 
@@ -661,8 +656,6 @@ def simhash64(text: str, n_bits: int = 64, portable: bool = False) -> Column:
     SQL oracle can replicate exactly (the poly hash's ~20 bits of range
     are too few to index directly).
     """
-    from dataengineer_spark.tuning import sql_literal
-
     words = f"split(regexp_replace(`{text}`, '^\\\\s+|\\\\s+$', ''), '\\\\s+')"
     if portable:
         params = _affine_params(n_bits, seed=7)
@@ -1099,20 +1092,20 @@ def minhash_lsh_join(
         .dropDuplicates(),
     )
     cand_ids = cand.select("corpus_id").dropDuplicates()
-    sh_c = base_c.join(F.broadcast(cand_ids), "corpus_id", "left_semi").select(
-        "corpus_id", _hashed_shingles(F.col("_t"), shingle_size).alias("_sh_a")
+    sh_c = base_c.join(F.broadcast(cand_ids), "corpus_id", "left_semi").selectExpr(
+        "corpus_id", f"{_hashed_shingles_sql('`_t`', shingle_size)} AS _sh_a"
     )
-    sh_b = base_b.select(
-        "bench_id", _hashed_shingles(F.col("_t"), shingle_size).alias("_sh_b")
+    sh_b = base_b.selectExpr(
+        "bench_id", f"{_hashed_shingles_sql('`_t`', shingle_size)} AS _sh_b"
     )
     out = (
         cand.join(sh_c, "corpus_id")
         .join(F.broadcast(sh_b), "bench_id")
-        .select(
+        .selectExpr(
             "corpus_id", "bench_id",
-            F.round(_jaccard("_sh_a", "_sh_b"), 6).alias("jaccard"),
+            f"round({_jaccard_sql('_sh_a', '_sh_b')}, 6) AS jaccard",
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(f"jaccard >= {sql_literal(threshold)}")
     )
     return tie_lifetime(out, cand)
 

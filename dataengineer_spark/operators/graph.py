@@ -4,8 +4,8 @@ Companion to the min-label connected-components loop in
 ``operators/dedup.py`` (the cluster-collapse step of near-dup dedup):
 this module holds general graph measures computed the same Spark-native
 way — the graph is a plain (src, dst) DataFrame, every iteration is one
-hash join plus one partially-aggregated groupBy on the node key, and
-``localCheckpoint`` truncates lineage so a 20-round loop doesn't build a
+hash join plus one partially-aggregated groupBy on the node key, and a
+lineage cut every few rounds keeps a 20-round loop from building a
 20-deep plan.  No GraphX/RDDs: the edge list at 100 TB is just another
 shuffled table, and Catalyst handles the join strategy per round.
 
@@ -20,7 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataengineer_spark.tuning import lineage_cut, tie_lifetime, transient_persist
+from dataengineer_spark.tuning import (
+    lineage_cut,
+    sql_literal,
+    temp_view,
+    tie_lifetime,
+    transient_persist,
+)
 
 
 def _session_width(spark) -> int:
@@ -66,49 +72,51 @@ def pagerank(
 ) -> DataFrame:
     """Fixed-iteration PageRank by power iteration on an edge list.
 
-    Per round: each node ships ``rank / out_degree`` along its out-edges
-    (the join on ``src`` reuses the degree table's partitioning), and
-    every node's new rank is ``(1-d)/N + d * Σ contributions``.  The
+    Per round: each node ships ``rank / out_degree`` along its out-edges,
+    and every node's new rank is ``(1-d)/N + d * Σ contributions``.  The
     contribution is rounded to 14 digits and summed as DECIMAL(38,14),
     so the Σ is exact and order-independent; the new rank is re-rounded
     to 12 digits — the float sequence is reproducible on any engine and
     any partition count.
 
-    Scale shape: ``iterations`` × (one join of the degree-carrying edge
-    table against the rank vector + one hash aggregate on dst + one
-    co-partitioned left join back onto the node universe for the
-    teleport floor).  The degree-carrying edge table is hash-partitioned
-    on ``src`` ONCE at an explicit width and lineage-cut, so every
-    round's join reuses those stored blocks and only the
-    (node-count-sized) rank vector moves; the width is max(session
-    confs, lake file count) — both metadata-only reads, no plan-build
-    job (the r10 form's ``.rdd`` partition probe executed the edge
-    build to size it; 5a920ce:tools/profile_r10_pr.py measured where the edge
-    frame's own width is load-bearing).  When the node count — an EXACT control-plane scalar, already
-    paid for by the teleport term — is at most ``broadcast_node_limit``
-    (~24 MB of (key, rank) rows at the 1 M default), the rank vector is
-    explicitly broadcast into that join: round-8 stage profiling showed
-    AQE instead planning the round as a shuffle join and then COALESCING
-    the ~24 MB contribution exchange to one task (64 MB advisory target),
-    so every round ran single-threaded (~1.5 s/round at sf0.1, the whole
-    per-iteration wall of VERDICT r7 item 1); the size-guarded broadcast
-    keeps each round map-side over the edge blocks.  Past the limit the
-    rank vector is genuinely big and the shuffle join against the
-    pre-partitioned edges IS the right plan (without the pre-partition
-    it would re-shuffle the FULL edge table every round).  A
-    teleport-floor variant that fuses the left join into the aggregate
-    (union one NULL contribution per node, coalesce the all-NULL
-    groups) was measured and REJECTED in round 8 — noop-sink best-of-4:
-    13.0 s fused vs 10.5 s join form at sf0.1 on the measurement box —
-    an AQE-broadcast tiny left join costs less than widening every
-    round's aggregate exchange.  Short runs chain into ONE lazily-planned DAG;
-    every ``checkpoint_every`` rounds the rank vector is lineage-cut to
-    truncate lineage for long convergence runs (the classic
-    Pregel-without-Pregel loop).  The node universe is src ∪ dst, and
-    every round's new rank vector is left-joined back onto it (nodes
-    receiving no contributions default to ``(1-d)/N``), so source-only
-    nodes keep a rank instead of silently vanishing after iteration 1
-    and sink-only nodes are ranked too.
+    Plan shape: two ``transient_persist`` frames, then ONE SQL statement
+    for the whole power iteration (a CTE triple per round: contributions,
+    their sum per node, the left join onto the node set for the teleport
+    floor), parsed and analysed once instead of built from ~20 DataFrame
+    calls per round.  The stored frames are
+
+    - the edge list, hash-partitioned on ``_dst``;
+    - the node universe src ∪ dst with each node's out-degree (one
+      aggregate over the stored edges, so the edge build runs once),
+      hash-partitioned on ``node`` at the same width.  The rank vector
+      carries the degree, so the contribution ``rank / degree`` needs no
+      degree on the edges.
+
+    A persisted frame keeps its partitioning (``tuning.transient_persist``;
+    a lineage cut does not), so while the node count — an exact
+    control-plane scalar, paid for by the teleport term — is at most
+    ``broadcast_node_limit`` (~24 MB of (key, rank) rows at the 1 M
+    default), each round broadcasts the rank vector into the join on
+    ``_src`` over the stored edges, sums per ``_dst`` where the blocks
+    lie, and joins the node set partition by partition: one broadcast
+    job and no exchange per round.  (Without the explicit broadcast AQE
+    planned a shuffle join and coalesced the ~24 MB contribution
+    exchange to one task, so every round ran single-threaded — round 8.)
+    Past the limit the rank vector is big: the edges are stored
+    partitioned on ``_src`` instead, the contribution join is
+    co-partitioned with the rank vector, and the contributions shuffle
+    once per round.  The width is max(session confs, lake file count),
+    both metadata-only reads; an explicit width also stops AQE from
+    coalescing the stored blocks into a few fat partitions (the r10
+    sf0.1 A/B: 2× slower).  A teleport-floor variant that fuses the left
+    join into the aggregate was measured and rejected in round 8
+    (13.0 s fused vs 10.5 s join form at sf0.1).
+
+    The node universe is src ∪ dst, so source-only nodes keep a rank at
+    the teleport floor and sink-only nodes are ranked too.  The round
+    loop stays in Python and emits SQL text; every ``checkpoint_every``
+    rounds the rank vector is lineage-cut and the next statement starts
+    from the cut, which bounds plan depth on long convergence runs.
 
     ``dangling`` (VERDICT r10 item 4): with the default ``"leak"``,
     sink nodes (no out-edges) contribute nothing forward and their rank
@@ -116,165 +124,140 @@ def pagerank(
     (undirected) inputs, which have no sinks, and kept as the default so
     existing result hashes stay pinned.  ``"redistribute"`` implements
     standard PageRank: each round the dangling nodes' total rank is
-    spread uniformly, ``rank = (1-d)/N + d*(sum contrib + leak/N)``.  The
-    leak is ONE node-bounded semi-join + scalar aggregate per round,
-    folded into the lazy plan as a broadcast 1-row cross join (the same
-    control-plane pattern as the teleport term — no per-round driver
-    job), and its float path is deterministic like the contributions:
-    ranks are rounded/14 and summed as DECIMAL(38,14), the scalar
-    ``leak/N`` is re-rounded/14 in double, so a SQL oracle replays the
-    whole iteration bit-for-bit.
+    spread uniformly, ``rank = (1-d)/N + d*(sum contrib + leak/N)``.
+    The leak is a scalar aggregate over the sink-flagged rank rows,
+    broadcast-cross-joined into the round; its float path is
+    deterministic like the contributions (ranks rounded/14 and summed as
+    DECIMAL(38,14), ``leak/N`` re-rounded/14 in double), so a SQL oracle
+    replays it bit-for-bit.  A redistribute round reads the previous
+    rank vector twice, so each round is its own statement over a lazy
+    cut of the last one — chained, the plan would double per round.
 
-    Output: (node, rank) with rank rounded to 8 digits.
+    Output: (node, rank) with rank rounded to 8 digits.  The stored
+    frames, their views and the cuts are freed when the result is
+    garbage-collected.
     """
     if dangling not in ("leak", "redistribute"):
         raise ValueError(
             f"pagerank: dangling must be 'leak' or 'redistribute', got "
             f"{dangling!r}"
         )
-    # the edge list feeds degree/node prep — cut it once (callers often
-    # hand in a derived/self-joined frame that would otherwise be
-    # recomputed per consumer); lineage_cut, not a bare persist, so the
-    # blocks free on frame GC (the joins.py lesson).  LAZY cuts: the
-    # blocks fill inside the jobs that first need them (e under the
-    # node-count job, e_deg under round 1) instead of costing two extra
-    # build jobs up front
-    e = lineage_cut(
-        edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")),
-        eager=False,
-        serialized=True,  # edge-list-sized: see lineage_cut docstring
+    redistribute = dangling == "redistribute"
+    spark = edges.sparkSession
+    n_parts = max(_session_width(spark), _lake_width(edges))
+    e = transient_persist(
+        edges.selectExpr(f"`{src}` AS _src", f"`{dst}` AS _dst").repartition(
+            n_parts, "_dst"
+        )
     )
-    deg = e.groupBy("_src").agg(F.count("*").alias("_deg"))
-    # full node universe, cut once: rank-vector-sized, the loop's
-    # inherent state; the per-round left join co-partitions with the
-    # groupBy (or broadcasts, when AQE sees a small node set)
-    nodes = lineage_cut(
-        e.select(F.col("_src").alias("node"))
-        .unionAll(e.select(F.col("_dst").alias("node")))
-        .distinct()
+    # the node set carries each node's out-degree (a sink's is 0; NULL is
+    # never one: no rank row joins it)
+    node_set = (
+        e.selectExpr("_src AS node", "1 AS _o")
+        .unionAll(e.selectExpr("_dst AS node", "0 AS _o"))
+        .groupBy("node")
+        .agg(F.sum("_o").alias("_deg"))
     )
-    # control-plane scalar (node count), same pattern as the engine's
-    # other documented driver-side scalars (aggregates.py partition counts)
+    if redistribute:
+        node_set = node_set.selectExpr("*", "node IS NOT NULL AND _deg = 0 AS _sink")
+    nodes = transient_persist(node_set.repartition(n_parts, "node"))
+    # the count fills both stores (the node set reads the stored edges)
     n_nodes = nodes.count()
     if n_nodes == 0:
-        # empty edge list (e.g. an upstream filter dropped everything):
-        # empty rank vector, not a driver-side ZeroDivisionError
-        return nodes.select(
-            "node", F.lit(0.0).alias("rank")
-        ).where(F.lit(False))
-    base = (1.0 - damping) / n_nodes
-    # exact-count-guarded broadcast (see docstring): values identical
-    # either way, only the join's physical side assignment changes
+        # empty edge list: empty rank vector, not a ZeroDivisionError
+        nodes.unpersist()
+        e.unpersist()
+        return nodes.select("node", F.lit(0.0).alias("rank")).where(F.lit(False))
     small_ranks = n_nodes <= broadcast_node_limit
-    # degree is iteration-invariant: attach it to the edges ONCE,
-    # hash-partition on the per-round join key at an EXPLICIT width, and
-    # cut lineage.  The explicit count matters because a bare
-    # repartition("_src") lets AQE coalesce the stored blocks to a
-    # handful of fat partitions (advisory-size targeting) and every
-    # round inherits that under-parallelism — the r10 sf0.1 A/B showed
-    # pagerank3 2× slower with no pre-partition at all (AQE stored the
-    # tiny join output as ~1 block and every round's map stage ran
-    # single-task).  The width is max(session confs, lake metadata):
-    # a production edge frame's own scan width can dominate the session
-    # conf, and halving a corpus-sized frame's parallelism to a conf
-    # value would be the real regression — the r10 form measured that
-    # with a `.rdd` partition-count probe, which physically plans and
-    # EXECUTES the edge build at plan-build time (at sf1 the probe job
-    # cost about as much as the repartition it was sizing); the
-    # file-count read below is metadata-only (jobless — VERDICT r10
-    # nit 2), and under the engine's own lake contract (compaction
-    # targets 128 MB files, catalog.compact_batch) file count ≈ scan
-    # split count.  Derived in-memory frames report no input files and
-    # fall back to the session width.
-    n_parts = max(_session_width(e.sparkSession), _lake_width(edges))
-    e_deg = lineage_cut(
-        e.join(deg, "_src").repartition(n_parts, "_src"),
-        eager=False,
-        serialized=True,  # edge-list-sized
+    stored = [e, nodes]
+    if not small_ranks:
+        e = transient_persist(e.repartition(n_parts, "_src"))
+        stored.append(e)
+    sql = _PagerankSql(
+        temp_view(e), temp_view(nodes), n_nodes, damping, small_ranks,
+        redistribute,
     )
-    redistribute = dangling == "redistribute"
-    if redistribute:
-        # dangling set = nodes with no out-edges; node-bounded and
-        # iteration-invariant, cut once like the node universe
-        dang = lineage_cut(nodes.join(deg, nodes["node"] == deg["_src"], "left_anti"))
-    ranks = nodes.select(
-        "node", F.round(F.lit(1.0 / n_nodes), 12).alias("rank")
+    prev = None
+    first = 1
+    for i in range(1, iterations):
+        if redistribute or i % checkpoint_every == 0:
+            # redistribute: a lazy cut per round (see docstring)
+            cut = lineage_cut(
+                spark.sql(sql.rounds(prev, first, i)), eager=not redistribute
+            )
+            prev = temp_view(cut)
+            stored.append(cut)
+            first = i + 1
+    out = spark.sql(
+        sql.rounds(prev, first, iterations, "SELECT node, round(rank, 8) AS rank")
     )
-    for i in range(1, iterations + 1):
-        rhs = F.broadcast(ranks) if small_ranks else ranks
+    for frame in stored:
+        out = tie_lifetime(out, frame)
+    return out
+
+
+class _PagerankSql:
+    """SQL text of ``pagerank``'s rounds over the stored edge and node
+    views: ``rounds(prev, first, last)`` runs rounds ``first..last`` from
+    the rank view ``prev`` (the uniform start when None) and selects
+    ``r{last}``.  Every float step is the one the oracle replays."""
+
+    def __init__(self, edges, nodes, n_nodes, damping, small, redistribute):
+        self.edges, self.nodes, self.n = edges, nodes, n_nodes
+        self.d = sql_literal(damping)
+        self.base = sql_literal((1.0 - damping) / n_nodes)
+        self.small, self.redistribute = small, redistribute
+        self.keep = ", _deg, _sink" if redistribute else ", _deg"
+
+    def rounds(self, prev, first, last, select=None):
+        ctes = []
+        if prev is None:
+            prev = f"r{first - 1}"
+            ctes.append(
+                f"{prev} AS (SELECT node{self.keep}, "
+                f"round({sql_literal(1.0 / self.n)}, 12) AS rank "
+                f"FROM {self.nodes})"
+            )
+        for i in range(first, last + 1):
+            ctes += self._round(prev, i)
+            prev = f"r{i}"
+        select = select or f"SELECT node{self.keep}, rank"
+        return f"WITH {', '.join(ctes)} {select} FROM {prev}"
+
+    def _round(self, prev, i):
+        # small: broadcast the rank vector over the _dst-partitioned
+        # edges; big: the _src-partitioned edges meet the node-partitioned
+        # rank vector in place.  The node-sized build side of the floor
+        # join is hashed in place either way (never a second broadcast)
+        hint = "BROADCAST(r)" if self.small else "SHUFFLE_HASH(r)"
         contribs = (
-            e_deg.join(rhs, F.col("_src") == F.col("node"))
-            .select(
-                F.col("_dst").alias("node"),
-                F.round(F.col("rank") / F.col("_deg"), 14)
-                .cast("decimal(38,14)")
-                .alias("_c"),
-            )
+            f"c{i} AS (SELECT /*+ {hint} */ e._dst AS node, "
+            f"CAST(round(r.rank / r._deg, 14) AS DECIMAL(38,14)) AS _c "
+            f"FROM {self.edges} e JOIN {prev} r ON e._src = r.node)"
         )
-        if redistribute:
-            # dangling mass this round: exact decimal sum of rounded
-            # ranks over the dangling set, spread as a per-node double
-            # scalar — one 1-row frame broadcast-cross-joined into both
-            # branches below (no per-round driver job; the whole run
-            # stays one lazy DAG)
-            leak = ranks.join(dang, "node", "left_semi").agg(
-                F.coalesce(
-                    F.sum(F.round(F.col("rank"), 14).cast("decimal(38,14)")),
-                    F.lit(0).cast("decimal(38,14)"),
-                ).alias("_leak")
-            )
-            lk = F.round(F.col("_leak").cast("double") / n_nodes, 14)
-            new_ranks = (
-                contribs.groupBy("node")
-                .agg(F.sum("_c").alias("_sc"))
-                .crossJoin(F.broadcast(leak))
-                .select(
-                    "node",
-                    F.round(
-                        base
-                        + damping * (F.col("_sc").cast("double") + lk),
-                        12,
-                    ).alias("rank"),
-                )
-            )
-            floor = F.round(base + damping * lk, 12)
-            ranks = (
-                nodes.join(
-                    F.broadcast(new_ranks) if small_ranks else new_ranks,
-                    "node",
-                    "left",
-                )
-                .crossJoin(F.broadcast(leak))
-                .select("node", F.coalesce("rank", floor).alias("rank"))
-            )
-        else:
-            new_ranks = contribs.groupBy("node").agg(
-                F.round(
-                    base + damping * F.sum("_c").cast("double"), 12
-                ).alias("rank")
-            )
-            # keep contribution-less nodes alive at the teleport floor;
-            # the new rank vector is node-bounded, so the same
-            # exact-count guard broadcasts it — statically, instead of
-            # per-round AQE re-plans
-            ranks = nodes.join(
-                F.broadcast(new_ranks) if small_ranks else new_ranks,
-                "node",
-                "left",
-            ).select(
-                "node",
-                F.coalesce("rank", F.round(F.lit(base), 12)).alias("rank"),
-            )
-        if redistribute and i < iterations:
-            # the redistribute round references the previous rank vector
-            # THREE times (contribs, leak, and the floor's cross join) —
-            # uncut, the chained DAG would re-expand prior rounds
-            # exponentially (the BFS lesson); a lazy per-round cut keeps
-            # each round's vector computed exactly once
-            ranks = lineage_cut(ranks, eager=False)
-        elif i % checkpoint_every == 0 and i < iterations:
-            ranks = lineage_cut(ranks)
-    return ranks.select("node", F.round("rank", 8).alias("rank"))
+        if not self.redistribute:
+            return [
+                contribs,
+                f"a{i} AS (SELECT node, round({self.base} + {self.d} * "
+                f"CAST(sum(_c) AS DOUBLE), 12) AS rank FROM c{i} GROUP BY node)",
+                f"r{i} AS (SELECT /*+ SHUFFLE_HASH(a) */ n.node, n._deg, "
+                f"coalesce(a.rank, round({self.base}, 12)) AS rank "
+                f"FROM {self.nodes} n LEFT JOIN a{i} a ON n.node = a.node)",
+            ]
+        dec = "DECIMAL(38,14)"
+        return [
+            contribs,
+            f"l{i} AS (SELECT round(CAST(coalesce(sum(CAST(round(rank, 14) "
+            f"AS {dec})) FILTER (WHERE _sink), CAST(0 AS {dec})) AS DOUBLE) "
+            f"/ {self.n}, 14) AS lk FROM {prev})",
+            f"a{i} AS (SELECT node, sum(_c) AS _sc FROM c{i} GROUP BY node)",
+            f"r{i} AS (SELECT /*+ SHUFFLE_HASH(a), BROADCAST(l) */ n.node, "
+            f"n._deg, n._sink, coalesce(round({self.base} + {self.d} * "
+            f"(CAST(a._sc AS DOUBLE) + l.lk), 12), "
+            f"round({self.base} + {self.d} * l.lk, 12)) AS rank "
+            f"FROM {self.nodes} n LEFT JOIN a{i} a ON n.node = a.node "
+            f"CROSS JOIN l{i} l)",
+        ]
 
 
 def triangle_stats(
@@ -479,14 +462,12 @@ def bfs_distances(
     """
     # lazy cut: BFS builds one chained DAG with no build-time job (the
     # blocks still materialize once at first action and free on frame GC).
-    # Round-12 (§2.4, the pagerank e_deg pattern): hash-partition the
-    # stored edge blocks on the per-level join key at an explicit width —
-    # localCheckpoint preserves outputPartitioning, so every level's
-    # frontier join co-locates against the stored blocks and only the
-    # (node-bounded) frontier side shuffles; without it each level
-    # re-exchanged the FULL edge list (depth× corpus shuffles).  The
-    # explicit width pins parallelism against AQE's advisory-size
-    # coalescing of the stored blocks, exactly as in pagerank.
+    # Round-12 hash-partitions the stored edge blocks on the per-level
+    # join key at an explicit width, meant to let every level's frontier
+    # join co-locate against them.  A localCheckpoint frame scans with an
+    # unknown partitioning on Spark 4.1, though, so the planner does not
+    # see that layout (tuning.lineage_cut): the keyed repartition keeps
+    # its explicit width against AQE's coalescing but saves no shuffle.
     n_parts = max(_session_width(edges.sparkSession), _lake_width(edges))
     e = lineage_cut(
         edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataengineer_spark.schemas import EVENTS_RAW
+from dataengineer_spark.testdata import events_ts_native
 
 
 def stream_runtime_session(
@@ -109,23 +110,7 @@ def stream_events(
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # stream schemas are mandatory and fixed up-front, so sniff which shape
     # this lake uses before subscribing
-    if "://" in path:
-        from pyspark.errors.exceptions.captured import AnalysisException
-        from pyspark.sql import types as T
-
-        ts_is_native = False
-        try:
-            dt = spark.read.parquet(path).schema["ts"].dataType
-            ts_is_native = isinstance(dt, (T.TimestampType, T.TimestampNTZType))
-        except AnalysisException:
-            pass  # ns file in a vanilla session: read as long below
-    else:
-        import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        ts = ds.dataset(path, format="parquet").schema.field("ts").type
-        ts_is_native = pa.types.is_timestamp(ts) and ts.unit in ("ms", "us")
-
+    ts_is_native = events_ts_native(spark, path)
     schema = EVENTS if ts_is_native else EVENTS_RAW
     reader = spark.readStream.schema(schema).option(
         "maxFilesPerTrigger", max_files_per_trigger

@@ -13,12 +13,16 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataengineer_spark.session import local_cores
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -56,30 +60,80 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # with µs values matching what DuckDB reports for the same file —
         # no session conf needed, so this works in ANY SparkSession,
         # including the correctness driver's.
-        from pyspark.errors.exceptions.captured import AnalysisException
-
         from dataengineer_spark.schemas import EVENTS_RAW
 
+        if not events_ts_native(spark, path):
+            # ns file: explicit long schema, floor to µs
+            df = spark.read.schema(EVENTS_RAW).parquet(path)
+            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        df = _read_parquet(spark, path)
+        if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+            # naive wall clock == DuckDB's naive value; session TZ is
+            # pinned UTC above, so the cast is value-preserving
+            return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        return df
+    return _read_parquet(spark, path)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet read with the schema declared from the footer: Spark's own
+    inference runs a job and ~0.1 s of driver time per read.  A timestamp
+    without a zone declares as TIMESTAMP_NTZ and an INT96 one as
+    TIMESTAMP, as Spark infers them.  A remote (``://``) path, or a footer
+    with a type Spark reads differently (unsigned ints), keeps Spark's
+    inference."""
+    if "://" not in path:
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         try:
-            df = spark.read.parquet(path)
-            dt = df.schema["ts"].dataType
-            if isinstance(dt, T.TimestampType):
-                return df
-            if isinstance(dt, T.TimestampNTZType):
-                # naive wall clock == DuckDB's naive value; session TZ is
-                # pinned UTC above, so the cast is value-preserving
-                return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-            if isinstance(dt, T.LongType):
-                # nanosAsLong session reading an ns file
-                return df.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts div 1000"))
-                )
-        except AnalysisException:
-            pass
-        # vanilla session + ns file: explicit long schema, floor to µs
-        df = spark.read.schema(EVENTS_RAW).parquet(path)
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+            schema = from_arrow_schema(parquet_footer(path), prefer_timestamp_ntz=True)
+        except (TypeError, ValueError, OSError, StopIteration):
+            schema = None
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path)
     return spark.read.parquet(path)
+
+
+def parquet_footer(path: str) -> "pa.Schema":
+    """Arrow schema of a local parquet file, or of the first part file of
+    a directory of parts, read on the driver by pyarrow (no Spark job).
+    INT96 columns — Spark's default timestamp encoding, which pyarrow
+    reports as ns — come back as ``timestamp[us, UTC]``, the type Spark
+    reads them as."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    footer = pq.ParquetFile(next(iter(ds.dataset(path, format="parquet").files)))
+    schema = footer.schema_arrow
+    for i in range(len(footer.schema)):
+        col = footer.schema.column(i)
+        if col.physical_type == "INT96" and col.path in schema.names:
+            schema = schema.set(
+                schema.get_field_index(col.path),
+                pa.field(col.path, pa.timestamp("us", tz="UTC")),
+            )
+    return schema
+
+
+def events_ts_native(spark: SparkSession, path: str) -> bool:
+    """Whether an events table's ``ts`` reads as a Spark timestamp (a ms,
+    µs or INT96 file) rather than needing the ns-long read and a floor to
+    µs — the one precision probe of ``load_table`` and
+    ``streaming.stream_events``.  A local path's footer is read on the
+    driver; a remote (``://``) path keeps a batch-read probe (one job)."""
+    if "://" in path:
+        from pyspark.errors.exceptions.captured import AnalysisException
+
+        try:
+            dt = spark.read.parquet(path).schema["ts"].dataType
+        except AnalysisException:
+            return False  # ns file in a vanilla session
+        return isinstance(dt, (T.TimestampType, T.TimestampNTZType))
+    import pyarrow as pa
+
+    ts = parquet_footer(path).field("ts").type
+    return pa.types.is_timestamp(ts) and ts.unit in ("ms", "us")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -158,6 +158,12 @@ def transient_persist(df: DataFrame) -> DataFrame:
     bare ``.persist()`` has.  Blocks are MEMORY_AND_DISK serialized
     (the corpus-sized-cut rule from the sf10 probe).
 
+    A persisted frame keeps its physical partitioning: its scan reports
+    the cached plan's ``outputPartitioning``, so a frame stored with
+    ``repartition(n, key)`` lets a later aggregate or join on ``key``
+    read the blocks in place, with no exchange.  A ``lineage_cut`` frame
+    does not (its scan reports an unknown partitioning).
+
     Use ``lineage_cut`` instead when the PLAN must actually be
     truncated (iterative algorithms whose chained plans grow per
     round).
@@ -226,10 +232,10 @@ def lineage_cut(
     a ~200 M-row deserialized localCheckpoint block from disk
     (``maybeCacheDiskValuesInMemory`` materializes per-row Java
     objects; GCLocker allocation death), while serialized blocks hold
-    one byte buffer per block and survive.  Values and partitioning
-    are identical; the only cost is a per-scan deserialize of already
-    compact UnsafeRows.  Control-plane-sized cuts (node sets, rank
-    vectors, label tables) keep the faster deserialized default.
+    one byte buffer per block and survive.  Values are identical; the
+    only cost is a per-scan deserialize of already compact UnsafeRows.
+    Control-plane-sized cuts (node sets, rank vectors, label tables)
+    keep the faster deserialized default.
 
     ``localCheckpoint`` stores blocks on executors — fast, zero shared
     storage, and exactly right on local[*] or when the caller can
@@ -239,9 +245,16 @@ def lineage_cut(
     frame becomes unreadable mid-job, so production deployments that
     care set ``spark.sparkContext.setCheckpointDir(hdfs_path)`` once
     and every lineage cut in the engine silently upgrades to the
-    fault-tolerant form.  Semantics (values, partitioning, the frozen
-    ``spark_partition_id`` assignments the percentile/PPS operators
-    rely on) are identical either way.
+    fault-tolerant form.  Values and the frozen ``spark_partition_id``
+    assignments the percentile/PPS operators rely on are identical
+    either way.
+
+    The cut keeps which row sits in which partition, but not the
+    partitioning the planner sees: the cut frame scans with an unknown
+    partitioning (Spark 4.1, eager or lazy, AQE on or off), so a join or
+    aggregate on the key the input was hash-partitioned by shuffles
+    again.  When the planner must see the partitioning, store the frame
+    with :func:`transient_persist` instead.
 
     The reliable branch checkpoints THROUGH a transient cache: a bare
     ``Dataset.checkpoint`` computes the plan once for the action and
@@ -293,12 +306,36 @@ def lineage_cut(
 
 
 def _unpersist_quietly(cached: DataFrame) -> None:
-    """GC finalizer for lineage_cut's lazy-reliable transient cache —
-    the JVM may already be gone at interpreter shutdown."""
+    """GC finalizer for a transient cache (``tie_lifetime``, lineage_cut's
+    lazy-reliable branch): drops the frame's :func:`temp_view`, if it has
+    one, then unpersists — the JVM may already be gone at interpreter
+    shutdown."""
     try:
+        view = getattr(cached, "_graft_view", None)
+        if view is not None:
+            cached.sparkSession.catalog.dropTempView(view)
         cached.unpersist()
     except Exception:
         pass
+
+
+def temp_view(df: DataFrame) -> str:
+    """Register ``df`` as a temp view under a fresh name and return the
+    name, for SQL text that reads a stored frame.
+
+    The view is dropped by the finalizer that :func:`tie_lifetime` sets
+    up for ``df``, so tie ``df`` to the result frame.  Dropping a view
+    uncaches the persisted plan it names, which is why the drop waits
+    for the result's GC: ``spark.sql(text, **frames)`` drops its views
+    as soon as the call returns, and a persisted frame passed that way
+    is recomputed by every consumer of the result.
+    """
+    import uuid
+
+    name = f"_graft_{uuid.uuid4().hex}"
+    df.createOrReplaceTempView(name)
+    df._graft_view = name
+    return name
 
 
 def array_lit(values) -> "Column":

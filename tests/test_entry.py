@@ -83,6 +83,26 @@ class TestContract:
         assert "BroadcastHashJoin" in plan or "BroadcastQueryStage" in plan
 
 
+class TestJoblessBuild:
+    def test_tpch_q5_build_submits_no_job(self, spark, sf_dir, job_group):
+        # six testdata reads, each with its schema declared from the
+        # parquet footer: building the plan runs nothing
+        with job_group() as jobs:
+            entrymod.queries()["q_tpch_q5"](spark, sf_dir)
+        assert jobs == []
+
+    def test_declared_schemas_match_inference(self, spark, sf_dir):
+        import os
+
+        from dataengineer_spark.testdata import TABLES, load_table
+
+        for name in TABLES:
+            if name == "events":  # normalized; see test_events_precision
+                continue
+            inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+            assert load_table(spark, sf_dir, name).schema.json() == inferred.schema.json(), name
+
+
 class TestRegistry:
     def test_query_functions_are_exactly_the_registry(self):
         order = entrymod.QUERY_ORDER

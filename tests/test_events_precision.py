@@ -157,3 +157,28 @@ class TestSessionTranscriptNulls:
         }
         assert got[1]["transcript"] is None and got[1]["n_turns"] == 2
         assert got[2]["transcript"] == "a"
+
+
+@pytest.mark.parametrize("unit,tz", [("us", None), ("ns", None), ("us", "UTC")])
+def test_load_table_reads_the_footer_without_a_job(spark, tmp_path, job_group, unit, tz):
+    # the schema (and the ts precision) come from the parquet footer on
+    # the driver: no inference job, no probing read
+    sf = _write_events(tmp_path, unit, tz)
+    with job_group() as jobs:
+        load_table(spark, sf, "events")
+    assert jobs == []
+
+
+def test_spark_written_events_read_back(spark, tmp_path, job_group):
+    # Spark writes TimestampType as INT96, which pyarrow reports as ns: the
+    # footer must still declare a timestamp, not the ns-long read
+    sf = _write_events(tmp_path, "us", None)
+    src = load_table(spark, sf, "events")
+    out = tmp_path / "lake"
+    os.makedirs(out)
+    src.write.parquet(str(out / "events.parquet"))
+    with job_group() as jobs:
+        back = load_table(spark, str(out), "events")
+    assert jobs == []
+    assert isinstance(back.schema["ts"].dataType, T.TimestampType)
+    assert sorted(back.collect()) == sorted(src.collect())

@@ -388,6 +388,46 @@ class TestDedup:
         )
 
 
+class TestMinhashBuildPy4jBudget:
+    #: py4j calls to build ``minhash_lsh_pairs`` (~750 when the verify
+    #: stage was built with the Column API; ~150 as SQL text)
+    BUDGET = 200
+
+    def test_build_stays_within_budget(self, spark, monkeypatch):
+        import gc
+
+        import py4j.clientserver as cs
+
+        docs = spark.createDataFrame(
+            [(i, f"document number {i % 7} about spark joins") for i in range(20)],
+            "doc_id long, text string",
+        )
+
+        def build():
+            return dedup_ops.minhash_lsh_pairs(
+                docs, "doc_id", "text", num_hashes=32, bands=4, threshold=0.5
+            )
+
+        build()  # fan_out's partition probe is cached per plan
+        calls = []
+        send = cs.ClientServerConnection.send_command
+
+        def counted(conn, command, *args, **kwargs):
+            if not command.startswith("m\n"):  # skip GC'd-object releases
+                calls.append(command)
+            return send(conn, command, *args, **kwargs)
+
+        monkeypatch.setattr(cs.ClientServerConnection, "send_command", counted)
+        gc.collect()
+        out = build()
+        assert calls
+        assert len(calls) <= self.BUDGET, len(calls)
+        monkeypatch.undo()
+        # identical copies pair at 1.0; near copies verify on exact Jaccard
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
+        assert got[(0, 7)] == 1.0 and got[(1, 3)] == 13 / 18
+
+
 class TestSimilarity:
     def test_cosine_matches_math(self, spark):
         df = spark.createDataFrame(
@@ -1136,6 +1176,29 @@ class TestCharShingleHashes:
                 )
                 s = {r["doc_id"]: r["h"] for r in slow.collect()}
             assert f == s, f"portable={portable}: {f} != {s}"
+
+    def test_verify_shingle_set_matches_char_shingles(self, spark):
+        # the verify stage hashes every window and dedups the hashes: the
+        # same set as hashing the distinct shingle strings
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame(
+            [(1, "hello world"), (2, "abc"), (3, ""), (4, "héllo wörld"),
+             (5, None), (6, "aaaaaaaa")],
+            "doc_id long, text string",
+        )
+        fast = df.selectExpr(
+            "doc_id", f"array_sort({dedup_ops._hashed_shingles_sql('`text`', 5)}) AS h"
+        )
+        slow = df.select(
+            "doc_id",
+            F.array_sort(
+                F.transform(
+                    dedup_ops.char_shingles(F.col("text"), 5), lambda x: F.xxhash64(x)
+                )
+            ).alias("h"),
+        )
+        assert sorted(fast.collect()) == sorted(slow.collect())
 
     def test_portable_hash_forms_agree(self, spark):
         # the word fold and the unrolled fixed-length fold under both of
@@ -1945,6 +2008,114 @@ class TestPagerank:
         # 2 receives only 1's floor rank; 3 receives 2's rank
         assert abs(ranks[2] - (base + 0.85 * base)) < 1e-7
         assert ranks[3] > ranks[2] > ranks[1]
+
+    #: NULL endpoints, a duplicate edge, a self-loop, a sink-only node (4)
+    #: and source-only nodes (5, 6)
+    EDGE_CASES = [
+        (1, 2), (1, 2), (2, 3), (3, 1), (3, 3), (2, 4), (None, 1), (5, None),
+        (6, 1),
+    ]
+    #: ranks of EDGE_CASES as the DataFrame-API loop computed them, keyed
+    #: by (dangling, iterations, checkpoint_every); both broadcast paths
+    #: gave the same ranks
+    EDGE_CASE_RANKS = {
+        ("leak", 5, 2): [0.02142857, 0.09779372, 0.11465545, 0.12494059,
+                         0.06678973, 0.02142857, 0.02142857],
+        ("leak", 3, 8): [0.02142857, 0.10035714, 0.10673214, 0.16479018,
+                         0.10407589, 0.02142857, 0.02142857],
+        ("redistribute", 5, 2): [0.03356015, 0.1435393, 0.1615863, 0.1763749,
+                                 0.09780223, 0.03356015, 0.03356015],
+        ("redistribute", 3, 8): [0.03376525, 0.13436356, 0.14813734,
+                                 0.19992879, 0.12781354, 0.03376525,
+                                 0.03376525],
+    }
+
+    @pytest.mark.parametrize("limit", [1_000_000, 0], ids=["broadcast", "shuffle"])
+    @pytest.mark.parametrize(
+        "case", sorted(EDGE_CASE_RANKS), ids=lambda c: "-".join(map(str, c))
+    )
+    def test_edge_case_ranks_are_pinned(self, spark, case, limit):
+        from dataengineer_spark.operators import graph as graph_ops
+
+        dangling, iterations, checkpoint_every = case
+        edges = spark.createDataFrame(self.EDGE_CASES, "src long, dst long")
+        out = graph_ops.pagerank(
+            edges, iterations=iterations, checkpoint_every=checkpoint_every,
+            broadcast_node_limit=limit, dangling=dangling,
+        )
+        assert out.schema.simpleString() == "struct<node:bigint,rank:double>"
+        ranks = dict(tuple(r) for r in out.collect())
+        nodes = [None, 1, 2, 3, 4, 5, 6]
+        assert ranks == dict(zip(nodes, self.EDGE_CASE_RANKS[case]))
+
+    def test_rounds_run_one_broadcast_job_each(self, spark, job_group):
+        from dataengineer_spark.operators import graph as graph_ops
+
+        edges = spark.createDataFrame(
+            [(a, b) for a in range(12) for b in range(12)
+             if a != b and (a + b) % 3 != 0],
+            "src long, dst long",
+        )
+        out = graph_ops.pagerank(edges, iterations=5)
+        with job_group() as jobs:
+            out.write.format("noop").mode("overwrite").save()
+        # five rank-vector broadcasts and the final job
+        assert len(jobs) <= 6, sorted(jobs)
+        # the rounds read the stored edges and nodes where they lie: no
+        # shuffle above the persisted scans, only the broadcasts
+        def walk(node):
+            cls = node.getClass().getSimpleName()
+            yield node.nodeName()
+            if cls == "InMemoryTableScanExec":
+                return  # the stored frame's own plan ran before
+            if cls == "AdaptiveSparkPlanExec":
+                kids = [node.executedPlan()]
+            elif "QueryStage" in cls:
+                kids = [node.plan()]
+            else:
+                seq = node.children()
+                kids = [seq.apply(i) for i in range(seq.size())]
+            for kid in kids:
+                yield from walk(kid)
+
+        names = list(walk(out._jdf.queryExecution().executedPlan()))
+        assert "BroadcastExchange" in names and "InMemoryTableScan" in names
+        assert "Exchange" not in names, names
+
+    @pytest.mark.parametrize(
+        "dangling,checkpoint_every", [("leak", 8), ("leak", 2), ("redistribute", 8)]
+    )
+    def test_stores_and_views_freed_with_result(self, spark, dangling, checkpoint_every):
+        import gc
+
+        from pyspark import StorageLevel
+
+        from dataengineer_spark.operators import graph as graph_ops
+
+        sc = spark.sparkContext
+
+        def state():
+            views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+            return set(sc._jsc.getPersistentRDDs().keys()), views
+
+        before = state()
+        edges = spark.createDataFrame(self.EDGE_CASES, "src long, dst long")
+        out = graph_ops.pagerank(
+            edges, iterations=4, checkpoint_every=checkpoint_every,
+            dangling=dangling,
+        )
+        assert len(out.collect()) == 7
+        tied = [frame for frame, _ in out._graft_ties]
+        assert state()[1] - before[1], "the stored frames are read as views"
+        del out
+        gc.collect()
+        rdds, views = state()
+        assert views == before[1]
+        assert all(f.storageLevel == StorageLevel.NONE for f in tied)
+        if dangling == "leak" and checkpoint_every >= 4:
+            # one statement, no lineage cut: nothing is left for the JVM's
+            # GC to reclaim (a cut's blocks go with the ContextCleaner)
+            assert rdds <= before[0]
 
 
 class TestFuzzyJoin:

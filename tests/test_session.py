@@ -107,3 +107,40 @@ def test_results_invariant_under_width(spark, sf_dir, name):
         spark.conf.set("spark.sql.shuffle.partitions", prior)
     assert rows["2"], name
     assert rows["2"] == rows["8"]
+
+
+def test_pagerank_twins_back_to_back_log_no_error(sf_dir):
+    """The three PageRank twins, run twice over in one session, free their
+    stored frames, views and cuts between calls without an ERROR line in
+    the JVM's log (read from a subprocess's stderr)."""
+    code = (
+        "import gc, sys\n"
+        "from dataengineer_spark.session import build_session\n"
+        "import __spark_entry__ as m\n"
+        "s = build_session('twins', master='local[2]')\n"
+        "names = ('q_graph_pagerank', 'q_graph_pagerank3',"
+        " 'q_graph_pagerank_dangling')\n"
+        "for q in names * 2:\n"
+        "    df = m.queries()[q](s, sys.argv[1])\n"
+        "    assert df.collect()\n"
+        "    del df\n"
+        "    gc.collect()\n"
+        "s.stop()\n"
+    )
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+        "PYTHONPATH": os.pathsep.join(
+            filter(None, [str(ROOT), os.environ.get("PYTHONPATH")])
+        ),
+    }
+    proc = subprocess.run(
+        [sys.executable, "-c", code, sf_dir],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=env,
+        cwd=ROOT,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert [ln for ln in proc.stderr.splitlines() if " ERROR " in ln] == []

@@ -215,9 +215,17 @@ class TestStreamEventsFooter:
             }
         )
 
-    def _source(self, tmp_path, layout: str) -> str:
+    def _source(self, spark, tmp_path, layout: str) -> str:
         import pyarrow.parquet as pq
 
+        if layout == "spark_int96":
+            # Spark writes TimestampType as INT96, which pyarrow reports
+            # as ns; Spark reads it back as a timestamp
+            (tmp_path / "sf").mkdir()
+            pq.write_table(self._frame("ns"), str(tmp_path / "sf" / "events.parquet"))
+            src = str(tmp_path / "spark_dir")
+            load_table(spark, str(tmp_path / "sf"), "events").write.parquet(src)
+            return src
         if layout == "pandas_parts":
             src = tmp_path / "parts"
             src.mkdir()
@@ -229,9 +237,9 @@ class TestStreamEventsFooter:
         pq.write_table(self._frame(layout), path)
         return path
 
-    @pytest.mark.parametrize("layout", ["us", "ns", "pandas_parts"])
+    @pytest.mark.parametrize("layout", ["us", "ns", "pandas_parts", "spark_int96"])
     def test_footer_read_submits_no_job(self, spark, tmp_path, job_group, layout):
-        src = self._source(tmp_path, layout)
+        src = self._source(spark, tmp_path, layout)
         with job_group() as jobs:
             stream = stream_events(spark, src)
         assert jobs == []
