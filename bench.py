@@ -62,8 +62,8 @@ HEADLINE = [
     "q_rank_tfidf",
     "q_rank_bm25",
     "q_e2_semantic_dedup",
-    # hashed scale forms bench; the text/portable-hash twins are the
-    # oracle-verification baselines (pinned result-identical in tests)
+    # hashed scale forms bench; each is oracled directly through the
+    # DuckDB xxhash64 replay (__spark_entry__._duck_xxhash64)
     "q_e2_dup_spans_hashed",
     "q_prep_dsir_hashed",
     "q_dq_funnel",
@@ -145,8 +145,8 @@ HEADLINE = [
     # write-dominated (fresh temp-dir lake per invocation), tracked
     # round-over-round because at deployment their cost IS the pipeline
     # (ingest probes, CDC merge, dead-letter routing, schema evolution)
-    # Arrow-engine scale forms bench (the portable-hash twins are the
-    # oracled verification baselines, ~29x slower on the per-char fold)
+    # Arrow-engine scale forms bench (their portable-family siblings are
+    # the oracled verification baselines, ~29x slower on the per-char fold)
     "q_e2_incremental_neardup_arrow",
     "q_k10_cdc_apply",
     "q_k9_quarantine",

@@ -637,7 +637,7 @@ def _bucketed_gram_pairs(
 # -- SimHash ----------------------------------------------------------------
 
 
-def simhash64(text: str, n_bits: int = 64, portable: bool = False) -> Column:
+def simhash64(text: str, n_bits: int = 64) -> Column:
     """64-bit SimHash of the word set of column ``text``, as bigint.
 
     Per token hash h, bit j contributes +1 if set else −1; the sign of each
@@ -648,32 +648,14 @@ def simhash64(text: str, n_bits: int = 64, portable: bool = False) -> Column:
     still all JVM-side, no UDF. Near-dups share most bits; callers bucket
     on a bit-prefix and verify by Hamming distance.  Built as one parsed
     SQL expression (round-11: Column-API construction cost ~0.36 s of
-    py4j build time per call for the portable family).
-
-    ``portable=True`` derives bit j from the affine family
-    ``((a_j·h + b_j) mod p) mod 2`` over the polynomial word hash instead
-    of ``bit_get(xxhash64(w), j)`` — a valid SimHash bit family that a
-    SQL oracle can replicate exactly (the poly hash's ~20 bits of range
-    are too few to index directly).
+    py4j build time per call).  The token hash is ``xxhash64(w)``.
     """
     words = f"split(regexp_replace(`{text}`, '^\\\\s+|\\\\s+$', ''), '\\\\s+')"
-    if portable:
-        params = _affine_params(n_bits, seed=7)
-        a_arr = sql_literal([a for a, _ in params])
-        b_arr = sql_literal([b for _, b in params])
-        hashes = f"transform({words}, w -> {_poly_hash_sql('w')})"
-        bits_of = (
-            f"transform(sequence(0, {n_bits - 1}), j -> "
-            f"CAST((pmod(element_at({a_arr}, j + 1) * h "
-            f"+ element_at({b_arr}, j + 1), {_MERSENNE}) "
-            "% 2 * 2 - 1) AS INT))"
-        )
-    else:
-        hashes = f"transform({words}, w -> xxhash64(w))"
-        bits_of = (
-            f"transform(sequence(0, {n_bits - 1}), "
-            "j -> bit_get(h, j) * 2 - 1)"
-        )
+    hashes = f"transform({words}, w -> xxhash64(w))"
+    bits_of = (
+        f"transform(sequence(0, {n_bits - 1}), "
+        "j -> bit_get(h, j) * 2 - 1)"
+    )
     counts = (
         f"aggregate({hashes}, array_repeat(0, {n_bits}), "
         f"(acc, h) -> zip_with(acc, {bits_of}, (a, b) -> a + b))"
@@ -702,7 +684,6 @@ def simhash_neardup_pairs(
     text_col: str,
     max_hamming: int = 3,
     prefix_bits: int = 16,
-    portable: bool = False,
 ) -> DataFrame:
     """SimHash near-dup: bucket on the top ``prefix_bits`` of the
 
@@ -717,7 +698,7 @@ def simhash_neardup_pairs(
     """
     with_fp = lineage_cut(
         df.select(
-            F.col(id_col), simhash64(text_col, portable=portable).alias("_fp")
+            F.col(id_col), simhash64(text_col).alias("_fp")
         )
         # referenced by both self-join sides: cutting this 24-byte/row
         # projection computes the 64-bit-sum fingerprint pass once, not
@@ -925,42 +906,24 @@ def positioned_shingles(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = True,
 ) -> DataFrame:
     """(id, p, sh) rows: the word ``k``-shingle starting at 1-based token
 
-    position ``p`` of every document. ``hashed=True`` (the scale default)
-    keys shingles by a 64-bit hash so the downstream shuffle carries 8
-    bytes instead of ~k words; ``hashed=False`` keeps the text (the
-    oracle-portable form — pytest pins both produce identical spans).
+    position ``p`` of every document, keyed by a 64-bit hash so the
+    downstream shuffle carries 8 bytes instead of ~k words.
 
-    The hashed path hashes each WORD once (n ``xxhash64`` calls), then
+    It hashes each WORD once (n ``xxhash64`` calls), then
     keys every shingle by ``xxhash64`` over its k word-hashes — eight
     long lookups per position instead of ``concat_ws`` materializing a
     k-word string per position, measured 1.45× faster end-to-end on
     ``dup_spans`` (the shingle transform is an interpreted HOF, so its
-    per-element allocation cost IS the map-stage runtime). Key space is
-    the same 64 bits; span outputs are hash-family-invariant.
+    per-element allocation cost IS the map-stage runtime). Span outputs
+    are hash-family-invariant: keying shingles by their text gives the
+    same spans (the ``q_e2_dup_spans_hashed`` oracle does).
     """
     from dataengineer_spark.operators.textops import trim_ws
 
     words = F.split(trim_ws(F.lower(F.col(text_col))), r"\s+")
-    if not hashed:
-        n = F.size(words)
-        pos_sh = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - F.lit(k - 1)),
-                lambda i: F.struct(
-                    i.cast("bigint").alias("p"),
-                    F.concat_ws(" ", F.slice(words, i, k)).alias("sh"),
-                ),
-            ),
-        ).otherwise(F.lit(None).cast("array<struct<p:bigint,sh:string>>"))
-        return df.select(
-            F.col(id_col).alias("id"), F.explode(pos_sh).alias("ps")
-        ).select("id", F.col("ps.p").alias("p"), F.col("ps.sh").alias("sh"))
-
     # word-hash array materialized in its own projection: it is referenced
     # k times per position, so CollapseProject keeps it un-inlined and each
     # word is hashed exactly once
@@ -993,7 +956,6 @@ def dup_spans(
     min_docs: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hashed: bool = True,
 ) -> DataFrame:
     """Substring-level duplicate detection (the span analogue of exact-
 
@@ -1006,8 +968,8 @@ def dup_spans(
     documents) is the substring-dedup recipe for boilerplate.
 
     Scale shape: shingling is map-only; duplicated-shingle detection is
-    one shuffle on the shingle key (8-byte hash by default — the text
-    never shuffles); the join back is an equi-join on the same key (AQE
+    one shuffle on the shingle key (an 8-byte hash — the text never
+    shuffles); the join back is an equi-join on the same key (AQE
     broadcasts it when the duplicated set is small); span merging is a
     per-document window over hit positions only. No all-pairs stage at
     any size. The reference has no substring-level operator; this extends
@@ -1015,7 +977,7 @@ def dup_spans(
     """
     from pyspark.sql import Window as W
 
-    sh = positioned_shingles(df, k, text_col, id_col, hashed)
+    sh = positioned_shingles(df, k, text_col, id_col)
     dup_keys = (
         sh.groupBy("sh")
         .agg(F.count_distinct("id").alias("_nd"))

@@ -485,12 +485,12 @@ def _poly_hash_sql(s_sql: str) -> str:
 
     The ``split``-array input is LOAD-BEARING, not an accident: the
     HOF's input expression is evaluated ONCE per row, so ``s_sql`` may
-    be an arbitrarily complex expression (doc_fingerprint passes a
-    regex-normalized string).  A position-``sequence`` fold that
-    captures ``s_sql`` in its lambda re-evaluates the whole expression
-    per CHARACTER — Catalyst inlines the capture — which turned
-    doc_fingerprint into a regex pass per char, O(len²)
-    (q_e4_fingerprint_portable 6→21 s at sf0.1 before this was caught).
+    be an arbitrarily complex expression (a regex-normalized string, say).
+    A position-``sequence`` fold that captures ``s_sql`` in its lambda
+    re-evaluates the whole expression per CHARACTER — Catalyst inlines
+    the capture — which turned a regex-normalized document hash into a
+    regex pass per char, O(len²) (6→21 s at sf0.1 before this was
+    caught).
     For known-length, cheap inputs use :func:`_poly_unrolled_sql`.
     """
     return (
@@ -535,7 +535,6 @@ def dsir_importance(
     buckets: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable_hash: bool = False,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
 
@@ -568,8 +567,9 @@ def dsir_importance(
         )
         .where(F.length("w") > 0)
     )
-    h = F.expr(_poly_hash_sql("`w`")) if portable_hash else F.xxhash64("w")
-    tok = tok.select("id", "_t", F.pmod(h, F.lit(buckets)).alias("b"))
+    tok = tok.select(
+        "id", "_t", F.pmod(F.xxhash64("w"), F.lit(buckets)).alias("b")
+    )
 
     per_db = tok.groupBy("id", "b").agg(F.count("*").alias("cnt"))
     raw = tok.groupBy("b").agg(F.count("*").alias("cr"))

@@ -347,7 +347,6 @@ def cross_source_dup_matrix(
     df: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    hashed: bool = True,
 ) -> DataFrame:
     """Provenance-overlap matrix: for every pair of sources, how many
 
@@ -357,20 +356,20 @@ def cross_source_dup_matrix(
     (source, content-key) distinct (map-side combined), one self-equi-
     join ON THE CONTENT KEY (bounded by per-content source fan-out,
     never source²·docs), one count aggregate over <= |sources|² keys.
-    ``hashed=True`` (default) joins on xxhash64 of the text so the
-    shuffle ships 8-byte keys — the scale path; ``hashed=False`` joins
-    the raw text, which a SQL oracle can replay exactly.
+    The join key is xxhash64 of the text, so the shuffle ships 8-byte
+    keys; the counts equal a raw-text join's (up to a 2⁻⁶⁴ collision).
 
     Output: (source_a, source_b, n_shared) with source_a < source_b,
     only pairs that share at least one content. NULL contents are
-    excluded in BOTH modes (xxhash64(NULL) is the seed constant — a
-    valid join key — so without the filter the hashed path would count
-    every NULL-bearing source pair as sharing a phantom document).
+    excluded (xxhash64(NULL) is the seed constant — a valid join key —
+    so without the filter every NULL-bearing source pair would count as
+    sharing a phantom document).
     """
-    key = F.xxhash64(text_col) if hashed else F.col(text_col)
     per = (
         df.where(F.col(text_col).isNotNull())
-        .select(F.col(group_col).alias("_src"), key.alias("_k"))
+        .select(
+            F.col(group_col).alias("_src"), F.xxhash64(text_col).alias("_k")
+        )
         .dropDuplicates()
     )
     a = per.select(F.col("_src").alias("source_a"), "_k")

@@ -132,60 +132,31 @@ def quality_score(text: Column | str) -> Column:
     )
 
 
-def doc_fingerprint(text: str, portable: bool = False) -> Column:
-    """Whole-document stable fingerprint of column ``text``: the hash of
-    its whitespace-collapsed, lower-cased, trimmed form (xxhash64 by
-    default, the engine-portable polynomial hash with ``portable=True``
-    so a SQL oracle can reproduce it).  One parsed SQL expression; the
-    portable fold walks a ``split`` array, so the regex normalization
-    runs once per row (see ``preparation._poly_hash_sql``)."""
-    from dataengineer_spark.operators.preparation import _poly_hash_sql
-
+def doc_fingerprint(text: str) -> Column:
+    """Whole-document stable fingerprint of column ``text``: the
+    ``xxhash64`` of its whitespace-collapsed, lower-cased, trimmed form.
+    One parsed SQL expression."""
     normalized = f"trim(lower(regexp_replace(`{text}`, '\\\\s+', ' ')))"
-    if portable:
-        return F.expr(_poly_hash_sql(normalized))
     return F.expr(f"xxhash64({normalized})")
 
 
-def winnowed_fingerprints(
-    text: str, n: int = 8, keep: int = 4, portable: bool = False
-) -> Column:
+def winnowed_fingerprints(text: str, n: int = 8, keep: int = 4) -> Column:
     """Rolling-hash document fingerprint set of column ``text``: hash
-    every distinct char n-gram, keep the ``keep`` smallest hashes (a
-    winnowing sketch) — array<bigint>.  Two documents sharing any
-    fingerprint are copy-candidates.  ``portable=True`` swaps the
-    polynomial char hash for SQL-oracle reproducibility (xxhash64 stays
-    the scale default).
+    every distinct char n-gram with ``xxhash64``, keep the ``keep``
+    smallest hashes (a winnowing sketch) — array<bigint>.  Two documents
+    sharing any fingerprint are copy-candidates.
 
-    Every shingle is exactly ``n`` chars except the single short-text
-    shingle, so the portable form takes the unrolled fixed-length fold
-    (reading the lambda variable per char) on the fast path and the
-    generic fold on the rare short one.  Positional hashing à la
-    ``dedup._shingle_hashes_sql`` is NOT usable here: winnowing keeps
-    the k smallest hash VALUES with duplicates, so dedup must happen on
-    the shingle STRINGS.
+    Positional hashing à la ``dedup._shingle_hashes_sql`` is NOT usable
+    here: winnowing keeps the k smallest hash VALUES with duplicates, so
+    dedup must happen on the shingle STRINGS.
     """
-    from dataengineer_spark.operators.preparation import (
-        _poly_hash_sql, _poly_unrolled_sql,
-    )
-
     t = f"`{text}`"
     shingles = (
         f"array_distinct(transform(sequence(1, greatest(length({t}) - {n - 1}, "
         f"1)), i -> substr({t}, i, {n})))"
     )
-    if portable:
-        fixed = _poly_unrolled_sql(
-            lambda j: f"CAST(ascii(substr(s, {j + 1}, 1)) AS BIGINT)", n
-        )
-        hash_s = (
-            f"CASE WHEN length(s) = {n} THEN {fixed} "
-            f"ELSE {_poly_hash_sql('s')} END"
-        )
-    else:
-        hash_s = "xxhash64(s)"
     return F.expr(
-        f"slice(array_sort(transform({shingles}, s -> {hash_s})), 1, {keep})"
+        f"slice(array_sort(transform({shingles}, s -> xxhash64(s))), 1, {keep})"
     )
 
 

@@ -18,8 +18,8 @@ Stage contract (all deterministic, so the pipeline is oracle-checkable):
 
 A near-dup removal stage (MinHash pairs → anti-join the higher id of
 each pair) can be inserted after (3); it is kept out of the default
-composition because LSH banding is not SQL-expressible and would demote
-the whole pipeline to a rows-only check (SURVEY.md §5.2.2).
+composition, and the near-dup chain is oracled on its own
+(``q_e2_neardup_dedup``).
 """
 
 from __future__ import annotations

@@ -103,7 +103,122 @@ class TestJoblessBuild:
             assert load_table(spark, sf_dir, name).schema.json() == inferred.schema.json(), name
 
 
+class TestDuckXxhash64:
+    """``_duck_xxhash64`` is Spark's ``xxhash64`` of a string, in DuckDB."""
+
+    @staticmethod
+    def _strings():
+        # per UTF-8 byte length 0..130: ASCII, and a mix of 1- to 4-byte
+        # characters (é 2, € 3, 😀 4) that fills exactly that many bytes —
+        # every tail shape past the 4-, 8- and 32-byte boundaries
+        out = []
+        for n in range(131):
+            out.append("".join(chr(97 + i % 26) for i in range(n)))
+            mixed, left, i = "", n, 0
+            while left:
+                ch = "a😀é€\t"[i % 5]
+                if len(ch.encode()) > left:
+                    ch = "z"
+                mixed += ch
+                left -= len(ch.encode())
+                i += 1
+            out.append(mixed)
+        return out
+
+    def test_matches_reference_hash(self):
+        import duckdb
+
+        from perfbench.oracle import xxhash64
+
+        strings = self._strings()
+        con = duckdb.connect()
+        con.execute("CREATE TABLE t(s VARCHAR)")
+        con.executemany("INSERT INTO t VALUES (?)", [[x] for x in strings + [None]])
+        got = con.sql(f"SELECT s, {entrymod._duck_xxhash64('s')} FROM t").fetchall()
+        assert len(got) == len(strings) + 1
+        for text, h in got:
+            want = 42 if text is None else xxhash64(text.encode())
+            assert h == want, (text, len((text or "").encode()))
+
+    def test_matches_spark_on_documents(self, spark, sf_dir):
+        import os
+
+        import duckdb
+        from pyspark.sql import functions as F
+
+        from dataengineer_spark.testdata import load_table
+
+        docs = load_table(spark, sf_dir, "documents")
+        want = dict(docs.select("doc_id", F.xxhash64("text")).collect())
+        path = os.path.join(sf_dir, "documents.parquet")
+        got = dict(
+            duckdb.sql(
+                f"SELECT doc_id, {entrymod._duck_xxhash64('text')} "
+                f"FROM '{path}'"
+            ).fetchall()
+        )
+        assert len(got) == len(want) > 0
+        assert got == want
+
+
 class TestRegistry:
+    def test_minhash_neardup_stays_rows_only(self):
+        # perfbench's text_dedup check uses the seeded pair count only for
+        # a query without an oracle_sql() entry (perfbench/workloads.py
+        # query_op): an oracle here would change the benchmark's check and
+        # make its planted-pair corruption test pass a wrong count.  The
+        # query's xxhash64 family is replayed by the oracles of
+        # q_e2_neardup_dedup and q_prep_decontaminate instead.
+        from perfbench import workloads
+
+        oracles = entrymod.oracle_sql()
+        assert "q_e2_minhash_neardup" not in oracles
+        assert "q_e2_minhash_portable" in oracles
+        assert {"q_e2_neardup_dedup", "q_prep_decontaminate"} <= set(oracles)
+        assert 'name == "q_e2_minhash_neardup"' in inspect.getsource(
+            workloads.query_op
+        )
+
+    def test_oracles_call_only_duckdb_functions(self, sf_dir):
+        # the driver's replay defines views only (tools/check_oracle.py
+        # duck_connection): an oracle may not call a function registered
+        # elsewhere, such as perfbench's Python ``spark_xxhash64``
+        from tools.check_oracle import duck_connection
+
+        registered = re.findall(
+            r'create_function\(\s*"(\w+)"',
+            (ROOT / "perfbench" / "oracle.py").read_text(),
+        )
+        assert "spark_xxhash64" in registered
+        con = duck_connection(sf_dir)
+        known = {
+            r[0].lower()
+            for r in con.sql(
+                "SELECT function_name FROM duckdb_functions() UNION "
+                "SELECT keyword_name FROM duckdb_keywords()"
+            ).fetchall()
+        } | {  # window functions are not listed by duckdb_functions()
+            "row_number", "rank", "dense_rank", "percent_rank", "cume_dist",
+            "ntile", "lag", "lead", "first_value", "last_value", "nth_value",
+        }
+        unknown = {}
+        for name, text in entrymod.oracle_sql().items():
+            assert not any(f in text for f in registered), name
+            text = re.sub(r"'(?:[^']|'')*'", "''", text)
+            text = re.sub(r"--[^\n]*", "", text)
+            # CTE names ``x AS (`` / ``x(a, b) AS (`` and aliases ``AS x(``
+            local = {
+                n.lower()
+                for n in re.findall(
+                    r"\b(\w+)\s*(?:\([\w\s,]*\))?\s+AS\s+(?:MATERIALIZED\s+)?\(",
+                    text, re.I,
+                ) + re.findall(r"\bAS\s+(\w+)\s*\(", text, re.I)
+            }
+            for call in re.findall(r"\b([A-Za-z_]\w*)\s*\(", text):
+                if call.lower() not in known | local:
+                    unknown.setdefault(call, []).append(name)
+        assert not unknown, unknown
+
     def test_query_functions_are_exactly_the_registry(self):
         order = entrymod.QUERY_ORDER
         assert len(order) == len(set(order)), "duplicate names in QUERY_ORDER"
@@ -142,8 +257,9 @@ class TestRegistry:
         # the portable hash family has one builder per engine: the fold
         # text (``acc * 31 + x``) lives only in the DuckDB ``_duck_poly``
         # and the two Spark SQL builders in preparation.py, and the
-        # affine MinHash parameters are expanded only by ``_duck_minhash``
-        # (SimHash's seed-7 bit family is the one other use)
+        # affine MinHash parameters are expanded only by ``_duck_minhash``;
+        # the DuckDB xxhash64 replay (its 128-bit words) lives only in
+        # ``_duck_xxhash64``
         fold = re.compile(r"\*\s*31\s*\+")
 
         def folds(node):
@@ -159,9 +275,14 @@ class TestRegistry:
 
         entry_py = ROOT / "__spark_entry__.py"
         assert _sites(entry_py, folds) == {"_duck_poly"}
-        assert _sites(entry_py, affine_calls) == {
-            "_duck_minhash", "_simhash_portable_oracle",
-        }
+        assert _sites(entry_py, affine_calls) == {"_duck_minhash"}
+
+        def wide_words(node):
+            return isinstance(node, ast.Constant) and isinstance(
+                node.value, str
+            ) and "UHUGEINT" in node.value
+
+        assert _sites(entry_py, wide_words) == {"_duck_xxhash64"}
 
         def spark_folds(node):
             # SQL text, or Python arithmetic ``x * 31`` (the UDF side)

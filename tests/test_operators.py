@@ -547,9 +547,6 @@ class TestTextOps:
 
     def test_fingerprint_stability(self, spark):
         import re
-        from functools import reduce
-
-        from dataengineer_spark.operators.preparation import _POLY_MOD
 
         texts = [
             "Some  Text", "some text", "\tLeading and trailing \n",
@@ -562,13 +559,10 @@ class TestTextOps:
             for r in df.select(
                 "id",
                 textops.doc_fingerprint("t").alias("fx"),
-                textops.doc_fingerprint("t", portable=True).alias("fp"),
                 textops.winnowed_fingerprints("t").alias("wx"),
-                textops.winnowed_fingerprints("t", portable=True).alias("wp"),
             ).collect()
         }
         assert got[0]["fx"] == got[1]["fx"]  # normalization: case + whitespace
-        assert got[0]["fp"] == got[1]["fp"]
 
         # Python-normalized references: Java regex \s, then lower, then
         # trim (spaces only); winnowing reads the RAW text's char 8-grams
@@ -577,9 +571,6 @@ class TestTextOps:
 
         def grams(t):
             return {t[i:i + 8] for i in range(max(len(t) - 7, 1))}
-
-        def poly(t):
-            return reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, t, 0)
 
         strs = {norm(t) for t in texts if t is not None}
         strs |= {g for t in texts if t is not None for g in grams(t)}
@@ -591,16 +582,11 @@ class TestTextOps:
         )
         for i, t in enumerate(texts):
             if t is None:
-                want = (xx[None], None, [xx[None]], [None])
+                want = (xx[None], [xx[None]])
             else:
-                want = (
-                    xx[norm(t)],
-                    poly(norm(t)),
-                    sorted(xx[g] for g in grams(t))[:4],
-                    sorted(poly(g) for g in grams(t))[:4],
-                )
+                want = (xx[norm(t)], sorted(xx[g] for g in grams(t))[:4])
             r = got[i]
-            assert (r["fx"], r["fp"], r["wx"], r["wp"]) == want, (t, r, want)
+            assert (r["fx"], r["wx"]) == want, (t, r, want)
 
 
 class TestEvents:
@@ -1211,7 +1197,7 @@ class TestCharShingleHashes:
 
         from pyspark.sql import functions as F
         from dataengineer_spark.operators.preparation import (
-            _POLY_MOD, _poly_hash_sql,
+            _POLY_MOD, _poly_hash_sql, _poly_unrolled_sql,
         )
 
         texts = ["hello", "", None, "héllo wörld", "a", "x" * 25,
@@ -1230,9 +1216,10 @@ class TestCharShingleHashes:
             cps = F.expr(
                 dedup_ops._shingle_hashes_from_cps_sql("`s`", "`_cps`", n)
             )[0]
-            sub = textops.winnowed_fingerprints(
-                "s", n=n, keep=1, portable=True
-            )[0]
+            sub = _poly_unrolled_sql(
+                lambda j: f"CAST(ascii(substr(t, {j + 1}, 1)) AS BIGINT)", n
+            )
+            sub = F.expr(f"transform(array(`s`), t -> {sub})")[0]
             return F.when(F.length("s") == n, F.array(cps, sub))
 
         rows = df.select(
@@ -5129,12 +5116,8 @@ class TestSqlExprTwins:
 
     def test_simhash_matches_python_reference(self, spark):
         import re
-        from functools import reduce
 
-        from dataengineer_spark.operators.dedup import (
-            _MERSENNE, _affine_params, simhash64,
-        )
-        from dataengineer_spark.operators.preparation import _POLY_MOD
+        from dataengineer_spark.operators.dedup import simhash64
 
         rows = [
             (i, f"the quick brown fox {i} jumps\tover  lazy dog {i * 7 % 13}")
@@ -5153,27 +5136,13 @@ class TestSqlExprTwins:
             .select("w", F.xxhash64("w"))
             .collect()
         )
-        params = _affine_params(64, seed=7)
-
-        def poly(w):
-            return reduce(lambda acc, ch: (acc * 31 + ord(ch)) % _POLY_MOD, w, 0)
-
-        def bits(w, portable):
-            if portable:
-                h = poly(w)
-                return [((a * h + b) % _MERSENNE) % 2 * 2 - 1 for a, b in params]
-            return [((xx[w] >> j) & 1) * 2 - 1 for j in range(64)]
-
-        def simhash(ts, portable):
+        def simhash(ts):
             counts = [0] * 64
             for w in ts:
-                counts = [c + b for c, b in zip(counts, bits(w, portable))]
+                bits = [((xx[w] >> j) & 1) * 2 - 1 for j in range(64)]
+                counts = [c + b for c, b in zip(counts, bits)]
             low = sum(1 << j for j in range(63) if counts[j] > 0)
             return low - (1 << 63) if counts[63] > 0 else low
 
-        for portable in (True, False):
-            got = dict(
-                df.select("id", simhash64("t", portable=portable)).collect()
-            )
-            want = {i: simhash(ts, portable) for i, ts in tokens.items()}
-            assert got == want, f"portable={portable}"
+        got = dict(df.select("id", simhash64("t")).collect())
+        assert got == {i: simhash(ts) for i, ts in tokens.items()}

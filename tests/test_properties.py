@@ -902,9 +902,8 @@ class TestPortablePolyParity:
             _shingle_hashes_from_cps_sql,
         )
         from dataengineer_spark.operators.preparation import (
-            _POLY_MOD, _poly_hash_sql,
+            _POLY_MOD, _poly_hash_sql, _poly_unrolled_sql,
         )
-        from dataengineer_spark.operators.textops import winnowed_fingerprints
 
         rows = [(i, t) for i, t in enumerate(texts)]
         df = spark.createDataFrame(rows, "id long, s string").select(
@@ -913,9 +912,10 @@ class TestPortablePolyParity:
                 "transform(split(`s`, ''), x -> CAST(ascii(x) AS BIGINT))"
             ).alias("_cps"),
         )
-        # a text of exactly n chars is its own single n-shingle, so both
-        # production callers return [unrolled fold of the whole text];
-        # one unrolled expression per distinct length present
+        # a text of exactly n chars is its own single n-shingle, so the
+        # staged-codepoint caller returns [unrolled fold of the whole
+        # text]; the unrolled fold also reads a lambda variable per char.
+        # One unrolled expression per distinct length present
         lengths = sorted({len(t) for t in texts})
         cps = F.coalesce(*[
             F.when(
@@ -924,12 +924,14 @@ class TestPortablePolyParity:
             )
             for n in lengths
         ])
-        substr = F.coalesce(*[
-            F.when(
-                F.length("s") == n,
-                winnowed_fingerprints("s", n=n, keep=1, portable=True)[0],
+        def substr_fold(n):
+            fold = _poly_unrolled_sql(
+                lambda j: f"CAST(ascii(substr(t, {j + 1}, 1)) AS BIGINT)", n
             )
-            for n in lengths
+            return F.expr(f"transform(array(`s`), t -> {fold})")[0]
+
+        substr = F.coalesce(*[
+            F.when(F.length("s") == n, substr_fold(n)) for n in lengths
         ])
         out = df.select(
             "id",

@@ -170,14 +170,40 @@ def test_dup_spans_boilerplate_and_merge(spark):
 
 
 def test_dup_spans_hashed_matches_text_keys(spark, sf_dir):
+    # the xxhash64-keyed spans equal spans keyed by the shingle text,
+    # computed here in Python (Java regex \s: split and trim)
+    import re
+    from collections import defaultdict
+
     from dataengineer_spark.operators.dedup import dup_spans
     from dataengineer_spark.testdata import load_table
 
+    k = 3  # low k so the random-vocab corpus has organic duplicate shingles
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # lower k so the random-vocab corpus has organic duplicate shingles
-    a = sorted(map(tuple, dup_spans(docs, k=3, hashed=True).collect()))
-    b = sorted(map(tuple, dup_spans(docs, k=3, hashed=False).collect()))
-    assert a == b and len(a) > 0
+    got = sorted(map(tuple, dup_spans(docs, k=k).collect()))
+
+    ws = "[ \t\n\x0b\f\r]+"
+    shingles = {}
+    for doc_id, text in docs.collect():
+        words = re.split(ws, re.sub(f"^{ws}|{ws}$", "", text.lower()))
+        shingles[doc_id] = [
+            (p + 1, " ".join(words[p:p + k])) for p in range(len(words) - k + 1)
+        ]
+    docs_of = defaultdict(set)
+    for doc_id, sh in shingles.items():
+        for _, s in sh:
+            docs_of[s].add(doc_id)
+    want = []
+    for doc_id, sh in shingles.items():
+        hits = sorted(p for p, s in sh if len(docs_of[s]) >= 2)
+        islands = []
+        for p in hits:
+            if islands and p - islands[-1][-1] <= k:
+                islands[-1].append(p)
+            else:
+                islands.append([p])
+        want += [(doc_id, i[0], i[-1] + k - 1, i[-1] + k - i[0]) for i in islands]
+    assert got == sorted(want) and len(got) > 0
 
 
 def test_dsir_importance_prefers_target_style(spark):
@@ -192,15 +218,12 @@ def test_dsir_importance_prefers_target_style(spark):
     rows.append((100, "xx", "the cat sat on the mat"))
     rows.append((101, "xx", "der hund lief durch den wald"))
     df = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    for portable in (False, True):
-        out = {
-            r["doc_id"]: r["dsir_logratio"]
-            for r in dsir_importance(
-                df, F.col("lang") == "en", buckets=32, portable_hash=portable
-            ).collect()
-        }
-        assert out[100] > out[101]  # target-style doc scores higher
-        assert out[100] > 0 > out[101]
+    out = {
+        r["doc_id"]: r["dsir_logratio"]
+        for r in dsir_importance(df, F.col("lang") == "en", buckets=32).collect()
+    }
+    assert out[100] > out[101]  # target-style doc scores higher
+    assert out[100] > 0 > out[101]
 
 
 def test_funnel_report_ordered_rules(spark):
@@ -429,12 +452,11 @@ class TestCrossSourceDupMatrix:
             ],
             "source string, text string",
         )
-        for hashed in (False, True):
-            got = {
-                (r["source_a"], r["source_b"]): r["n_shared"]
-                for r in cross_source_dup_matrix(df, hashed=hashed).collect()
-            }
-            assert got == {("a", "b"): 1, ("b", "c"): 1}
+        got = {
+            (r["source_a"], r["source_b"]): r["n_shared"]
+            for r in cross_source_dup_matrix(df).collect()
+        }
+        assert got == {("a", "b"): 1, ("b", "c"): 1}
 
 
 class TestCrossSourceNullText:
@@ -447,13 +469,13 @@ class TestCrossSourceNullText:
             [("a", None), ("b", None), ("a", "real"), ("b", "real")],
             "source string, text string",
         )
-        for hashed in (False, True):
-            got = {
-                (r["source_a"], r["source_b"]): r["n_shared"]
-                for r in cross_source_dup_matrix(df, hashed=hashed).collect()
-            }
-            # only the real shared doc counts; NULLs are never a match
-            assert got == {("a", "b"): 1}
+        got = {
+            (r["source_a"], r["source_b"]): r["n_shared"]
+            for r in cross_source_dup_matrix(df).collect()
+        }
+        # only the real shared doc counts; NULLs are never a match, though
+        # xxhash64(NULL) is the seed constant
+        assert got == {("a", "b"): 1}
 
 
 class TestContainmentPairs:

@@ -23,13 +23,12 @@ REPRESENTATIVE = [
     "q_f6_format_date",  # timestamp formatting → session timezone
     "q_tpch_q1",         # decimal-accumulated aggregate
     "q_pipeline_dx_group",  # flagship end-to-end
-    # round-4 fronted oracled twins: literal codebooks / portable hash
+    # round-4 fronted oracled twins: literal codebooks / replayed hash
     # families must not depend on engine session confs (VERDICT r3 item 8)
-    "q_e2_simhash_portable",
-    "q_e2_neardup_dedup_portable",
+    "q_e2_simhash_neardup",
+    "q_e2_neardup_dedup",
     "q_e2_semantic_dedup",
-    "q_e4_fingerprint_portable",
-    "q_prep_decontaminate_portable",
+    "q_prep_decontaminate",
     # round-4b additions: sketch/layout/ANN/stream families with literal
     # codebooks, timestamp sentinels, or streaming runs
     "q_e5_cms_topk",
