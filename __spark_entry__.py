@@ -398,7 +398,9 @@ def _duck_minhash(
     distinct shingle once into ``{name}_u(s, h)`` (``h`` the raw
     xxhash64).  The xxhash64 family's Spark band key is ``xxhash64`` of
     the same tuple text, which pairs the same documents up to a 2⁻⁶⁴
-    collision, so both families join on the text."""
+    collision, so both families join on the text.  ``{name}_sigs`` is
+    materialized: the band selects and any self-join of ``name`` would
+    otherwise re-run the signature aggregate once each."""
     from dataengineer_spark.operators.dedup import _MERSENNE, _affine_params
 
     mins = ",\n    ".join(
@@ -415,12 +417,10 @@ def _duck_minhash(
         for b in range(bands)
     )
     if family == "portable":
-        hashed, sigs = f"""{name}_h AS (
+        hashed = f"""{name}_h AS (
   SELECT {keys}, {_duck_poly("s")} AS h FROM {name}_sh
-)""", "AS"
+)"""
     else:
-        # the band selects read the signatures once per band
-        sigs = "AS MATERIALIZED"
         distinct = _duck_xxhash64_cte(f"{name}_u", "s", f"{name}_sh")
         hashed = f"""{distinct}, {name}_h AS (
   SELECT {keys}, (u.h % {_MERSENNE} + {_MERSENNE}) % {_MERSENNE} AS h
@@ -428,7 +428,7 @@ def _duck_minhash(
 )"""
     return f"""{name}_sh AS (
   SELECT {keys}, unnest({_duck_shingles(5)}) AS s FROM {src}
-), {hashed}, {name}_sigs {sigs} (
+), {hashed}, {name}_sigs AS MATERIALIZED (
   SELECT {keys}, {mins}
   FROM {name}_h GROUP BY {keys}
 ), {name} AS (

@@ -19,6 +19,13 @@ the whole pipeline graph. Defaults are tuned so the same code is correct on
 - Arrow on: every pandas UDF / ``toPandas`` boundary is columnar-batched.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (which is UTC-naive) and are deployment-independent.
+- Python workers run under the engine daemon, ``dataengineer_spark.pyworker``
+  (``spark.python.daemon.module``).  Before CPython 3.13 PySpark's
+  per-task ``importlib.invalidate_caches()`` re-read every zip archive on
+  the worker's path (``pyspark.zip``, py4j, the ``spark-core`` jar):
+  ~170–230 ms of fixed cost per Python task.  The daemon re-reads an
+  archive only when its stat changed.  ``dataengineer_spark`` must then
+  import on the workers, as the engine's pandas UDFs already require.
 """
 
 from __future__ import annotations
@@ -52,6 +59,9 @@ _DEFAULTS: dict[str, str] = {
     # DuckDB reports for the same files (FIXTURES.md precision warning)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.ui.enabled": "false",
+    # Python workers fork from the engine's daemon (pyworker.py), which
+    # stops each task re-reading every zip archive on the worker's path
+    "spark.python.daemon.module": "dataengineer_spark.pyworker",
     # local[N] puts driver and executors in ONE JVM whose default heap is
     # 1g — far too small next to the 64MB broadcast threshold once a long
     # session accumulates broadcast refs (a 70-query bench loop OOMed the
